@@ -53,10 +53,15 @@ import org.apache.spark.storage.StorageLevel
   * query and a chunked CDF read).
   *
   * Lifecycle: [[release]] drops a barrier frame that later rounds of an
-  * iterative loop no longer reference — a no-op for checkpoint forms
-  * (their blocks are reclaimed by GC/ContextCleaner), an `unpersist`
-  * for `diskPersist` (whose cache-manager entries would otherwise
-  * accumulate one per round for the life of the session).
+  * iterative loop no longer reference — an `unpersist` for
+  * `diskPersist` (whose cache-manager entries would otherwise
+  * accumulate one per round for the life of the session), and a no-op
+  * for the checkpoint forms. `localCheckpoint` blocks are reclaimed by
+  * the ContextCleaner once the frame is garbage-collected. Reliable
+  * `checkpoint` files are NOT: the ContextCleaner deletes them only
+  * when `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+  * (default false), so otherwise every round's files stay in the
+  * checkpoint dir until the caller removes them.
   */
 object Barrier {
   val ConfKey = "spark.graft.barrier"

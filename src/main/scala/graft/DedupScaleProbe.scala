@@ -36,7 +36,6 @@ object DedupScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "96g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

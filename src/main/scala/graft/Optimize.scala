@@ -20,14 +20,7 @@ import graft.sources.{IO, ZOrder}
   */
 object Optimize {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-optimize")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = etl.CliArgs.session()
     try run(spark, args)
     finally spark.stop()
   }

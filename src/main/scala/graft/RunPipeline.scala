@@ -34,14 +34,7 @@ object RunPipeline {
             "(list values comma-separated, e.g. train_dates=a,b)")
       }
     }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = etl.CliArgs.session()
     try run(spark, args(0), args(1), args(2), overrides)
     finally spark.stop()
   }

@@ -31,8 +31,8 @@ object Tables {
   /** Inferred StructType per parquet path — METADATA only, never data
     * or results. A bare-path `spark.read.parquet` re-runs footer schema
     * inference on every DataFrame construction (~100 ms measured at
-    * sf0.1, `ReadResolveProbe`: 100 ms/read inferred vs 24 ms/read with
-    * an explicit schema); the harness surface constructs ~171 table
+    * sf0.1: 100 ms/read inferred vs 24 ms/read with an explicit schema,
+    * OPTIMIZATION_r17.md); the harness surface constructs ~171 table
     * reads per pass, so the re-inference alone cost ~50 s per 4-pass
     * bench run. Production tables carry their schema in a catalog and
     * never pay this; caching the first inference per path is the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * reference's explicit schemas for the sirene/effectif/perimeter
   * files — join_datasets.py:117-152), and write ORC by default.
   */
-private[etl] object CliArgs {
+private[graft] object CliArgs {
   def parse(args: Array[String]): Map[String, String] = {
     val out = scala.collection.mutable.Map.empty[String, String]
     var i = 0
@@ -29,6 +29,9 @@ private[etl] object CliArgs {
     out.toMap
   }
 
+  /** The session every production CLI runs on (the two twins below,
+    * `graft.RunPipeline` and `graft.Optimize`): master and shuffle
+    * partitions from the environment, UTC session time zone. */
   def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))

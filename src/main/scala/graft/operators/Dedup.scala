@@ -486,11 +486,14 @@ object Dedup {
       val merged = labels.join(neighborMin, Seq("id"), "left")
         .barrier()
       changed = merged.filter(col("nlabel") < col("label")).count()
-      if (changed > 0) {
+      if (changed == 0) {
+        // the loop exits with labels still reading the PREVIOUS frame,
+        // which therefore stays live; this round's frame is dead
+        // (release is a no-op except under diskPersist)
+        graft.Barrier.release(merged)
+      } else {
         // labels moves onto this round's frame below, so the previous
-        // round's barrier is dead (no-op except under diskPersist);
-        // on changed == 0 the loop exits with labels still reading the
-        // PREVIOUS frame, which therefore stays live
+        // round's barrier is dead
         graft.Barrier.release(prevRound)
         prevRound = merged
         // cheap projection over the checkpointed round — O(1) plan
@@ -522,6 +525,9 @@ object Dedup {
         }
       }
     }
+    // every round's frame is materialized past the edge join, so the
+    // result no longer reads the edge barrier either
+    graft.Barrier.release(edges)
     lastComponentRounds = rounds
     labels.select(col("id").as(idCol), col("label").as("cluster_id"))
   }

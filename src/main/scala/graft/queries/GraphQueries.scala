@@ -139,8 +139,9 @@ object GraphQueries {
   /** The g4/g7 hash-sparsified co-supply edge set (shared derivation;
     * the queries composed identical inline copies before r17-opt).
     *
-    * Optimization shape, driven by the TriProbe stage timings (guide
-    * §1.1: measure, then attack the measured stage):
+    * Optimization shape, driven by the noop-sink stage timings recorded
+    * in OPTIMIZATION_r17.md (guide §1.1: measure, then attack the
+    * measured stage):
     *  - the old plan deduped STRING pairs (~8.7M pair-per-shared-part
     *    rows at sf0.1 through the distinct exchange as two ~7-char
     *    strings) and only then hashed the ~0.5M survivors. Probe:
@@ -173,10 +174,11 @@ object GraphQueries {
       // grouping columns), hashing all ~8.7M pair-per-shared-part rows
       // instead of the ~0.5M distinct pairs — measured 6.5 s of pure
       // expression work at sf0.1, the dominant stage of the old plan
-      // (TriProbe; the same pushdown silently applied to the original
-      // string-distinct shape too). The checkpoint is 16 bytes/row and
-      // also stops triangleCounts' canonical-edge materialization from
-      // re-deriving the whole join lineage a second time.
+      // (OPTIMIZATION_r17.md; the same pushdown silently applied to the
+      // original string-distinct shape too). The checkpoint is 16
+      // bytes/row and also stops triangleCounts' canonical-edge
+      // materialization from re-deriving the whole join lineage a
+      // second time.
       .barrier()
       .select(
         least(concat(lit("s"), col("ka")), concat(lit("s"), col("kb")))

@@ -595,28 +595,6 @@ object SnapshotTable {
     spark.conf.getOption("spark.graft.manifest.segmentEntries")
       .map(_.toInt).getOrElse(512)
 
-  /** The segment format [[writeSegments]] will use under the current
-    * session confs. `auto` now picks TEXT at every granularity: r16
-    * measured the r15 midpoint AND re-measured the 51,200 endpoint
-    * (three same-session SegReadProbe runs, 2M entries) — direct text
-    * reads beat the parquet Group reader 1.5-3x at 5,120, 20,480 and
-    * 51,200 entries/segment alike (B 0.18/0.23/0.30-0.35 s vs D
-    * 0.50/0.35/0.45-0.66 s). r15's "parquet 4-6x at 51,200" endpoint
-    * did not reproduce; its recorded 2.9-18 s text spread already
-    * marked that window as contended, and the r16 per-5120 arm the
-    * VERDICT asked for settles the default: the auto-pick constant is
-    * GONE rather than re-tuned, because no measured granularity
-    * favors parquet on this rig. `segmentFormat=parquet` remains the
-    * explicit opt-in where its real advantages live off-rig: half the
-    * bytes at rest (136 vs 280 MB per 2M entries) where object-store
-    * egress dominates cold reads. */
-  private[graft] def segmentFormatIsParquet(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.manifest.segmentFormat")
-      .getOrElse("auto") match {
-        case "parquet" => true
-        case _ => false
-      }
-
   /** Process-level cache of immutable segment files (uuid-named, so a
     * path can never be reused with different content). Bounded by
     * ESTIMATED RETAINED BYTES (sum of line lengths), like
@@ -659,27 +637,38 @@ object SnapshotTable {
     }
   }
 
+  /** Name suffix of the retired parquet segment format. A manifest
+    * that references one is refused by [[readSegmentLines]]; [[vacuum]]
+    * still reclaims orphaned ones. */
+  private val ParquetSegSuffix = ".entriesp"
+
+  /** The non-empty lines of a text segment or bloom sidecar, read
+    * directly through the FileSystem API — used from the driver and
+    * from task closures alike, so no read pays a Spark job or a
+    * file-source scan. */
+  private[graft] def readSegmentLines(fs: FileSystem,
+      p: Path): Seq[String] = {
+    if (p.getName.endsWith(ParquetSegSuffix))
+      throw new IllegalStateException(s"manifest segment $p is in the " +
+        "parquet segment format, which is no longer readable")
+    val in = fs.open(p)
+    try {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](65536)
+      var n = in.read(buf)
+      while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
+      new String(bytes.toByteArray, "UTF-8").split("\n").toSeq
+        .map(_.trim).filter(_.nonEmpty)
+    } finally in.close()
+  }
+
   private[graft] def segEntries(fs: FileSystem, path: String,
       rel: String): Seq[String] = {
     val key = new Path(path, rel).toString
     val hit = segCache.get(key)
     if (hit != null) hit
     else {
-      // columnar segments read their ONE projected line column through
-      // the parquet Group reader — still a direct driver read, no job
-      val lines = if (SegmentCodec.isParquetSeg(rel))
-        SegmentCodec.readLines(new Path(path, rel), fs.getConf)
-      else {
-      val in = fs.open(new Path(path, rel))
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-      } finally in.close()
-      }
+      val lines = readSegmentLines(fs, new Path(path, rel))
       val est = lines.iterator.map(_.length.toLong + 40L).sum
       if (segCacheBytes.addAndGet(est) > (256L << 20)) {
         segCache.clear()
@@ -944,15 +933,7 @@ object SnapshotTable {
     val hit = bloomSideCache.get(key)
     if (hit != null) hit
     else {
-      val in = fs.open(new Path(path, rel))
-      val lines = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](65536)
-        var n = in.read(buf)
-        while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-      } finally in.close()
+      val lines = readSegmentLines(fs, new Path(path, rel))
       val m = lines.map(l => entryPath(l) -> entryBloomStats(l)).toMap
       val est = m.valuesIterator
         .map(_.valuesIterator.map(_._3.length.toLong + 64L).sum + 64L).sum
@@ -1079,30 +1060,10 @@ object SnapshotTable {
       val blItems = writeBloomSidecar(fs, path, perFile)
       val lines =
         if (blItems.isEmpty) group else group.map(stripAllBloomItems)
-      // segment format: AUTO-PICKED by measured granularity crossover
-      // (`spark.graft.manifest.segmentFormat` = text | parquet | auto,
-      // default auto). The r14/r15 SegReadProbe A/B measured BOTH
-      // regimes on this rig (2M entries, same-day arms): at the
-      // default 512-entry granularity direct task-side TEXT reads are
-      // ~18x faster than parquet (0.17-0.22 s vs 3.1-3.7 s — per-file
-      // parquet footer/reader-init dominates, and object stores pay
-      // 2-3 ranged GETs per parquet file vs one for text); at
-      // 51,200-entry granularity PARQUET wins ~4-6x (0.50-0.76 s vs
-      // ~2.9 s best text — column projection + page compression
-      // amortize once files are MBs). Auto picks parquet at/above the
-      // geometric midpoint of the measured endpoints (~5k entries);
-      // either explicit value pins the format (SegmentCodec parquet
-      // stays the typed, user-queryable metadata-table shape).
-      val parquetSeg = segmentFormatIsParquet(spark)
-      val rel = s"_graft_log/seg-${UUID.randomUUID()}" +
-        (if (parquetSeg) SegmentCodec.Extension else ".entries")
-      if (parquetSeg)
-        SegmentCodec.write(new Path(path, rel), lines, fs.getConf)
-      else {
-        val out = fs.create(new Path(path, rel), false)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
+      val rel = s"_graft_log/seg-${UUID.randomUUID()}.entries"
+      val out = fs.create(new Path(path, rel), false)
+      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally out.close()
       (Seq(s"$SegPrefix$rel\t${segAggItems(lines)}") ++ blItems)
         .mkString(";")
     }.toSeq
@@ -1803,9 +1764,9 @@ object SnapshotTable {
     // per-file rename + footer harvest, BOUNDED-PARALLEL: the loop is
     // pure per-file metadata work (rename, one footer open, one stat
     // RPC), but run sequentially it serializes the driver at ~12-14 ms
-    // per staged file on this rig (StageScaleProbe: 0.65 s at 16 files
-    // -> 3.6-6.3 s at 256) — at a 10k-file production commit that is
-    // minutes of driver wall (guide §5 / §7.3 commit-protocol frames).
+    // per staged file on this rig (0.45-0.66 s at 16 files -> 3.6-6.3 s
+    // at 256, OPTIMIZATION_r17.md) — at a 10k-file production commit
+    // that is minutes of driver wall (guide §5 / §7.3 commit-protocol frames).
     // Future.sequence preserves the sorted-part ORDER of the staged
     // entries exactly (the segmentation clustering contract above),
     // and the first failure rethrows from Await as before; Hadoop
@@ -2692,7 +2653,7 @@ object SnapshotTable {
     // removeKeys ride the same single rewrite: a removed key is
     // matched (so its file rewrites) but never re-inserted. A key in
     // BOTH sets upserts — updates win over removals.
-    // localCheckpoint: the distinct key set feeds THREE consumers
+    // pinned barrier: the distinct key set feeds THREE consumers
     // (range agg, level-2 semi-join, survivor anti-join) — without it
     // each one would re-scan and re-shuffle the update set, which at
     // CDC scale is the dominant repeated cost of a merge.
@@ -3446,20 +3407,22 @@ object SnapshotTable {
     * ([[diffEntrySides]]) keeping each driver compare churn-sized.
     * Ranges longer than `spark.graft.changeFeed.maxPlanVersions`
     * (default 64) are planned in CHUNKS: each chunk's union subtree is
-    * pinned to its computed rows via an EAGER localCheckpoint, so the
+    * pinned to its computed rows via an EAGER [[graft.Barrier]], so the
     * driver's live plan is O(chunk) whatever the range — a year of
     * 10-minute commits (~50k versions) would otherwise analyze a
     * 50k-leaf union before the first task launched. Above the
-    * threshold the call therefore EXECUTES chunk jobs eagerly and the
-    * checkpointed rows live in executor storage (memory-then-disk,
-    * non-reliable — an executor loss fails the read; re-run it); for
-    * open-ended CDC consumption prefer the streaming source, which
-    * paces itself with `maxVersionsPerTrigger` and checkpoints
-    * durable offsets instead.
+    * threshold the call therefore EXECUTES chunk jobs eagerly, and
+    * where the chunk rows live follows `spark.graft.barrier`'s
+    * resolution: executor storage under the default `localCheckpoint`
+    * (an executor loss fails the read; re-run it), the checkpoint dir
+    * under `checkpoint` (the default once a checkpoint dir is set), a
+    * DISK_ONLY cache under `diskPersist`. For open-ended CDC
+    * consumption prefer the streaming source, which paces itself with
+    * `maxVersionsPerTrigger` and checkpoints durable offsets instead.
     *
     * `spark.graft.changeFeed.materializePath` (r17): when set,
     * completed chunks SPILL TO PARQUET under a fresh subdirectory of
-    * that path instead of localCheckpoint — the rows live on
+    * that path instead of going through the barrier — the rows live on
     * (reliable) storage, so a long-range CDF read survives executor
     * loss: losing a worker re-reads parquet instead of failing the
     * whole call. The subdirectory is this call's alone (UUID-named);
@@ -3515,7 +3478,8 @@ object SnapshotTable {
       "spark.graft.changeFeed.maxPlanVersions must be >= 1")
     val lazyWhole = (toV - fromVersion + 1) <= chunkSize
     // chunk pinning: reliable parquet spill when the caller named a
-    // materialize path, executor-memory localCheckpoint otherwise
+    // materialize path, otherwise the barrier `spark.graft.barrier`
+    // resolves to
     val matDir = spark.conf
       .getOption("spark.graft.changeFeed.materializePath")
       .filter(_.nonEmpty)
@@ -4155,15 +4119,13 @@ object SnapshotTable {
         // DIRECT task-side reads, not a file-source scan: each task
         // opens its segment files through the FileSystem API, parses
         // with the zero-alloc scanner, and evaluates in place. The
-        // SegReadProbe A/B (NOTES r14) measured the previous
+        // r14 read-shape A/B (NOTES_ROUND.md) measured the previous
         // wholetext file-source shape at ~7 s for a 2M-entry listing
         // against ~0.2 s for this one — listing-scan setup, row
         // encoders and per-file planning dominated, not bytes or
         // parse. Bloom sidecars load INSIDE the task for its own
         // segments (a segment has at most one sidecar), replacing the
         // old join stage; range-only predicates never touch them.
-        // Columnar segments ride the same job through their verbatim
-        // line column.
         val p2l: Map[String, String] = schema.toSeq
           .flatMap(_.fields.map(f => physName(f) -> f.name)).toMap
         val cpSer = cp
@@ -4178,10 +4140,13 @@ object SnapshotTable {
           .mapPartitions(_.flatMap { case (segPath, sidePath) =>
             val side: Map[String, Map[String, (Int, Int, Array[Byte])]] =
               if (sidePath == null) Map.empty
-              else SegmentCodec.readAnyLines(
-                  new Path(sidePath), conf.value)
-                .map(l => entryPath(l) -> entryBloomStats(l)).toMap
-            SegmentCodec.readAnyLines(new Path(segPath), conf.value)
+              else {
+                val sp = new Path(sidePath)
+                readSegmentLines(sp.getFileSystem(conf.value), sp)
+                  .map(l => entryPath(l) -> entryBloomStats(l)).toMap
+              }
+            val seg = new Path(segPath)
+            readSegmentLines(seg.getFileSystem(conf.value), seg)
               .iterator.filter { line =>
                 val (num, str, bl, nu) = parseEntryStats(line)
                 val blAll =
@@ -5139,7 +5104,7 @@ object SnapshotTable {
     * length/mtime, exact row count, and deletion-vector footprint
     * (`dv_positions` = masked rows, exact for v2 blob refs, null when
     * any legacy v1 ref hides the cardinality). Built DISTRIBUTED:
-    * segment refs resolve in tasks ([[SegmentCodec.readAnyLines]]),
+    * segment refs resolve in tasks ([[readSegmentLines]]),
     * so a million-file table's metadata scan never materializes on
     * the driver — the manifest tier is just more data. Invariant the
     * graded query pins: `sum(rows) - sum(dv_positions)` per partition
@@ -5166,8 +5131,10 @@ object SnapshotTable {
         spark.sparkContext.parallelize(segPaths,
             math.max(1, math.min(segPaths.size,
               spark.sparkContext.defaultParallelism * 2)))
-          .flatMap(p =>
-            SegmentCodec.readAnyLines(new Path(p), conf.value)))
+          .flatMap { p =>
+            val seg = new Path(p)
+            readSegmentLines(seg.getFileSystem(conf.value), seg)
+          })
     entries.map { e =>
       val rel = entryPath(e)
       val fm = entryFileMeta(e)
@@ -5597,7 +5564,7 @@ object SnapshotTable {
       .filter { f =>
         val n = f.getPath.getName
         (n.startsWith("seg-") &&
-          (n.endsWith(".entries") || n.endsWith(SegmentCodec.Extension) ||
+          (n.endsWith(".entries") || n.endsWith(ParquetSegSuffix) ||
             n.endsWith(".blooms"))) ||
         // ObjectStoreLogStore staging orphans (writer died between
         // upload and publish) — invisible to readers, reclaimed here

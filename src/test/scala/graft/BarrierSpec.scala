@@ -125,6 +125,33 @@ class BarrierSpec extends SparkSpec {
     }
   }
 
+  test("connected components under diskPersist: one call leaves only " +
+      "the frame its result reads in the persistent RDDs") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    withMode(Some("diskPersist")) {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      // ids unlike graphResults' so no frame cached by an earlier test
+      // has the same plan (the cache manager matches plans by result)
+      val cc = graft.operators.Dedup.connectedComponents(
+        Seq(11L, 12L, 13L, 14L, 15L, 16L).toDF("doc_id"), "doc_id",
+        Seq((11L, 12L), (12L, 13L), (14L, 15L)).toDF("i", "j"))
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        Set((11L, 11L), (12L, 11L), (13L, 11L), (14L, 14L), (15L, 14L),
+          (16L, 16L)))
+      // pointer jumping joins the last round with itself, so the one
+      // live frame can appear twice in the plan
+      val read = cc.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder
+      }.distinctBy(_.cachedColumnBuffers.id)
+      assert(read.size === 1, "the result must read one cached frame")
+      assert(added === Set(read.head.cachedColumnBuffers.id),
+        s"leaked frames: ${added - read.head.cachedColumnBuffers.id}")
+      read.head.clearCache()
+    }
+  }
+
   test("unknown mode fails loudly") {
     withMode(Some("ramCache")) {
       val e = intercept[IllegalArgumentException] {

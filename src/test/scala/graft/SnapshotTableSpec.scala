@@ -2396,34 +2396,6 @@ class SnapshotTableSpec extends SparkSpec {
       === (0L until 40L).toArray)
   }
 
-  test("segment format: auto is text at every granularity (r16 " +
-      "re-measurement); parquet stays an explicit opt-in") {
-    def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-      try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-      finally pairs.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    // r16 probed the r15 midpoint (5,120) AND re-measured the 51,200
-    // endpoint three times in one session: direct text beat parquet
-    // 1.5-3x everywhere, so the granularity heuristic is GONE — auto
-    // means text even where r15's contended-window numbers once said
-    // parquet
-    assert(!SnapshotTable.segmentFormatIsParquet(spark))
-    withConfs("spark.graft.manifest.segmentEntries" -> "51200") {
-      assert(!SnapshotTable.segmentFormatIsParquet(spark))
-    }
-    withConfs("spark.graft.manifest.segmentEntries" -> "4096") {
-      assert(!SnapshotTable.segmentFormatIsParquet(spark))
-    }
-    // explicit formats still pin it in both directions
-    withConfs("spark.graft.manifest.segmentFormat" -> "parquet") {
-      assert(SnapshotTable.segmentFormatIsParquet(spark))
-    }
-    withConfs("spark.graft.manifest.segmentFormat" -> "text",
-        "spark.graft.manifest.segmentEntries" -> "51200") {
-      assert(!SnapshotTable.segmentFormatIsParquet(spark))
-    }
-  }
-
   test("SQL DML: CREATE TABLE USING graft reads columnar; INSERT " +
       "INTO/OVERWRITE commit through the manifest; pinned writes refuse") {
     val path = freshPath("sqlddl")
@@ -3344,133 +3316,114 @@ class SnapshotTableSpec extends SparkSpec {
         col("id") >= 100L && col("id") < 500L, // range: prunes segments
         col("grp") === "g3", // string equality: unprunable here
         col("id") < 0L) // empty result
-      def parity(pr: org.apache.spark.sql.Column): (Int, Int) = {
-        val (d1, k1, t1) = SnapshotTable.readWherePruned(spark, path, pr)
+      def parity(p: String, pr: org.apache.spark.sql.Column): (Int, Int) = {
+        val (d1, k1, t1) = SnapshotTable.readWherePruned(spark, p, pr)
         val r1 = d1.collect().map(_.toString).sorted.toSeq
         spark.conf.set(
           "spark.graft.manifest.distributedPlanning.minFiles", "1")
         val (d2, k2, t2) =
-          try SnapshotTable.readWherePruned(spark, path, pr)
+          try SnapshotTable.readWherePruned(spark, p, pr)
           finally spark.conf.unset(
             "spark.graft.manifest.distributedPlanning.minFiles")
         assert((k2, t2) === ((k1, t1)),
-          s"distributed planning diverged on $pr: kept $k2/$t2 vs $k1/$t1")
+          s"distributed planning diverged on $pr at $p: " +
+            s"kept $k2/$t2 vs $k1/$t1")
         assert(d2.collect().map(_.toString).sorted.toSeq === r1)
         (k1, t1)
       }
-      preds.foreach(parity)
+      preds.foreach(parity(path, _))
       // bloom SIDECARS join the distributed job: a hash-layout point
       // lookup prunes identically to the driver path's sidecar probe
       val path2 = freshPath("distplanbloom")
       SnapshotTable.create(rows.repartition(16, col("id")), path2)
       SnapshotTable.indexBloom(spark, path2, Seq("id"))
-      def parity2(pr: org.apache.spark.sql.Column): (Int, Int) = {
-        val (d1, k1, t1) = SnapshotTable.readWherePruned(spark, path2, pr)
-        val r1 = d1.collect().map(_.toString).sorted.toSeq
-        spark.conf.set(
-          "spark.graft.manifest.distributedPlanning.minFiles", "1")
-        val (d2, k2, t2) =
-          try SnapshotTable.readWherePruned(spark, path2, pr)
-          finally spark.conf.unset(
-            "spark.graft.manifest.distributedPlanning.minFiles")
-        assert((k2, t2) === ((k1, t1)),
-          s"distributed+bloom diverged on $pr: kept $k2/$t2 vs $k1/$t1")
-        assert(d2.collect().map(_.toString).sorted.toSeq === r1)
-        (k1, t1)
-      }
-      val (keptB, totalB) = parity2(col("id") === 1234L)
+      val (keptB, totalB) = parity(path2, col("id") === 1234L)
       assert(keptB * 4 < totalB,
         s"distributed bloom pruning ineffective: kept $keptB of $totalB")
-    } finally spark.conf.unset("spark.graft.manifest.segmentEntries")
-  }
-
-  test("columnar segments: parquet-encoded manifests plan and commit " +
-      "identically, mixed with legacy text segments") {
-    import graft.sources.SegmentCodec
-    val path = freshPath("colseg")
-    spark.conf.set("spark.graft.manifest.segmentEntries", "4")
-    try {
-      val rows = (0L until 2000L).map(i => (i, s"g${i % 5}", i * 3))
-        .toDF("id", "grp", "score")
-      // v0 in the default text format; v1 appended with the columnar
-      // opt-in — one manifest referencing BOTH formats
-      SnapshotTable.create(rows.filter(col("id") < 1000L)
-        .repartitionByRange(8, col("id"))
-        .sortWithinPartitions(col("id")), path)
-      spark.conf.set("spark.graft.manifest.segmentFormat", "parquet")
-      SnapshotTable.append(rows.filter(col("id") >= 1000L)
-        .repartitionByRange(8, col("id"))
-        .sortWithinPartitions(col("id")), path)
-      val fs = new org.apache.hadoop.fs.Path(path)
+      // a two-version manifest: the append's fresh segments sit beside
+      // the create's, which it references verbatim
+      val path3 = freshPath("distplanappend")
+      def clustered(lo: Long, hi: Long) =
+        rows.filter(col("id") >= lo && col("id") < hi)
+          .repartitionByRange(8, col("id")).sortWithinPartitions(col("id"))
+      SnapshotTable.create(clustered(0L, 1000L), path3)
+      SnapshotTable.append(clustered(1000L, 2000L), path3)
+      val fs = new org.apache.hadoop.fs.Path(path3)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def segRels(v: Int): Seq[String] = {
         val in = fs.open(new org.apache.hadoop.fs.Path(
-          path + f"/_graft_log/v$v%08d.manifest"))
+          path3 + f"/_graft_log/v$v%08d.manifest"))
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
           .filter(_.startsWith("@seg=")).map(_.drop(5).split("\t")(0))
           .toList
         finally in.close()
       }
-      val rels = segRels(1)
-      assert(rels.exists(_.endsWith(".entries")) &&
-        rels.exists(r => SegmentCodec.isParquetSeg(r)),
-        s"expected a mixed-format manifest, got $rels")
-      // text refs pass through VERBATIM under the columnar default —
-      // cross-format reuse, no rewrite of old metadata
-      assert(segRels(0).toSet.subsetOf(rels.toSet),
-        "append rewrote the legacy text segments")
-      // reads + counters agree across driver and distributed planning
-      // on the mixed manifest
-      def prune(pr: org.apache.spark.sql.Column): (Seq[String], Int, Int) = {
-        val (d, k, t) = SnapshotTable.readWherePruned(spark, path, pr)
-        (d.collect().map(_.toString).sorted.toSeq, k, t)
-      }
-      for (pr <- Seq(col("id") >= 300L && col("id") < 1400L,
-          col("grp") === "g2", col("id") < 0L)) {
-        val (r1, k1, t1) = prune(pr)
-        spark.conf.set(
-          "spark.graft.manifest.distributedPlanning.minFiles", "1")
-        val (r2, k2, t2) =
-          try prune(pr)
-          finally spark.conf.unset(
-            "spark.graft.manifest.distributedPlanning.minFiles")
-        assert((k2, t2) === ((k1, t1)),
-          s"mixed-format planning diverged on $pr: $k2/$t2 vs $k1/$t1")
-        assert(r2 === r1)
-      }
-      // range pruning still refutes whole segments from the list line
+      assert(segRels(0).nonEmpty &&
+        segRels(0).toSet.subsetOf(segRels(1).toSet),
+        "append rewrote the create's segments")
+      val straddle = col("id") >= 300L && col("id") < 1400L
+      Seq(straddle, col("grp") === "g2", col("id") < 0L)
+        .foreach(parity(path3, _))
+      // range pruning refutes whole segments from the list line
       val (_, keptR, totalR) = SnapshotTable.readWherePruned(spark,
-        path, col("id") >= 1900L)
+        path3, col("id") >= 1900L)
       assert(keptR < totalR / 4,
-        s"columnar segments lost list-level pruning: $keptR/$totalR")
-      // the columnar segment doubles as a user-readable metadata
-      // table: plain spark.read.parquet sees rel + typed stat columns
-      val pq = rels.filter(SegmentCodec.isParquetSeg)
-      val meta = spark.read.parquet(
-        pq.map(r => path + "/" + r): _*)
-      assert(meta.count() === 8)
-      assert(meta.columns.contains("rel") &&
-        meta.columns.contains("num_col"))
-      val one = meta.selectExpr("rel", "num_lo[0]", "num_hi[0]",
-        "line").head()
-      assert(one.getString(0).startsWith("files/"))
-      assert(one.getLong(2) >= one.getLong(1))
-      assert(one.getString(3).startsWith(one.getString(0)),
-        "verbatim line column must round-trip the entry")
-      // a DELETE that touches both formats: straddling segments of
-      // each format rewrite (as columnar), the rest reuse; results
-      // stay exact
-      SnapshotTable.delete(spark, path, col("id") % 2 === 1L)
-      assert(SnapshotTable.read(spark, path).count() === 1000)
-      assert(SnapshotTable.readWhere(spark, path, col("id") < 10L)
+        s"segments lost list-level pruning: $keptR/$totalR")
+      // a DELETE across segments: straddling segments rewrite, the
+      // rest reuse; results stay exact and both planners still agree
+      SnapshotTable.delete(spark, path3, col("id") % 2 === 1L)
+      assert(SnapshotTable.read(spark, path3).count() === 1000)
+      assert(SnapshotTable.readWhere(spark, path3, col("id") < 10L)
         .collect().map(_.getLong(0)).sorted.toSeq ===
         Seq(0L, 2L, 4L, 6L, 8L))
-      // time travel to the pre-delete mixed version is unaffected
-      assert(SnapshotTable.read(spark, path, Some(1)).count() === 2000)
-    } finally {
-      spark.conf.unset("spark.graft.manifest.segmentEntries")
-      spark.conf.unset("spark.graft.manifest.segmentFormat")
+      parity(path3, straddle)
+      // time travel to the pre-delete version is unaffected
+      assert(SnapshotTable.read(spark, path3, Some(1)).count() === 2000)
+    } finally spark.conf.unset("spark.graft.manifest.segmentEntries")
+  }
+
+  test("a manifest referencing a retired parquet segment " +
+      "(seg-*.entriesp) is refused by name, never parsed as text") {
+    import org.apache.hadoop.fs.Path
+    val path = freshPath("pqseg")
+    spark.conf.set("spark.graft.manifest.segmentEntries", "4")
+    try SnapshotTable.create(spark.range(0, 64, 1, 8).toDF("id"), path)
+    finally spark.conf.unset("spark.graft.manifest.segmentEntries")
+    val fs = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mpath = new Path(path, "_graft_log/v00000000.manifest")
+    val body = {
+      val in = fs.open(mpath)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
     }
+    val rel = body.linesIterator.collectFirst {
+      case l if l.startsWith("@seg=") => l.drop(5).split("\t")(0)
+    }.getOrElse(fail(s"no segment ref in a segmented manifest:\n$body"))
+    assert(rel.endsWith(".entries"))
+    // the segment keeps its (valid) text entry lines under the parquet
+    // name, so a reader that fell through to text would succeed
+    val pqRel = rel + "p"
+    assert(fs.rename(new Path(path, rel), new Path(path, pqRel)))
+    val out = fs.create(mpath, true)
+    try out.write(body.replace(rel + "\t", pqRel + "\t").getBytes("UTF-8"))
+    finally out.close()
+    val pqName = new Path(pqRel).getName
+    def refusal(e: Throwable): Option[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .find(_.isInstanceOf[IllegalStateException])
+    val driver = intercept[Exception](SnapshotTable.read(spark, path).count())
+    assert(refusal(driver).exists(_.getMessage.contains(pqName)),
+      s"driver planning did not refuse $pqName: $driver")
+    spark.conf.set("spark.graft.manifest.distributedPlanning.minFiles", "1")
+    val tasks =
+      try intercept[Exception](SnapshotTable.readWherePruned(spark, path,
+        col("id") >= 0L)._1.count())
+      finally spark.conf.unset(
+        "spark.graft.manifest.distributedPlanning.minFiles")
+    assert(tasks.getMessage.contains(pqName) &&
+      tasks.getMessage.contains("no longer readable"),
+      s"distributed planning did not refuse $pqName: $tasks")
   }
 
   test("bloom SIDECARS: segmented tables keep bitsets off the manifest parse") {

@@ -1,8 +1,11 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains (bench/probe sweeps without sbt
 # startup): tools/jrun.sh <mainClass> [args...]. Env vars pass through.
+# Heap: $SPARK_DRIVER_MEM when set, else half of RAM clamped to 2-8 g
+# (the same formula the test suite uses).
+mem="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 exec java -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  -Xmx96g \
+  "-Xmx$mem" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
