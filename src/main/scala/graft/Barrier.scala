@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -28,7 +29,9 @@ import org.apache.spark.storage.StorageLevel
   *  - `checkpoint` — eager reliable [[org.apache.spark.sql.Dataset!.checkpoint()*]]
   *    to `sparkContext.getCheckpointDir`: survives executor loss; the
   *    default whenever a checkpoint dir IS set (callers who configured
-  *    durable storage get durable barriers without a second knob).
+  *    durable storage get durable barriers without a second knob; the
+  *    flip is logged once per SparkContext). Selected explicitly with
+  *    no checkpoint dir, the first barrier fails naming both settings.
   *  - `diskPersist` — `persist(DISK_ONLY)` + eager materialization:
   *    no per-barrier distributed-fs round trip, blocks on executor
   *    local disk, and a lost block RECOMPUTES from lineage. Cheaper
@@ -66,12 +69,27 @@ import org.apache.spark.storage.StorageLevel
 object Barrier {
   val ConfKey = "spark.graft.barrier"
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Contexts whose dir-implied `checkpoint` default was logged. */
+  private val flipLogged = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
   /** Resolved mode: the explicit conf wins; otherwise `checkpoint`
     * when the context has a checkpoint dir, else `localCheckpoint`. */
   def mode(spark: SparkSession): String =
     spark.conf.getOption(ConfKey).getOrElse {
-      if (spark.sparkContext.getCheckpointDir.isDefined) "checkpoint"
-      else "localCheckpoint"
+      val sc = spark.sparkContext
+      sc.getCheckpointDir match {
+        case Some(dir) =>
+          if (flipLogged.synchronized(flipLogged.add(sc)))
+            log.warn(s"$ConfKey is unset and a checkpoint dir is set " +
+              s"($dir): every engine barrier is a reliable checkpoint " +
+              s"(one write per barrier); set $ConfKey=localCheckpoint " +
+              "to keep the in-memory form")
+          "checkpoint"
+        case None => "localCheckpoint"
+      }
     }
 
   /** Eagerly materialize `df` and return a frame whose plan is a leaf
@@ -79,7 +97,12 @@ object Barrier {
   def materialize(df: DataFrame, pinned: Boolean = false): DataFrame =
     mode(df.sparkSession) match {
       case "localCheckpoint" => df.localCheckpoint()
-      case "checkpoint" => df.checkpoint()
+      case "checkpoint" =>
+        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+          s"$ConfKey=checkpoint needs a checkpoint dir: call " +
+            "sparkContext.setCheckpointDir first, or pick " +
+            "localCheckpoint|diskPersist")
+        df.checkpoint()
       case "diskPersist" =>
         if (pinned) {
           // recompute-on-loss would unfreeze the frame: use a

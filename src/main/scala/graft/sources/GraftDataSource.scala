@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.StructType
   * codegen, manifest-metadata file skipping, partition pruning and
   * DPP at planning time — with deletion vectors masked and column
   * mapping translated INSIDE the scan ([[GraftParquetFileFormat]]).
-  * Ineligible versions (legacy logs, unsupported partition types,
-  * oversized DVs) fall back to a [[PrunedFilteredScan]] relation
+  * Ineligible versions (legacy logs, unsupported partition types)
+  * fall back to a [[PrunedFilteredScan]] relation
   * whose pushed filters translate to a Column predicate and ride
   * [[SnapshotTable.readWhere]]'s manifest machinery; untranslatable
   * filters are simply not pushed (Spark re-applies every filter above
@@ -171,7 +171,7 @@ class GraftDataSource extends RelationProvider
     // or column mapping keep the columnar scan too, through
     // GraftParquetFileFormat (in-scan DV masking + name translation);
     // the V1 row-translating relation remains the always-correct
-    // fallback for Catalyst-ineligible versions and oversized DVs.
+    // fallback for Catalyst-ineligible versions.
     val rel = SnapshotTable.frontDoorRelation(spark, path, version)
       .getOrElse(new GraftRelation(sqlContext, path, version))
     // UNPINNED head relations carry the insert-target mark on their

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -48,20 +47,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    deleted rows take a separate plain reader with zero masking
   *    work at all.
   *
-  * A file's deletion set arrives one of two ways:
-  *  - '''per-file blob (v2, the current write format)''' — the file's
-  *    own [[DvSidecar]] descriptor rides its listing metadata
-  *    ([[GraftFileIndex]] attaches it; Spark copies the map onto
-  *    every [[PartitionedFile]] split), and the TASK loads exactly
-  *    its file's positions with one ranged read, cached per-executor.
-  *    No driver collection, no broadcast, NO SIZE BOUND — the shape
-  *    that keeps a 100 TB table under sustained MoR churn on the
-  *    columnar fast path;
-  *  - '''whole-vector [[Broadcast]] (v1, legacy tables)''' —
-  *    `file basename -> sorted deleted row positions`, bounded by
-  *    [[SnapshotTable.DvBroadcastMaxBytes]] of decoded positions at
-  *    relation-build time; oversized legacy vectors fall back to the
-  *    V1 relation's shuffled anti-join rather than risk a driver OOM.
+  * A file's deletion set is its own per-file [[DvSidecar]] blob: the
+  * descriptor rides its listing metadata ([[GraftFileIndex]] attaches
+  * it; Spark copies the map onto every [[PartitionedFile]] split), and
+  * the TASK loads exactly its file's positions with one ranged read,
+  * cached per-executor. No driver collection, no broadcast, NO SIZE
+  * BOUND — the shape that keeps a 100 TB table under sustained MoR
+  * churn on the columnar fast path.
   *
   * Reference behavior source: sf_datalake reads its datasets through
   * pandas/pyspark readers with no lakehouse layer (`io.py`); this
@@ -69,7 +61,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 private[graft] class GraftParquetFileFormat(
     val log2phys: Map[String, String],
-    val dvByFile: Option[Broadcast[Map[String, Array[Long]]]],
     val perFileDv: Boolean = false,
     val insertablePath: Option[String] = None)
   extends ParquetFileFormat {
@@ -88,8 +79,6 @@ private[graft] class GraftParquetFileFormat(
       dataSchema: StructType)
       : org.apache.spark.sql.execution.datasources.OutputWriterFactory =
     throw GraftReadOnlyParquetFormat.directWriteRefusal
-
-  private def maskActive: Boolean = dvByFile.isDefined || perFileDv
 
   private def phys(name: String): String = log2phys.getOrElse(name, name)
 
@@ -149,7 +138,7 @@ private[graft] class GraftParquetFileFormat(
       partitionSchema: StructType,
       sqlConf: org.apache.spark.sql.internal.SQLConf)
       : Option[Seq[String]] =
-    if (!maskActive)
+    if (!perFileDv)
       super.vectorTypes(requiredSchema, partitionSchema, sqlConf)
     else None
 
@@ -165,13 +154,12 @@ private[graft] class GraftParquetFileFormat(
     val physData = toPhys(dataSchema)
     val physReq = toPhys(requiredSchema)
     val physFilters = filters.flatMap(toPhys(_).toSeq)
-    if (!maskActive) {
+    if (!perFileDv) {
         // mapping only: physical-name scan, positional rows — nothing
         // to do above the parent
         super.buildReaderWithPartitionValues(sparkSession, physData,
           partitionSchema, physReq, physFilters, options, hadoopConf)
     } else {
-        val bcOpt = dvByFile
         // per-file blob loads need a filesystem on the EXECUTOR; ship
         // the scan's hadoop conf the standard way
         val confBc = sparkSession.sparkContext.broadcast(
@@ -218,20 +206,12 @@ private[graft] class GraftParquetFileFormat(
             physReq.fields.map(f => (f.dataType, f.nullable)),
             partitionSchema.fields.map(f => (f.dataType, f.nullable)))
         (pf: PartitionedFile) => {
-          // per-file descriptor (v2) wins; legacy broadcast otherwise
           val desc = pf.otherConstantMetadataColumnValues
             .get(DvSidecar.MetaKey)
-          val deleted: Array[Long] =
-            if (desc.isDefined)
-              DvSidecar.load(desc.get.asInstanceOf[String],
-                confBc.value.value)
-            else bcOpt match {
-              case Some(bc) =>
-                bc.value.getOrElse(pf.filePath.toPath.getName, null)
-              case None => null
-            }
-          if (deleted == null) parentPlain(pf)
+          if (desc.isEmpty) parentPlain(pf)
           else {
+            val deleted = DvSidecar.load(desc.get.asInstanceOf[String],
+              confBc.value.value)
             // row indexes arrive in file order, so deletion testing
             // is a merge scan — O(1) amortized per row, not a binary
             // search; cursor state lives per file-open
@@ -416,8 +396,7 @@ private[graft] object GraftInsertTarget {
       path: String)
       : org.apache.spark.sql.execution.datasources.FileFormat = fmt match {
     case g: GraftParquetFileFormat =>
-      new GraftParquetFileFormat(g.log2phys, g.dvByFile, g.perFileDv,
-        Some(path))
+      new GraftParquetFileFormat(g.log2phys, g.perFileDv, Some(path))
     case _: GraftReadOnlyParquetFormat =>
       new GraftReadOnlyParquetFormat(Some(path))
     case other => other

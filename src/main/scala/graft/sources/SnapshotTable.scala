@@ -373,35 +373,13 @@ object SnapshotTable {
     * to the marker. */
   private val EotLine = "#eot=1"
 
-  /** Writer-version witness — the FIRST line of every modern
-    * manifest. It distinguishes "torn by a failed writer" (witness
-    * visible, end marker absent → refuse) from "written by a library
-    * version predating the end-of-transaction marker" (neither
-    * present → accept verbatim, so legacy tables stay readable
-    * instead of failing every read). First line deliberately: the
-    * smallest visible prefix of an in-flight modern write already
-    * carries the witness, so the legacy branch cannot swallow a torn
-    * modern manifest unless the tear landed inside the first six
-    * bytes — the same (far larger) exposure the pre-marker format
-    * accepted for its whole body. */
+  /** Writer-version witness — the FIRST line of every manifest the
+    * current writers emit. It is still written so a log records which
+    * format produced it, but no reader branches on it:
+    * [[manifestLines]] accepts a manifest on its end marker alone and
+    * refuses a marker-less one whatever its witness or age (the
+    * witness-less, marker-less legacy format is retired). */
   private val WvLine = "#wv=2"
-
-  /** Minimum at-rest age before witness-less content may be accepted
-    * as a legacy manifest (see [[manifestLines]]). Generous on
-    * purpose: a stalled writer of the intermediate era (`#eot` but no
-    * `#wv` witness — the marker commit predates the witness) can hold
-    * a manifest visibly half-written for the length of a GC pause or
-    * an executor hiccup, but not for minutes. Session-overridable for
-    * specs. */
-  private def legacyMinAgeMs: Long =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.legacyManifestMinAgeMs"))
-      .map(_.toLong).getOrElse(300000L)
-
-  private def legacyOptIn: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.conf.getOption("spark.graft.allowLegacyManifests")
-        .contains("true"))
 
   /** How long a reader waits for a marker-less manifest's bytes to
     * settle before declaring it torn. Session-overridable so specs
@@ -414,51 +392,11 @@ object SnapshotTable {
       .flatMap(_.conf.getOption("spark.graft.manifest.tornAwaitMs"))
       .map(_.toLong).getOrElse(3000L)
 
-  /** Whole-log legacy evidence for a freshly-RESTORED legacy table
-    * (backup/restore rewrites mtimes, so the age gate reads its
-    * manifests as suspiciously young): stable witness-less content is
-    * still accepted when EVERY other manifest in the log is also
-    * legacy-shaped — no `#wv` witness among its complete head lines
-    * and no end-of-transaction marker in its tail. A mid-flight
-    * intermediate-era write cannot fake that signal in a multi-commit
-    * log: its COMPLETED sibling commits carry `#eot`. Single-manifest
-    * logs keep the age gate (one in-flight first-ever write really is
-    * indistinguishable from a one-commit legacy table). Bounded I/O —
-    * one 4 KB head + one 128 B tail read per other manifest, on this
-    * rare already-refusing path only. */
-  private def wholeLogIsLegacy(fs: FileSystem, path: String,
-      v: Int): Boolean = {
-    val others = fs.listStatus(logDir(path)).toSeq.filter { s =>
-      val n = s.getPath.getName
-      n.startsWith("v") && n.endsWith(".manifest") &&
-        n != manifestName(v)
-    }
-    others.nonEmpty && others.forall { st =>
-      val in = fs.open(st.getPath)
-      val (head, tail) = try {
-        val hbuf = new Array[Byte](4096)
-        var off = 0
-        var n = in.read(hbuf, off, hbuf.length - off)
-        while (n > 0 && off + n < hbuf.length) {
-          off += n; n = in.read(hbuf, off, hbuf.length - off)
-        }
-        if (n > 0) off += n
-        val h = new String(hbuf, 0, off,
-          java.nio.charset.StandardCharsets.UTF_8)
-        val len = st.getLen
-        val from = math.max(0L, len - 128L)
-        in.seek(from)
-        val tbuf = new Array[Byte]((len - from).toInt)
-        in.readFully(tbuf)
-        (h, new String(tbuf, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-      val noWv = !head.split("\n", -1).dropRight(1)
-        .exists(_.trim.startsWith("#wv="))
-      val noEot = !tail.split("\n").exists(_.trim == EotLine)
-      noWv && noEot
-    }
-  }
-
+  /** The manifest body without its end marker. A manifest whose last
+    * line is not [[EotLine]] is either a winner's create-exclusive
+    * write still in flight (spin up to [[tornAwaitMs]] for it) or torn
+    * by a failed writer; a witness-less, marker-less manifest from a
+    * pre-marker writer is refused the same way. */
   private def manifestLines(fs: FileSystem, path: String, v: Int): Seq[String] = {
     val mpath = new Path(logDir(path), manifestName(v))
     def readOnce(): Seq[String] = {
@@ -472,102 +410,18 @@ object SnapshotTable {
           .map(_.trim).filter(_.nonEmpty)
       } finally in.close()
     }
-    var tries = 0
-    var prev: Seq[String] = null
-    var sawStableLegacy = false
-    var wholeLegacy: java.lang.Boolean = null
-    // whole-log acceptance candidate: witness-less content that must
-    // now stay byte-stable (content AND file length) for a FULL
-    // tornAwaitMs window before it may be accepted
-    var cand: Seq[String] = null
-    var candLen = -1L
-    var candAt = 0L
     val budget = tornAwaitMs
     val deadline = System.currentTimeMillis + budget
-    // hard ceiling on the whole call: candidate aging RESETS on every
-    // content/length change, so a witness-less writer that keeps
-    // appending in sub-budget intervals would otherwise extend the
-    // loop without bound — past 3x the torn budget the manifest is
-    // adjudicated torn, the same exposure the plain deadline accepts
-    val hardDeadline = System.currentTimeMillis + 3 * budget
-    // at least two reads regardless of budget — legacy acceptance
-    // needs a stability compare across consecutive reads. The loop
-    // extends past the torn deadline only while a whole-log candidate
-    // is still aging toward its own full-budget stability window,
-    // never past the hard ceiling.
-    while (tries < 2 || System.currentTimeMillis < deadline ||
-        (cand != null && System.currentTimeMillis < candAt + budget &&
-          System.currentTimeMillis < hardDeadline)) {
+    var tries = 0
+    while (tries == 0 || System.currentTimeMillis < deadline) {
       val lines = readOnce()
       if (lines.nonEmpty && lines.last == EotLine) return lines.init
-      // pre-witness manifests never carry the end marker and never
-      // will: accept them (legacy readability) instead of spinning
-      // into a refusal. A modern in-flight/torn write is recognizable
-      // by its leading witness line and keeps the bounded spin.
-      // Acceptance requires NONEMPTY content STABLE across two
-      // consecutive reads (a just-created manifest whose bytes are
-      // still in flight reads as empty or a growing prefix for a few
-      // ms) AND at-rest evidence: the manifest must be older than
-      // [[legacyMinAgeMs]] (a true legacy table's manifests are as
-      // old as its last pre-era commit; witness-less content younger
-      // than minutes is far more likely a write in flight from an
-      // intermediate-era writer — `#eot` predates the `#wv` witness,
-      // so such writers exist — or a fresh tear). Operators who KNOW
-      // the table is legacy can skip the age gate with
-      // `spark.graft.allowLegacyManifests=true`.
-      if (lines.nonEmpty && !lines.exists(_.startsWith("#wv=")) &&
-          prev != null && lines == prev) {
-        sawStableLegacy = true
-        if (legacyOptIn) return lines
-        val age = System.currentTimeMillis -
-          fs.getFileStatus(mpath).getModificationTime
-        if (age >= legacyMinAgeMs) return lines
-        // young AND witness-less: a RESTORED legacy table reads this
-        // way (backup rewrote mtimes) — acceptable on whole-log
-        // evidence, but NOT after one 20 ms stable pair: the first
-        // intermediate-era (#eot-writing, pre-#wv) commit onto a
-        // legacy table has no completed modern sibling, so a reader
-        // racing that in-flight write could bless a momentarily-
-        // stable torn prefix. Require content AND file-length
-        // stability across a FULL tornAwaitMs window first — a
-        // writer that stalls that long mid-body is the same exposure
-        // the torn deadline already accepts for marker-era tables.
-        val len = fs.getFileStatus(mpath).getLen
-        if (cand == null || lines != cand || len != candLen) {
-          cand = lines; candLen = len
-          candAt = System.currentTimeMillis
-        } else if (System.currentTimeMillis - candAt >= budget) {
-          // whole-log evidence checked once per call (bounded
-          // head+tail reads per other version)
-          if (wholeLegacy == null)
-            wholeLegacy = java.lang.Boolean.valueOf(
-              wholeLogIsLegacy(fs, path, v))
-          if (wholeLegacy.booleanValue()) return lines
-        }
-      } else if (cand != null && lines != cand) cand = null
-      prev = if (lines.exists(_.startsWith("#wv="))) null else lines
       tries += 1
       Thread.sleep(20)
     }
-    // final confirmation for a candidate whose stability window closed
-    // exactly as the loop exited: one more read + length check against
-    // the snapshot taken >= budget ms ago
-    if (cand != null &&
-        System.currentTimeMillis - candAt >= budget &&
-        readOnce() == cand &&
-        fs.getFileStatus(mpath).getLen == candLen) {
-      if (wholeLegacy == null)
-        wholeLegacy = java.lang.Boolean.valueOf(
-          wholeLogIsLegacy(fs, path, v))
-      if (wholeLegacy.booleanValue()) return cand
-    }
     sys.error(s"manifest v$v at $path has no end-of-transaction " +
-      s"marker after $budget ms — torn by a failed writer; manual " +
-      "cleanup required" + (if (sawStableLegacy)
-        " (content is stable but witness-less AND younger than " +
-          s"${legacyMinAgeMs} ms — if this really is a table written " +
-          "by a pre-marker library version, set " +
-          "spark.graft.allowLegacyManifests=true)" else ""))
+      s"marker after $budget ms — torn by a failed writer, or written " +
+      "in the retired marker-less legacy format; manual cleanup required")
   }
 
   /** SEGMENTED MANIFESTS (Iceberg manifest-list shape): above the
@@ -1494,16 +1348,34 @@ object SnapshotTable {
     entryFileMeta(e).map(_._1).getOrElse(
       fs.getFileStatus(new Path(path, entryPath(e))).getLen)
 
-  /** All deletion-vector refs of an entry. Two generations:
-    *  - v1 (legacy): whole (file,pos) parquet rels shared by the
-    *    commit's affected entries — a COMMA-list when one commit's
-    *    cumulative vector spans multiple parquet files;
-    *  - v2 (`rel@off+len#count`, [[DvSidecar]]): THIS entry's own
-    *    per-file blob inside a packed sidecar — the form every new
-    *    MoR commit writes, loaded executor-side by the scan task with
-    *    no driver bound. */
+  /** All deletion-vector refs of an entry, unvalidated (the `dv=`
+    * item is a comma-list). Every MoR commit writes `rel@off+len#count`
+    * ([[DvSidecar]]): THIS entry's own per-file blob inside a packed
+    * sidecar, loaded executor-side by the scan task with no driver
+    * bound. Readers resolve refs through [[blobDvs]]. */
   private[graft] def entryDvs(line: String): Seq[String] =
     entryDv(line).toSeq.flatMap(_.split(",").toSeq.filter(_.nonEmpty))
+
+  /** An entry's deletion-vector refs for READING version `v`. A ref
+    * that is not a per-file blob is a v1 whole-parquet vector, a
+    * retired format no reader resolves: refused by name rather than
+    * mis-parsed. */
+  private def blobDvs(line: String, v: Int): Seq[String] = {
+    val refs = entryDvs(line)
+    refs.find(r => !DvSidecar.isBlobRef(r)).foreach { r =>
+      throw new IllegalStateException(s"manifest v$v entry " +
+        s"${entryPath(line)} references deletion vector '$r' in the " +
+        "retired v1 whole-parquet format; only per-file blob refs " +
+        "(rel@off+len#count) are readable")
+    }
+    refs
+  }
+
+  /** (data file basename, dv ref) pairs of `entries` under version
+    * `v`, every ref checked by [[blobDvs]]. */
+  private def dvPairs(entries: Seq[String], v: Int): Seq[(String, String)] =
+    entries.flatMap(e =>
+      blobDvs(e, v).map(r => (fileNameOf(entryPath(e)), r))).distinct
 
   /** `line` with its dv item replaced by (or set to) `dvRels`; an
     * EMPTY `dvRels` removes the item entirely (a file with no deleted
@@ -1564,7 +1436,7 @@ object SnapshotTable {
   private[graft] def readEntriesAt(spark: SparkSession, path: String,
       v: Int, entries: Seq[String]): DataFrame = {
     val fs = fsOf(spark, logDir(path))
-    readEntriesDv(spark, path, storedSchema(fs, path, v), entries)
+    readEntriesDv(spark, path, v, storedSchema(fs, path, v), entries)
   }
 
   /** Central DV-applied reader: read `entries` (full manifest lines)
@@ -1573,14 +1445,12 @@ object SnapshotTable {
     * deleted row must never resurrect through merge rewrites, change
     * feeds, or compaction. `keepRowId` retains the __file/__pos
     * columns for callers that need row coordinates (merge's affected
-    * scan, deleteMoR itself). */
-  private def readEntriesDv(spark: SparkSession, path: String,
+    * scan, deleteMoR itself). `v` is the version the entries were
+    * read from. */
+  private def readEntriesDv(spark: SparkSession, path: String, v: Int,
       schema: Option[types.StructType], entries: Seq[String],
       keepRowId: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    val dvRefs = entries.flatMap(e =>
-      entryDvs(e).map(r => (fileOf(entryPath(e)), r))).distinct
+    val dvRefs = dvPairs(entries, v)
     val needRowId = keepRowId || dvRefs.nonEmpty
     val base = readFilesAs(spark, path, schema, entries.map(entryPath),
       withRowId = needRowId)
@@ -1594,42 +1464,19 @@ object SnapshotTable {
 
   /** Anti-join `df` (which must carry `__file`/`__pos` row
     * coordinates) against the deletion vectors at `dvRefs` — pairs of
-    * (data file basename, dv ref), mixing legacy v1 whole-parquet rels
-    * with per-file [[DvSidecar]] blob descriptors. Churn-sized vectors
-    * broadcast (map-side hash anti-join in the scan stage, no 2-sided
+    * (data file basename, per-file [[DvSidecar]] blob descriptor), as
+    * [[dvPairs]] resolves them. Churn-sized vectors broadcast
+    * (map-side hash anti-join in the scan stage, no 2-sided
     * shuffle+sort of the table); but after large/repeated MoR deletes
     * the cumulative vector can approach table row count — gate on the
-    * ESTIMATED DECODED size (v2 descriptors carry exact cardinality;
-    * v1 counts come from parquet footers, never the compressed byte
-    * size, which undercounts heavily for sorted positions) and fall
-    * back to a shuffled anti-join above the threshold rather than
-    * risk an executor OOM on the broadcast hash relation. */
+    * DECODED size (descriptors carry exact cardinality) and fall back
+    * to a shuffled anti-join above the threshold rather than risk an
+    * executor OOM on the broadcast hash relation. */
   private def applyDvMask(spark: SparkSession, path: String,
       df: DataFrame, dvRefs: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (v2, v1Pairs) = dvRefs.partition(p => DvSidecar.isBlobRef(p._2))
-    val v1Rels = v1Pairs.map(_._2).distinct
-    val v1Rows = v1Rels.map(r => footerHarvest(
-      spark.sparkContext.hadoopConfiguration,
-      new Path(path, r), Nil, Nil)._1.getOrElse(Long.MaxValue >> 8))
-    val v2Counts = v2.map(p => DvSidecar.parse(p._2).count.toLong)
-    val positions = v1Rows.sum + v2Counts.sum
-    val v1Df = if (v1Rels.isEmpty) None else Some(spark.read
-      .parquet(v1Rels.map(r => new Path(path, r).toString): _*)
-      .select(col("file").as("__dvf"), col("pos").as("__dvp")))
-    val v2Df = if (v2.isEmpty) None else {
-      import spark.implicits._
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val qualified = v2.map { case (f, ref) =>
-        (f, qualifyDvRef(spark, path, ref)) }
-      Some(spark.createDataset(qualified)
-        .repartition(math.min(v2.size, 64))
-        .flatMap { case (f, ref) =>
-          DvSidecar.load(ref, conf.value).iterator.map(p => (f, p)) }
-        .toDF("__dvf", "__dvp"))
-    }
-    val dvRaw = (v1Df.toSeq ++ v2Df.toSeq).reduce(_.unionByName(_))
+    val positions = dvRefs.map(p => DvSidecar.parse(p._2).count.toLong).sum
+    val dvRaw = decodedDvRows(spark, path, dvRefs).toDF("__dvf", "__dvp")
     // decoded hash-relation estimate: ~48 B per (string, long) row
     val dv = if (positions * 48 <= DvBroadcastMaxBytes)
       org.apache.spark.sql.functions.broadcast(dvRaw) else dvRaw
@@ -1638,7 +1485,23 @@ object SnapshotTable {
       "left_anti")
   }
 
-  /** A v2 dv ref with its table-relative rel replaced by the
+  /** The (file, pos) rows of `dvRefs` — (data file basename, blob
+    * ref) pairs — decoded executor-side. */
+  private def decodedDvRows(spark: SparkSession, path: String,
+      dvRefs: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val qualified = dvRefs.map { case (f, ref) =>
+      (f, qualifyDvRef(spark, path, ref)) }
+    spark.createDataset(qualified)
+      .repartition(math.min(dvRefs.size, 64))
+      .flatMap { case (f, ref) =>
+        DvSidecar.load(ref, conf.value).iterator.map(p => (f, p)) }
+      .toDF("file", "pos")
+  }
+
+  /** A dv ref with its table-relative rel replaced by the
     * filesystem-qualified URI — the form executor-side loads use. */
   private def qualifyDvRef(spark: SparkSession, path: String,
       ref: String): String = {
@@ -1961,8 +1824,8 @@ object SnapshotTable {
     *    wrong bound). */
   private val StrStatMax = 32
 
-  /** Broadcast ceiling for deletion-vector masks in [[readEntriesDv]]
-    * (on-disk parquet bytes); above it the mask joins shuffled. */
+  /** Broadcast ceiling for deletion-vector masks in [[applyDvMask]]
+    * (estimated decoded bytes); above it the mask joins shuffled. */
   private val DvBroadcastMaxBytes = 64L << 20
 
   /** Target deleted positions per staged deletion-vector sidecar. */
@@ -2026,38 +1889,14 @@ object SnapshotTable {
       }.collect().toMap
   }
 
-  /** Prior deletion coordinates of the `affected` entries as
-    * (file, pos) rows riding into a new cumulative vector: v1 whole-
-    * parquet refs read and semi-joined to the affected files (a
-    * shared v1 rel can carry OTHER files' positions, which must stay
-    * with their own entries), v2 per-file blobs decoded
-    * executor-side. None = no prior vectors. */
-  private def priorDvRows(spark: SparkSession, path: String,
-      affected: Seq[String], affectedFiles: DataFrame)
-      : Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    val pairs = affected.flatMap(e =>
-      entryDvs(e).map(r => (fileOf(entryPath(e)), r))).distinct
-    if (pairs.isEmpty) return None
-    val (v2, v1) = pairs.partition(p => DvSidecar.isBlobRef(p._2))
-    val v1Df = if (v1.isEmpty) None else Some(
-      spark.read.parquet(v1.map(_._2).distinct.map(r =>
-          new Path(path, r).toString): _*)
-        .select(col("file"), col("pos"))
-        .join(affectedFiles, Seq("file"), "left_semi"))
-    val v2Df = if (v2.isEmpty) None else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val q = v2.map { case (f, r) => (f, qualifyDvRef(spark, path, r)) }
-      Some(spark.createDataset(q)
-        .repartition(math.min(v2.size, 64))
-        .flatMap { case (f, ref) =>
-          DvSidecar.load(ref, conf.value).iterator.map(p => (f, p)) }
-        .toDF("file", "pos"))
-    }
-    Some((v1Df.toSeq ++ v2Df.toSeq).reduce(_.unionByName(_)))
+  /** Prior deletion coordinates of the `affected` entries of version
+    * `v` as (file, pos) rows riding into a new cumulative vector,
+    * decoded executor-side from their per-file blobs. None = no prior
+    * vectors. */
+  private def priorDvRows(spark: SparkSession, path: String, v: Int,
+      affected: Seq[String]): Option[DataFrame] = {
+    val pairs = dvPairs(affected, v)
+    if (pairs.isEmpty) None else Some(decodedDvRows(spark, path, pairs))
   }
 
   private[graft] def boundLo(s: Array[Byte]): Array[Byte] =
@@ -2780,7 +2619,7 @@ object SnapshotTable {
     val tableSchema = storedOpt.orElse(Some(currentFallback.schema))
     val affectedNames =
       if (candidates.isEmpty) Set.empty[String]
-      else readEntriesDv(spark, path, tableSchema, candidates,
+      else readEntriesDv(spark, path, readV, tableSchema, candidates,
           keepRowId = true)
         .select(col("__file") +: keyCols.map(col): _*)
         .join(keys, keyCols, "left_semi")
@@ -2825,7 +2664,7 @@ object SnapshotTable {
     // must not shatter into 32 slivers
     val rewritten =
       if (affected.isEmpty) updatesAligned
-      else toEvolved(readEntriesDv(spark, path, tableSchema, affected)
+      else toEvolved(readEntriesDv(spark, path, readV, tableSchema, affected)
         .join(keys, keyCols, "left_anti"))
         .unionByName(updatesAligned)
     val staged = stage(
@@ -2903,7 +2742,7 @@ object SnapshotTable {
         cpNulls(cp, e, tableSchema)))
     val affectedNames =
       if (candidates.isEmpty) Set.empty[String]
-      else readEntriesDv(spark, path, tableSchema, candidates,
+      else readEntriesDv(spark, path, readV, tableSchema, candidates,
           keepRowId = true)
         .filter(predicate)
         .select(col("__file")).distinct()
@@ -2919,7 +2758,7 @@ object SnapshotTable {
       val loose = tagged.collect {
         case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
       val kept =
-        readEntriesDv(spark, path, tableSchema, affected)
+        readEntriesDv(spark, path, readV, tableSchema, affected)
           .filter(not(coalesce(predicate, lit(false))))
       val staged = stage(
         toPhysical(kept.coalesce(affected.size), tableSchema), path,
@@ -2978,7 +2817,7 @@ object SnapshotTable {
         cpNulls(cp, e, tableSchema)))
     if (candidates.isEmpty) return readV
     // live matching rows only: already-masked rows never re-enter
-    val hits = readEntriesDv(spark, path, tableSchema, candidates,
+    val hits = readEntriesDv(spark, path, readV, tableSchema, candidates,
         keepRowId = true)
       .filter(predicate)
       .select(col("__file").as("file"), col("__pos").as("pos"))
@@ -2997,8 +2836,7 @@ object SnapshotTable {
     // cumulative vector: prior coordinates of the affected files ride
     // into the new commit's per-file blobs (each entry references ITS
     // OWN descriptor)
-    val dvRows = priorDvRows(spark, path, affected,
-        hits.select(col("file")).distinct())
+    val dvRows = priorDvRows(spark, path, readV, affected)
       .map(hits.unionByName(_)).getOrElse(hits)
     val descByFile = stageDvPerFile(spark, path, dvRows)
     val masked = affected.map(e =>
@@ -3012,55 +2850,6 @@ object SnapshotTable {
           relabelStats(entryStringStats(e), tableSchema),
           relabelStats(entryBloomStats(e), tableSchema),
           cpNulls(cp, e, tableSchema)))))
-  }
-
-  /** UPGRADE legacy v1 whole-parquet deletion vectors to per-file v2
-    * blobs, as ONE metadata-only commit: no data file is rewritten, no
-    * row image moves, and visible rows are bit-identical before and
-    * after (the change feed emits ZERO rows across the commit — the
-    * (path, dv) identities change but both sides read the same rows
-    * and cancel). This closes the last DV size cliff for tables
-    * written before per-file blobs: v1 vectors broadcast whole at
-    * read/planning time and fall back to a shuffled anti-join past
-    * [[DvBroadcastMaxBytes]], while v2 blobs load per scan task with
-    * no bound at any churn level. Entries whose v1 ref holds no
-    * positions for their file simply lose the dv item (their mask was
-    * empty). Cost: one read of the v1 vectors + any stacked v2 blobs,
-    * one distributed re-encode ([[stageDvPerFile]]), O(churned files)
-    * manifest lines. Returns the new version, or the current one when
-    * the head carries no v1 refs (idempotent). A lost commit race
-    * aborts like other maintenance verbs — rerun on the new head. */
-  def upgradeDeletionVectors(spark: SparkSession, path: String,
-      meta: Map[String, String] = Map.empty): Int = {
-    import spark.implicits._
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val fs = fsOf(spark, new Path(path))
-    val tagged = readManifestTagged(fs, path, readV)
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    val touched = (e: String) =>
-      entryDvs(e).exists(r => !DvSidecar.isBlobRef(r))
-    val affected = tagged.map(_._1).filter(touched)
-    if (affected.isEmpty) return readV
-    val dirtySegs = tagged.iterator.collect {
-      case (e, Some(sr)) if touched(e) => sr }.toSet
-    val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-      l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-    val loose = tagged.collect {
-      case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-    val affectedFiles = affected.map(e => fileOf(entryPath(e)))
-      .toDF("file")
-    // ALL prior coordinates — the v1 rels plus any stacked v2 blobs —
-    // fold into one fresh per-file blob per entry
-    val dvRows = priorDvRows(spark, path, affected, affectedFiles)
-      .getOrElse(sys.error(
-        "upgradeDeletionVectors: touched entries lost their vectors"))
-    val descByFile = stageDvPerFile(spark, path, dvRows)
-    val upgraded = affected.map(e =>
-      withDv(e, descByFile.get(fileOf(entryPath(e))).toSeq))
-    commitPinned(spark, path, keptRefs, loose ++ upgraded, readV + 1,
-      Map("op" -> "UPGRADE-DV") ++ meta)
   }
 
   /** Merge-on-read UPDATE: `SET col = expr WHERE predicate` as ONE
@@ -3099,7 +2888,7 @@ object SnapshotTable {
         relabelStats(entryBloomStats(e), tableSchema),
         cpNulls(cp, e, tableSchema)))
     if (candidates.isEmpty) return readV
-    val matched = readEntriesDv(spark, path, tableSchema, candidates,
+    val matched = readEntriesDv(spark, path, readV, tableSchema, candidates,
         keepRowId = true)
       .filter(predicate)
       .barrier(pinned = true)
@@ -3116,8 +2905,7 @@ object SnapshotTable {
       l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
     val loose = tagged.collect {
       case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-    val dvRows = priorDvRows(spark, path, affected,
-        hits.select(col("file")).distinct())
+    val dvRows = priorDvRows(spark, path, readV, affected)
       .map(hits.unionByName(_)).getOrElse(hits)
     val descByFile = stageDvPerFile(spark, path, dvRows)
     // new images: matched rows with assignments applied, table columns
@@ -3224,8 +3012,8 @@ object SnapshotTable {
     val toMeta = metaOfLines(toLines)
     val toSchema = toMeta.get("schema").filter(_.nonEmpty).map(j =>
       types.DataType.fromJson(j).asInstanceOf[types.StructType])
-    val tagged = diffFrame(spark, path, oldE, neuE, toSchema,
-      () => read(spark, path, Some(toV)))
+    val tagged = diffFrame(spark, path, fromVersion, oldE, toV, neuE,
+      toSchema, () => read(spark, path, Some(toV)))
     if (!updateImages) tagged
     else pairUpdateImages(spark, tagged, toMeta,
       toSchema.map(_.fieldNames.toSeq)
@@ -3240,12 +3028,12 @@ object SnapshotTable {
     * typed empty frame built from the stored schema with zero plan
     * weight (`legacyRead` covers pre-schema-era logs only). */
   private def diffFrame(spark: SparkSession, path: String,
-      oldE: Seq[String], neuE: Seq[String],
+      oldV: Int, oldE: Seq[String], neuV: Int, neuE: Seq[String],
       schema: Option[types.StructType],
       legacyRead: () => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    def readE(entries: Seq[String]): DataFrame =
-      readEntriesDv(spark, path, schema, entries)
+    def readE(v: Int, entries: Seq[String]): DataFrame =
+      readEntriesDv(spark, path, v, schema, entries)
     if (oldE.isEmpty && neuE.isEmpty) {
       val base = schema match {
         case Some(st) => spark.createDataFrame(
@@ -3255,12 +3043,12 @@ object SnapshotTable {
       base.withColumn("change_type", lit("insert")).filter(lit(false))
     }
     else if (oldE.isEmpty)
-      readE(neuE).withColumn("change_type", lit("insert"))
+      readE(neuV, neuE).withColumn("change_type", lit("insert"))
     else if (neuE.isEmpty)
-      readE(oldE).withColumn("change_type", lit("delete"))
+      readE(oldV, oldE).withColumn("change_type", lit("delete"))
     else {
-      val old = readE(oldE)
-      val neu = readE(neuE)
+      val old = readE(oldV, oldE)
+      val neu = readE(neuV, neuE)
       if (!old.schema.fields.exists(f => containsMapType(f.dataType)))
         neu.exceptAll(old).withColumn("change_type", lit("insert"))
           .unionByName(
@@ -3516,7 +3304,7 @@ object SnapshotTable {
           .withColumn("change_type", lit("insert"))
         else {
           val (oldE, neuE) = diffEntrySides(fs, path, prevRefs, curRefs)
-          val t = diffFrame(spark, path, oldE, neuE, schemaV,
+          val t = diffFrame(spark, path, v - 1, oldE, v, neuE, schemaV,
             () => read(spark, path, Some(v)))
           if (!updateImages) t
           else pairUpdateImages(spark, t, meta,
@@ -3828,7 +3616,7 @@ object SnapshotTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         nullify(st))
     }
-    readEntriesDv(spark, path, storedSchema(fs, path, v), entries)
+    readEntriesDv(spark, path, v, storedSchema(fs, path, v), entries)
   }
 
   /** Table history, newest first — the DESCRIBE HISTORY surface:
@@ -3998,7 +3786,7 @@ object SnapshotTable {
         if (kept.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        else readEntriesDv(spark, path, schema, kept)
+        else readEntriesDv(spark, path, v, schema, kept)
           .filter(predicate)
       return (df, kept.size, total)
     }
@@ -4054,7 +3842,7 @@ object SnapshotTable {
       if (kept.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      else readEntriesDv(spark, path, schema, kept)
+      else readEntriesDv(spark, path, v, schema, kept)
         .filter(predicate)
     (df, kept.size, total)
   }
@@ -4848,8 +4636,8 @@ object SnapshotTable {
     catalystRelationParts(spark, path, v) match {
       case None => read(spark, path, Some(v))
       case Some((relation, dvRels, st)) =>
-        // oversized-DV / odd-schema-order fallback: the classic
-        // layered shape (anti-join above the scan)
+        // odd-schema-order fallback: the classic layered shape
+        // (anti-join above the scan)
         val raw =
           org.apache.spark.sql.GraftSqlAccess.ofRelation(spark, relation)
         // deletion-vector mask: same anti-join as the classic reader,
@@ -4932,11 +4720,11 @@ object SnapshotTable {
         case None => fsD.getFileStatus(p)
       }
       val (num, str, bl, nu) = parseEntryStats(e)
-      // v2 per-file dv blobs ride the file listing as metadata (the
+      // per-file dv blobs ride the file listing as metadata (the
       // scan task loads ONLY its own blob — no global broadcast);
       // qualified here once so the executor never needs the table path
       val dvMeta = {
-        val blobs = entryDvs(e).filter(DvSidecar.isBlobRef)
+        val blobs = blobDvs(e, v)
         if (blobs.isEmpty) None
         else Some(blobs.map { r =>
           val d = DvSidecar.parse(r)
@@ -4976,14 +4764,11 @@ object SnapshotTable {
     // basename, ref) pairs. Only segments whose hasdv flag is true
     // (or absent — legacy) resolve here; the common clean path stays
     // pure list metadata.
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    def pairsOf(e: String): Seq[(String, String)] =
-      entryDvs(e).map(r => (fileOf(entryPath(e)), r))
-    val dvRefs = refs.flatMap { l =>
-      if (!l.startsWith(SegPrefix)) pairsOf(l)
+    val dvRefs = dvPairs(refs.flatMap { l =>
+      if (!l.startsWith(SegPrefix)) Seq(l)
       else if (refHasDv(l).contains(false)) Nil
-      else segEntries(fs, path, refRel(l)).flatMap(pairsOf)
-    }.distinct
+      else segEntries(fs, path, refRel(l))
+    }, v)
     Some((relation, dvRefs, st))
   }
 
@@ -5002,20 +4787,15 @@ object SnapshotTable {
     * translation inside the reader (rows are positional, so mapping
     * costs nothing and stays vectorized) and in-scan row-position
     * masking against per-file deletion blobs riding the file listing
-    * (v2, [[DvSidecar]] — the scan task loads only its own file's
-    * blob, so there is NO size bound however large the table's
-    * cumulative churn) or against the broadcast deletion sets (v1
-    * legacy vectors, bounded). The index is re-viewed with the
-    * logical→physical map so pushed filters on renamed columns keep
-    * their manifest pruning.
+    * ([[DvSidecar]] — the scan task loads only its own file's blob,
+    * so there is NO size bound however large the table's cumulative
+    * churn). The index is re-viewed with the logical→physical map so
+    * pushed filters on renamed columns keep their manifest pruning.
+    * A v1 whole-parquet dv ref is refused ([[blobDvs]]).
     *
     * None = Catalyst-ineligible version (empty manifest, unsupported
-    * partition type, legacy log) or a LEGACY v1 cumulative deletion
-    * vector past [[DvBroadcastMaxBytes]] — callers fall back to the
-    * row-translating V1 relation, which is always correct (and
-    * applies the size-gated shuffled anti-join for oversized DVs).
-    * Vectors written by current MoR commits are per-file blobs and
-    * never hit that cliff. */
+    * partition type, legacy log) — callers fall back to the
+    * row-translating V1 relation, which is always correct. */
   private[graft] def frontDoorRelation(spark: SparkSession, path: String,
       version: Int): Option[org.apache.spark.sql.sources.BaseRelation] =
     catalystRelationParts(spark, path, version).flatMap {
@@ -5023,18 +4803,15 @@ object SnapshotTable {
         val log2phys = st.fields.iterator
           .filter(f => physName(f) != f.name)
           .map(f => f.name -> physName(f)).toMap
-        val v1Rels = dvRefs.collect {
-          case (_, r) if !DvSidecar.isBlobRef(r) => r }.distinct
-        val perFile = dvRefs.exists(p => DvSidecar.isBlobRef(p._2))
         if (dvRefs.isEmpty && log2phys.isEmpty) {
           if (relation.schema.fieldNames.sameElements(st.fieldNames))
             Some(relation)
           else None
-        } else cachedDvBroadcast(spark, path, v1Rels).flatMap { dvBc =>
+        } else {
           // dataSchema under LOGICAL names (analysis resolves user
           // queries against it); the format scans physical
           val logicalData = nullify(types.StructType(st.fields))
-          val fmt = new GraftParquetFileFormat(log2phys, dvBc, perFile)
+          val fmt = new GraftParquetFileFormat(log2phys, dvRefs.nonEmpty)
           val index = relation.location match {
             case g: GraftFileIndex => g.withLogicalNames(log2phys)
             case other => other
@@ -5047,64 +4824,13 @@ object SnapshotTable {
         }
     }
 
-  /** Process-level cache of broadcast deletion vectors keyed by the
-    * exact DV rel set (uuid-named immutable files, so a key can never
-    * alias different content). Without it every `format("graft")`
-    * read of a DV'd version would re-run the DV load job and
-    * re-broadcast at PLANNING time — the Delta-snapshot-state reason
-    * to cache. Bounded by estimated decoded bytes, cleared past
-    * 128 MB (the ContextCleaner reclaims unreferenced broadcasts). */
-  private val dvBcCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]()
-  private val dvBcCacheBytes = new java.util.concurrent.atomic.AtomicLong
-
-  /** A version's LEGACY v1 cumulative deletion vector as a broadcast
-    * of `file basename -> sorted deleted positions` for
-    * [[GraftParquetFileFormat]]'s readers (current commits write
-    * per-file [[DvSidecar]] blobs that never need this). Some(None) =
-    * no v1 DVs; None = past [[DvBroadcastMaxBytes]] of DECODED
-    * positions (parquet footer row counts × 8 B — sorted longs
-    * compress heavily, so the on-disk size would badly undercount the
-    * driver-side Row materialization this method performs) — the
-    * caller must fall back to a relation that can anti-join
-    * distributed. */
-  private def cachedDvBroadcast(spark: SparkSession, path: String,
-      dvRels: Seq[String]): Option[Option[
-        org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]] = {
-    if (dvRels.isEmpty) return Some(None)
-    val key = spark.sparkContext.applicationId + "\u0000" + path +
-      "\u0000" + dvRels.sorted.mkString("|")
-    val hit = dvBcCache.get(key)
-    if (hit != null) return Some(Some(hit))
-    val dvPositions = dvRels.map(r => footerHarvest(
-      spark.sparkContext.hadoopConfiguration,
-      new Path(path, r), Nil, Nil)._1.getOrElse(Long.MaxValue >> 8)).sum
-    if (dvPositions * 8 > DvBroadcastMaxBytes) return None
-    val rows = spark.read
-      .parquet(dvRels.map(r => new Path(path, r).toString): _*)
-      .select("file", "pos").collect()
-    val dv = rows.groupBy(_.getString(0)).map { case (f, rs) =>
-      // positions can repeat across stacked per-commit vectors; the
-      // cursor needs them sorted and unique
-      f -> rs.map(_.getLong(1)).distinct.sorted.toArray
-    }
-    val bc = spark.sparkContext.broadcast(dv)
-    val est = dv.valuesIterator.map(_.length.toLong * 8 + 64).sum
-    if (dvBcCacheBytes.addAndGet(est) > (128L << 20)) {
-      dvBcCache.clear()
-      dvBcCacheBytes.set(est)
-    }
-    dvBcCache.put(key, bc)
-    Some(Some(bc))
-  }
-
   /** The version's manifest as a queryable METADATA TABLE (the
     * Delta `describe detail` / Iceberg `.files` shape): one row per
     * data file with its partition tuple (escaped path form), recorded
     * length/mtime, exact row count, and deletion-vector footprint
-    * (`dv_positions` = masked rows, exact for v2 blob refs, null when
-    * any legacy v1 ref hides the cardinality). Built DISTRIBUTED:
-    * segment refs resolve in tasks ([[readSegmentLines]]),
+    * (`dv_positions` = masked rows, exact from the blob descriptors;
+    * a v1 whole-parquet ref fails the scan, [[blobDvs]]). Built
+    * DISTRIBUTED: segment refs resolve in tasks ([[readSegmentLines]]),
     * so a million-file table's metadata scan never materializes on
     * the driver — the manifest tier is just more data. Invariant the
     * graded query pins: `sum(rows) - sum(dv_positions)` per partition
@@ -5138,12 +4864,8 @@ object SnapshotTable {
     entries.map { e =>
       val rel = entryPath(e)
       val fm = entryFileMeta(e)
-      val dvs = entryDvs(e)
-      val dvPos =
-        if (dvs.isEmpty) Some(0L)
-        else if (dvs.forall(DvSidecar.isBlobRef))
-          Some(dvs.map(r => DvSidecar.parse(r).count.toLong).sum)
-        else None // legacy v1 rel: cardinality not in the descriptor
+      val dvs = blobDvs(e, v)
+      val dvPos = dvs.map(r => DvSidecar.parse(r).count.toLong).sum
       (rel, entryPartitionValues(rel), fm.map(_._1), fm.map(_._2),
         entryRows(e), dvs.size, dvPos)
     }.toDF("file", "partition", "bytes", "mtime", "rows",
@@ -5455,7 +5177,7 @@ object SnapshotTable {
         math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
       val rewriteSchema = storedSchema(fs, path, readV)
       val compacted =
-        readEntriesDv(spark, path, rewriteSchema, rewrite)
+        readEntriesDv(spark, path, readV, rewriteSchema, rewrite)
         .coalesce(nFiles)
       val staged = stage(toPhysical(compacted, rewriteSchema), path,
         partitioning(spark, path))

@@ -153,11 +153,17 @@ class BarrierSpec extends SparkSpec {
   }
 
   test("unknown mode fails loudly") {
-    withMode(Some("ramCache")) {
-      val e = intercept[IllegalArgumentException] {
-        Barrier.materialize(spark.range(3).toDF("id"))
+    // (mode, what the error must name): an unknown mode, and an
+    // explicit checkpoint mode with no checkpoint dir set
+    Seq("ramCache" -> Seq(Barrier.ConfKey),
+        "checkpoint" -> Seq(Barrier.ConfKey, "setCheckpointDir"))
+      .foreach { case (m, names) =>
+        withMode(Some(m)) {
+          val e = intercept[IllegalArgumentException] {
+            Barrier.materialize(spark.range(3).toDF("id"))
+          }
+          names.foreach(n => assert(e.getMessage.contains(n), e.getMessage))
+        }
       }
-      assert(e.getMessage.contains(Barrier.ConfKey))
-    }
   }
 }

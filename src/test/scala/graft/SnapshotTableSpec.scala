@@ -1934,64 +1934,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, path2).count() === 10)
   }
 
-  test("whole-log legacy acceptance requires FULL-budget stability: " +
-      "a racing reader never blesses a momentarily-stable torn prefix") {
-    import spark.implicits._
-    val path = freshPath("legacyrace")
-    SnapshotTable.create((0L until 50L).toDF("id"), path)
-    SnapshotTable.append((50L until 80L).toDF("id"), path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val logDir = new org.apache.hadoop.fs.Path(path, "_graft_log")
-    val manifests = fs.listStatus(logDir).map(_.getPath)
-      .filter(_.getName.endsWith(".manifest")).sortBy(_.getName)
-    def strip(lines: Seq[String]): Seq[String] = lines.filterNot(l =>
-      l.startsWith("#wv=") || l.startsWith("#eot="))
-    def contentOf(p: org.apache.hadoop.fs.Path): Seq[String] = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-    }
-    def write(p: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
-      if (fs.exists(p)) fs.delete(p, false)
-      val o = fs.create(p, false)
-      o.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      o.close()
-    }
-    // ALL manifests legacy-shaped (restored-table scenario), mtimes
-    // young — the exact whole-log-exemption surface of the r14 ADVICE
-    val full = manifests.map(m => strip(contentOf(m)))
-    manifests.zip(full).foreach { case (m, ls) => write(m, ls) }
-    // the head manifest starts as a TORN PREFIX (half its file list)
-    // that sits stable for ~150 ms — longer than the old 2x20 ms
-    // acceptance window — before the "writer" completes it
-    val head = manifests.last
-    val headFull = full.last
-    write(head, headFull.take(headFull.length / 2))
-    spark.conf.set("spark.graft.legacyManifestMinAgeMs", "300000")
-    spark.conf.set("spark.graft.manifest.tornAwaitMs", "400")
-    val filler = new Thread(() => {
-      Thread.sleep(150)
-      write(head, headFull)
-    })
-    filler.start()
-    val t0 = System.nanoTime()
-    try {
-      // the read must return the COMPLETE content (all 80 rows), not
-      // the momentarily-stable 50-row torn prefix the old two-read
-      // acceptance would have blessed
-      assert(SnapshotTable.read(spark, path).count() === 80)
-      val elapsedMs = (System.nanoTime() - t0) / 1e6
-      assert(elapsedMs >= 400.0,
-        f"accepted after $elapsedMs%.0f ms — whole-log acceptance " +
-          "must out-wait the full tornAwaitMs stability window")
-    } finally {
-      filler.join()
-      spark.conf.unset("spark.graft.legacyManifestMinAgeMs")
-      spark.conf.unset("spark.graft.manifest.tornAwaitMs")
-    }
-  }
-
   test("registered streaming sink: creates partitioned tables, " +
       "refuses non-Append modes and layout drift") {
     import spark.implicits._
@@ -2952,116 +2894,107 @@ class SnapshotTableSpec extends SparkSpec {
     assert(kept === 0 && total > 0)
   }
 
-  test("legacy manifests (no eot marker, no witness) stay readable; " +
-      "torn modern manifests are refused") {
-    import spark.implicits._
-    val path = freshPath("legacyera")
-    SnapshotTable.create((0L until 50L).toDF("id"), path)
-    SnapshotTable.append((50L until 80L).toDF("id"), path)
+  test("retired log shapes are refused by name") {
+    val path = freshPath("retiredshapes")
+    SnapshotTable.create(spark.range(200).select(col("id")), path)   // v0
+    SnapshotTable.deleteMoR(spark, path, col("id") % 10 === 7)        // v1
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val logDir = new org.apache.hadoop.fs.Path(path, "_graft_log")
-    val manifests = fs.listStatus(logDir).map(_.getPath)
-      .filter(_.getName.endsWith(".manifest")).sortBy(_.getName)
-    def rewrite(p: org.apache.hadoop.fs.Path,
-        f: Seq[String] => Seq[String]): Unit = {
-      val in = fs.open(p)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      fs.delete(p, false)
-      val out = fs.create(p, false)
-      out.write((f(content).mkString("\n") + "\n").getBytes("UTF-8"))
-      out.close()
-    }
-    // a PRE-ERA manifest: strip both the witness and the end marker —
-    // exactly what a table written by an older library version looks
-    // like. FRESH witness-less content must be REFUSED (it is
-    // indistinguishable from an intermediate-era writer's torn or
-    // in-flight manifest — #eot predates the #wv witness, so such
-    // writers exist); the error names the opt-in
-    rewrite(manifests.last, _.filterNot(l =>
-      l.startsWith("#wv=") || l.startsWith("#eot=")))
-    spark.conf.set("spark.graft.legacyManifestMinAgeMs", "300000")
-    // short, injected refusal budget: the refusal arms should not
-    // burn the default 3 s spin each, and must not race suite load
+    val m1 = new org.apache.hadoop.fs.Path(path,
+      "_graft_log/v00000001.manifest")
+    def markers(l: String) = l.startsWith("#wv=") || l.startsWith("#eot=")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    var written: Seq[String] = Nil
+    // short refusal budget: each marker-less arm spins it out once
     spark.conf.set("spark.graft.manifest.tornAwaitMs", "400")
     try {
-      val fresh = intercept[RuntimeException] {
+      // 1. the pre-marker legacy shape — no witness, no end marker —
+      // refused however long it has been at rest
+      rewriteManifest(path, 1) { ls => written = ls; ls.filterNot(markers) }
+      fs.setTimes(m1, System.currentTimeMillis - 600000L, -1)
+      val legacy = intercept[RuntimeException] {
         SnapshotTable.read(spark, path).count()
       }
-      assert(fresh.getMessage.contains("allowLegacyManifests"))
-      // AT-REST evidence (mtime minutes old) unlocks the legacy read
-      fs.setTimes(manifests.last,
-        System.currentTimeMillis - 600000L, -1)
-      assert(SnapshotTable.read(spark, path).count() === 80)
-      // ... as does the explicit opt-in, age notwithstanding
-      fs.setTimes(manifests.last, System.currentTimeMillis, -1)
-      spark.conf.set("spark.graft.allowLegacyManifests", "true")
-      assert(SnapshotTable.read(spark, path).count() === 80)
-    } finally {
-      spark.conf.unset("spark.graft.allowLegacyManifests")
-      spark.conf.unset("spark.graft.legacyManifestMinAgeMs")
-    }
-    try {
-      // leave the manifest old so the torn-modern arm below exercises
-      // the witness path, not the age gate
-      fs.setTimes(manifests.last, System.currentTimeMillis - 600000L, -1)
-      // a TORN modern manifest: witness present, end marker missing —
-      // the reader must refuse it (bounded spin, then error). The
-      // witness is re-added: the rewrite above stripped it.
-      rewrite(manifests.last, ls => "#wv=2" +: ls.filterNot(l =>
-        l.startsWith("#wv=") || l.startsWith("#eot=")))
-      val err = intercept[RuntimeException] {
+      assert(legacy.getMessage.contains("no end-of-transaction marker") &&
+        legacy.getMessage.contains("marker-less legacy format"),
+        legacy.getMessage)
+      // 2. a torn current manifest: witness present, end marker missing
+      rewriteManifest(path, 1)(ls => "#wv=2" +: ls.filterNot(markers))
+      val torn = intercept[RuntimeException] {
         SnapshotTable.read(spark, path).count()
       }
-      assert(err.getMessage.contains("torn"))
+      assert(torn.getMessage.contains("torn"), torn.getMessage)
     } finally spark.conf.unset("spark.graft.manifest.tornAwaitMs")
+    // 3. a v1 whole-parquet deletion vector in an otherwise complete
+    // manifest: every reader refuses it, naming the ref and version
+    val v1Ref = "files/x.parquet"
+    rewriteManifest(path, 1)(_ =>
+      written.map(_.replaceAll("dv=[^;\\t]*", s"dv=$v1Ref")))
+    assert(SnapshotTable.manifestEntries(spark, path, 1)
+      .flatMap(SnapshotTable.entryDvs).distinct === Seq(v1Ref))
+    val reads: Seq[(String, () => Any)] = Seq(
+      "classic" -> (() => SnapshotTable.read(spark, path).count()),
+      "front door" -> (() =>
+        spark.read.format("graft").load(path).count()),
+      "metadata table" -> (() =>
+        SnapshotTable.metadataTable(spark, path).collect()))
+    reads.foreach { case (name, run) =>
+      val err = intercept[Exception](run())
+      val named = causes(err).collectFirst {
+        case e: IllegalStateException if e.getMessage.contains(v1Ref) => e
+      }
+      assert(named.exists(_.getMessage.contains("manifest v1")) &&
+        named.exists(_.getMessage.contains("v1 whole-parquet")),
+        s"$name: ${causes(err).map(_.getMessage).mkString(" <- ")}")
+    }
+    // the version before the forged one still reads
+    assert(SnapshotTable.read(spark, path, Some(0)).count() === 200)
   }
 
-  test("a RESTORED legacy table (all manifests witness-less, mtimes " +
-      "rewritten young) is accepted on whole-log evidence") {
-    import spark.implicits._
-    val path = freshPath("legacyrestore")
-    SnapshotTable.create((0L until 50L).toDF("id"), path)
-    SnapshotTable.append((50L until 80L).toDF("id"), path)
+  test("format contract: every writing verb emits a witnessed, " +
+      "end-marked manifest with recorded lengths and blob dv refs") {
+    val path = freshPath("formatcontract")
+    val rows = (n: Long, tag: String) =>
+      spark.range(n).select(col("id"), lit(tag).as("tag"))
+    SnapshotTable.create(rows(100, "a"), path)
+    SnapshotTable.append(rows(120, "b").filter(col("id") >= 100), path)
+    SnapshotTable.overwrite(rows(150, "c").repartition(3), path)
+    SnapshotTable.merge(Seq((3L, "m"), (400L, "m")).toDF("id", "tag"),
+      path, Seq("id"))
+    SnapshotTable.delete(spark, path, col("id") === 5L)
+    SnapshotTable.deleteMoR(spark, path, col("id") % 10 === 7)
+    val dvV = SnapshotTable.updateMoR(spark, path, col("id") % 10 === 3,
+      Map("tag" -> lit("u")))
+    assert(SnapshotTable.appendStreamBatch(
+      Seq((500L, "s")).toDF("id", "tag"), path, 0L).isDefined)
+    SnapshotTable.optimize(spark, path, targetFileBytes = 64L * 1024)
+    SnapshotTable.restore(spark, path, dvV)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val logDir = new org.apache.hadoop.fs.Path(path, "_graft_log")
-    val manifests = fs.listStatus(logDir).map(_.getPath)
-      .filter(_.getName.endsWith(".manifest")).sortBy(_.getName)
-    def rewrite(p: org.apache.hadoop.fs.Path,
-        f: Seq[String] => Seq[String]): Unit = {
-      val in = fs.open(p)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8")
+    val manifests = fs.listStatus(
+        new org.apache.hadoop.fs.Path(path, "_graft_log"))
+      .map(_.getPath).filter(_.getName.endsWith(".manifest"))
+      .sortBy(_.getName)
+    assert(manifests.length === 10)
+    var dvRefs = 0
+    manifests.zipWithIndex.foreach { case (m, v) =>
+      assert(m.getName === f"v$v%08d.manifest")
+      val in = fs.open(m)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().toList finally in.close()
-      fs.delete(p, false)
-      val out = fs.create(p, false)
-      out.write((f(content).mkString("\n") + "\n").getBytes("UTF-8"))
-      out.close()
-    }
-    // the backup/restore shape: EVERY manifest is legacy (no witness,
-    // no end marker) and every mtime is freshly rewritten — the age
-    // gate alone would refuse this table forever without the opt-in
-    manifests.foreach(m => rewrite(m, _.filterNot(l =>
-      l.startsWith("#wv=") || l.startsWith("#eot="))))
-    spark.conf.set("spark.graft.legacyManifestMinAgeMs", "300000")
-    spark.conf.set("spark.graft.manifest.tornAwaitMs", "400")
-    try {
-      assert(SnapshotTable.read(spark, path).count() === 80)
-      // counter-arm: once ANY sibling manifest is modern, young
-      // witness-less content is refused again (a mid-flight
-      // intermediate-era write in a live modern table must not ride
-      // the restore exemption)
-      rewrite(manifests.head,
-        ls => ("#wv=2" +: ls) :+ "#eot=1")
-      val err = intercept[RuntimeException] {
-        SnapshotTable.read(spark, path).count()
+      assert(lines.head === "#wv=2", s"v$v line 1")
+      assert(lines(1).startsWith("#ts="), s"v$v line 2")
+      assert(lines.last === "#eot=1", s"v$v last line")
+      SnapshotTable.manifestEntries(spark, path, v).foreach { e =>
+        assert(e.contains("len=f!"), s"v$v entry without length: $e")
+        val dvs = SnapshotTable.entryDvs(e)
+        assert(dvs.forall(graft.sources.DvSidecar.isBlobRef),
+          s"v$v non-blob dv ref: $e")
+        dvRefs += dvs.size
       }
-      assert(err.getMessage.contains("allowLegacyManifests"))
-    } finally {
-      spark.conf.unset("spark.graft.legacyManifestMinAgeMs")
-      spark.conf.unset("spark.graft.manifest.tornAwaitMs")
     }
+    assert(dvRefs > 0, "no verb wrote a deletion vector")
   }
 
   test("a just-created, still-empty manifest is awaited, not " +
@@ -4446,93 +4379,6 @@ class SnapshotTableSpec extends SparkSpec {
       s"vacuum must keep exactly the referenced .dvs sidecars " +
         s"(disk $onDisk vs referenced $live)")
     assert(spark.read.format("graft").load(path).count() === 80000)
-  }
-
-  test("legacy v1 whole-parquet deletion vectors still read, classic " +
-      "and front door") {
-    import graft.sources.DvSidecar
-    // forge the legacy shape: a table whose dv= refs point at a
-    // shared (file,pos) parquet — what pre-r14 MoR commits wrote.
-    // Only legacy-era tables carry these, so the manifest is made
-    // legacy too (witness stripped, aged) and read via the opt-in.
-    val path = freshPath("v1dv")
-    SnapshotTable.create(spark.range(2000)
-      .select(col("id"), (col("id") * 7).as("v"))
-      .repartitionByRange(4, col("id")).sortWithinPartitions("id"), path)
-    SnapshotTable.deleteMoR(spark, path, col("id") % 10 === 7)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // the same coordinates as the committed blobs, as a v1 parquet
-    val dataFiles = SnapshotTable.manifestEntries(spark, path, 0)
-      .map(e => s"$path/${SnapshotTable.entryPath(e)}")
-    val tmp = freshPath("v1dv_stage")
-    spark.read.parquet(dataFiles: _*)
-      .select(col("_metadata.file_name").as("file"),
-        col("_metadata.row_index").as("pos"), col("id"))
-      .filter(col("id") % 10 === 7).drop("id")
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.startsWith("part-")).get
-    val v1Rel = "files/legacy_v1_dv.parquet"
-    assert(fs.rename(new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-      new org.apache.hadoop.fs.Path(path, v1Rel)))
-    // point every dv= item at the v1 parquet; legacy-ify the manifest
-    val m1 = new org.apache.hadoop.fs.Path(path,
-      "_graft_log/v00000001.manifest")
-    val in = fs.open(m1)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    fs.delete(m1, false)
-    val out = fs.create(m1, false)
-    out.write((lines.filterNot(l =>
-        l.startsWith("#wv=") || l.startsWith("#eot="))
-      .map(_.replaceAll("dv=[^;\\t]*", s"dv=$v1Rel"))
-      .mkString("\n") + "\n").getBytes("UTF-8"))
-    out.close()
-    fs.setTimes(m1, System.currentTimeMillis - 600000L, -1)
-    spark.conf.set("spark.graft.allowLegacyManifests", "true")
-    try {
-      val refs = SnapshotTable.manifestEntries(spark, path, 1)
-        .flatMap(SnapshotTable.entryDvs).distinct
-      assert(refs === Seq(v1Rel) && !DvSidecar.isBlobRef(refs.head))
-      // classic reader: broadcast-masked anti-join
-      assert(SnapshotTable.read(spark, path).count() === 1800)
-      assert(SnapshotTable.read(spark, path)
-        .filter(col("id") % 10 === 7).count() === 0)
-      // front door: the v1 broadcast keeps the columnar scan
-      val fd = spark.read.format("graft").load(path)
-      assert(fd.count() === 1800)
-      assert(fd.queryExecution.executedPlan.toString
-        .contains("FileScan parquet"))
-      assert(fd.agg(sum(col("v"))).head.getLong(0) ===
-        spark.range(2000).filter(col("id") % 10 =!= 7)
-          .agg(sum(col("id") * 7)).head.getLong(0))
-      // UPGRADE: one metadata-only commit folds the v1 vector into
-      // per-file v2 blobs — rows bit-identical, the change feed emits
-      // NOTHING across the commit, no v1 ref survives, and the v2
-      // head no longer needs the broadcast-bounded mask path
-      val expectSum = spark.range(2000).filter(col("id") % 10 =!= 7)
-        .agg(sum(col("id") * 7)).head.getLong(0)
-      val v2 = SnapshotTable.upgradeDeletionVectors(spark, path)
-      assert(v2 === 2)
-      val refs2 = SnapshotTable.manifestEntries(spark, path, 2)
-        .flatMap(SnapshotTable.entryDvs).distinct
-      assert(refs2.nonEmpty && refs2.forall(DvSidecar.isBlobRef),
-        s"upgrade left non-blob refs: $refs2")
-      assert(SnapshotTable.read(spark, path).count() === 1800)
-      assert(SnapshotTable.read(spark, path)
-        .filter(col("id") % 10 === 7).count() === 0)
-      assert(SnapshotTable.changes(spark, path, 1, Some(2)).count() === 0,
-        "a metadata-only DV upgrade fabricated CDC rows")
-      val fd2 = spark.read.format("graft").load(path)
-      assert(fd2.queryExecution.executedPlan.toString
-        .contains("FileScan parquet"))
-      assert(fd2.agg(sum(col("v"))).head.getLong(0) === expectSum)
-      // idempotent: a second call commits nothing
-      assert(SnapshotTable.upgradeDeletionVectors(spark, path) === 2)
-      // time travel to the v1 era still reads through the old vector
-      assert(SnapshotTable.read(spark, path, Some(1)).count() === 1800)
-    } finally spark.conf.unset("spark.graft.allowLegacyManifests")
   }
 
   test("multi-file deletion vectors: dv= comma list round-trips") {

@@ -1,0 +1,20 @@
+#!/usr/bin/env bash
+# Prints the four size counts a simplicity change reports before and
+# after: src/main Scala lines, distinct spark.graft.* options, distinct
+# SPARK_GRAFT_* env names, and SparkSession.builder() calls (comment
+# lines excluded).
+#
+# Usage: tools/simplicity_counts.sh [repo-dir]   (default: this repo)
+set -euo pipefail
+cd "${1:-$(dirname "$0")/..}"
+
+lines=$(find src/main -name '*.scala' | xargs cat | wc -l)
+options=$(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/main | sort -u | wc -l)
+envs=$(grep -rhoE 'SPARK_GRAFT_[A-Z0-9_]+' src/main | sort -u | wc -l)
+builders=$(grep -rn 'SparkSession.builder()' src/main |
+  grep -cvE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)' || true)
+
+echo "src/main Scala lines:        $lines"
+echo "spark.graft.* options:       $options"
+echo "SPARK_GRAFT_* names:         $envs"
+echo "SparkSession.builder() calls: $builders"
