@@ -96,7 +96,7 @@ object Aggregates {
     // block fails the job instead of recomputing differently.
     val ranged = df.repartitionByRange(parts, sortCols: _*)
       .withColumn("__part", spark_partition_id())
-      .barrier(pinned = true)
+      .barrier()
     // cast the per-partition totals explicitly: sum() of a DoubleType
     // value column returns DoubleType and getLong would throw; an
     // all-null partition sums to null. The running-sum output keeps the

@@ -480,16 +480,15 @@ object Dedup {
       // DRIVER dies rendering exponentially-sized plan trees around
       // diameter ~15, long before the executors feel anything.
       // Iterative dataflow rule: per-round driver cost must be O(1) in
-      // round count. (On a cluster, spark.graft.barrier — or a set
-      // checkpoint dir — makes every round's barrier a reliable
-      // checkpoint; localCheckpoint blocks don't survive executor loss.)
+      // round count. (On a cluster, a set checkpoint dir makes every
+      // round's barrier a reliable checkpoint; localCheckpoint blocks
+      // don't survive executor loss.)
       val merged = labels.join(neighborMin, Seq("id"), "left")
         .barrier()
       changed = merged.filter(col("nlabel") < col("label")).count()
       if (changed == 0) {
         // the loop exits with labels still reading the PREVIOUS frame,
         // which therefore stays live; this round's frame is dead
-        // (release is a no-op except under diskPersist)
         graft.Barrier.release(merged)
       } else {
         // labels moves onto this round's frame below, so the previous

@@ -38,8 +38,8 @@ object Graph {
     require(iterations >= 1 && dampingBp >= 0 && dampingBp <= 10000)
     // materialize the edge list ONCE: every iteration joins it, and an
     // un-materialized lineage would re-run the caller's (possibly
-    // expensive) edge derivation per round. On a cluster set
-    // spark.graft.barrier (or a checkpoint dir) for a durable form.
+    // expensive) edge derivation per round. On a cluster set a
+    // checkpoint dir for a durable form.
     val e = edges.select(col("src"), col("dst")).barrier()
     // deg and nodes are re-read EVERY iteration (deg in the contrib
     // join, nodes in the rank rebuild): materialize each once instead
@@ -119,7 +119,7 @@ object Graph {
     // orientation-invariant, so results are id-independent.
     val ids = deg
       .withColumn("nid", monotonically_increasing_id())
-      .barrier(pinned = true)
+      .barrier()
     // orient each edge from the endpoint with the smaller (deg, nid)
     // pair — a total order, so orientation is acyclic; carry the
     // destination's rank so wedges can be ordered by the SAME order
@@ -214,7 +214,7 @@ object Graph {
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .barrier()
       // the previous round's frame is dead once this round is
-      // materialized (no-op except under diskPersist)
+      // materialized
       graft.Barrier.release(prev)
     }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
@@ -271,6 +271,9 @@ object Graph {
         .select(col("node"), col("dist"))
       dist = merged.select(col("node"), col("dist"))
     }
+    // every round's frame is materialized past the edge join, so the
+    // result no longer reads the edge barrier either
+    graft.Barrier.release(e)
     dist
   }
 

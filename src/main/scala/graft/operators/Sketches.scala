@@ -383,8 +383,8 @@ object Sketches {
     // aggregate and once in the selection filter, because the two
     // consumers are separate scans of `df`. The quantile needs only
     // (stratum, value, hash): project those three NARROW columns,
-    // materialize once ([[graft.Barrier]], ~20 B/row — disk-backed or
-    // durable at cluster scale via spark.graft.barrier), and run both
+    // materialize once ([[graft.Barrier]], ~20 B/row — durable at
+    // cluster scale once a checkpoint dir is set), and run both
     // the threshold aggregate and the selection filter over the
     // materialized frame — one md5 per row, one base-table scan.
     // Same threshold, same sampled rows, same percentile input as the

@@ -268,8 +268,8 @@ object GraftSqlMaintenance {
   * committing NOTHING, which the result row reports as a null
   * version). The ZORDER form is the full re-layout
   * ([[SnapshotTable.optimizeZOrder]] — partition-aware z-curve).
-  * Target file size from `spark.graft.optimize.targetFileBytes`
-  * (default 128 MiB — small testing tables simply land one file). */
+  * Target file size is a fixed 128 MiB (small tables simply land one
+  * file). */
 case class GraftOptimizeCommand(target: GraftSqlMaintenance.Target,
     zCols: Seq[String]) extends LeafRunnableCommand {
   import GraftSqlMaintenance._
@@ -278,9 +278,7 @@ case class GraftOptimizeCommand(target: GraftSqlMaintenance.Target,
     attr("version", IntegerType))
   override def run(spark: SparkSession): Seq[Row] = {
     val (path, table) = GraftSqlMaintenance.resolve(spark, target)
-    val targetBytes = spark.conf
-      .getOption("spark.graft.optimize.targetFileBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    val targetBytes = 128L * 1024 * 1024
     val (op, version) =
       if (zCols.nonEmpty)
         ("OPTIMIZE-ZORDER",

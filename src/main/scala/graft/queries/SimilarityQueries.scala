@@ -425,7 +425,7 @@ object SimilarityQueries {
           val upd = GraphAnn.insert(s.read.parquet(ipath), b,
               "vec_id", "embedding", nShards = 4, m = 8, efC = 48)
             .filter(col("shard").isin(touched: _*))
-            .barrier(pinned = true)
+            .barrier()
           upd.write.partitionBy("shard").mode("overwrite")
             .option("partitionOverwriteMode", "dynamic").parquet(ipath)
           ()
@@ -541,7 +541,7 @@ object SimilarityQueries {
                   .select(col("vec_id"), col("embedding")),
                 "vec_id", "embedding", nShards = 4, m = 8, efC = 48)
             val upd = idx.filter(col("shard").isin(touched: _*))
-              .barrier(pinned = true)
+              .barrier()
             upd.write.partitionBy("shard").mode("overwrite")
               .option("partitionOverwriteMode", "dynamic").parquet(ipath)
             ()

@@ -61,15 +61,16 @@ object IncrementalView {
       .select(col(groupCol),
         (coalesce(col("old_n"), lit(0L)) + col("dn")).as("n"),
         (coalesce(col("old_total"), lit(0L)) + col("dv")).as("total"))
-      .barrier(pinned = true) // two consumers below; compute the join once
+      .barrier() // two consumers below; compute the join once
     // upserts and emptied-group removals ride ONE merge rewrite —
     // fully distributed, no driver-side key list, no second pass
-    SnapshotTable.merge(
+    try SnapshotTable.merge(
       changed.filter(col("n") =!= 0L)
         .select(col(groupCol), col("n"), col("total")),
       aggPath, Seq(groupCol),
       removeKeys = Some(changed.filter(col("n") === 0L)
         .select(col(groupCol))))
+    finally graft.Barrier.release(changed)
   }
 
   /** Refresh a count/sum/min/max view at `aggPath` (schema: groupCol,
@@ -132,62 +133,64 @@ object IncrementalView {
       .withColumn("total", coalesce(col("old_total"), lit(0L)) + col("dv"))
       .withColumn("invalid",
         (minInvalid || maxInvalid) && col("n") > 0L)
-      .barrier(pinned = true) // three consumers; compute the join once
-    val exact = joined.filter(!col("invalid") && col("n") > 0L)
-      .select(col(groupCol), col("n"), col("total"),
-        least(coalesce(col("old_mn"), col("ins_mn")),
-          coalesce(col("ins_mn"), col("old_mn"))).as("mn"),
-        greatest(coalesce(col("old_mx"), col("ins_mx")),
-          coalesce(col("ins_mx"), col("old_mx"))).as("mx"))
-    val invalidated = joined.filter(col("invalid"))
-      .select(col(groupCol), col("n"), col("total"))
-    // count/sum stay delta-exact even for invalidated groups; only
-    // min/max come from the restricted base scan (at the feed's end
-    // version, so a concurrent later commit cannot skew the view).
-    // The scan is DOUBLY restricted: manifest entries prune by the
-    // invalidated KEYS — an exact bounded IN-list when the groups are
-    // few (the common localized-churn case: two far-apart invalidated
-    // groups no longer keep every file between them, each IN element
-    // range-tests independently), falling back to the [min, max]
-    // envelope when they are many (a huge IN-list would cost more to
-    // evaluate per file than it prunes) — and the semi-join keeps
-    // exactly the invalidated groups' rows. The gate is one
-    // approx_count_distinct in the same 1-row aggregate, so the
-    // driver collect stays bounded by construction. No invalidation →
-    // no base I/O at all.
-    val invAgg = invalidated.agg(min(col(groupCol)),
-      max(col(groupCol)),
-      approx_count_distinct(col(groupCol))).head()
-    val (recomputed, filesKept, filesTotal) =
-      if (invAgg.isNullAt(0))
-        (exact.limit(0), 0,
-          SnapshotTable.fileCount(spark, basePath, Some(toV)))
-      else {
-        val restrictPred =
-          if (invAgg.getLong(2) <= 64L) {
-            val ks = invalidated.select(col(groupCol)).distinct()
-              .collect().toSeq.map(_.get(0))
-            col(groupCol).isin(ks: _*)
-          } else
-            col(groupCol) >= lit(invAgg.get(0)) &&
-              col(groupCol) <= lit(invAgg.get(1))
-        val (restricted, kept, total) = SnapshotTable.readWherePruned(
-          spark, basePath, restrictPred, Some(toV))
-        val rec = restricted
-          .select(col(groupCol), v.as("__v"))
-          .join(invalidated.select(col(groupCol)), Seq(groupCol),
-            "left_semi")
-          .groupBy(col(groupCol))
-          .agg(min(col("__v")).as("mn"), max(col("__v")).as("mx"))
-          .join(invalidated, Seq(groupCol))
-          .select(col(groupCol), col("n"), col("total"), col("mn"),
-            col("mx"))
-        (rec, kept, total)
-      }
-    val ver = SnapshotTable.merge(exact.unionByName(recomputed), aggPath,
-      Seq(groupCol),
-      removeKeys = Some(joined.filter(col("n") === 0L)
-        .select(col(groupCol))))
-    (ver, filesKept, filesTotal)
+      .barrier() // three consumers; compute the join once
+    try {
+      val exact = joined.filter(!col("invalid") && col("n") > 0L)
+        .select(col(groupCol), col("n"), col("total"),
+          least(coalesce(col("old_mn"), col("ins_mn")),
+            coalesce(col("ins_mn"), col("old_mn"))).as("mn"),
+          greatest(coalesce(col("old_mx"), col("ins_mx")),
+            coalesce(col("ins_mx"), col("old_mx"))).as("mx"))
+      val invalidated = joined.filter(col("invalid"))
+        .select(col(groupCol), col("n"), col("total"))
+      // count/sum stay delta-exact even for invalidated groups; only
+      // min/max come from the restricted base scan (at the feed's end
+      // version, so a concurrent later commit cannot skew the view).
+      // The scan is DOUBLY restricted: manifest entries prune by the
+      // invalidated KEYS — an exact bounded IN-list when the groups are
+      // few (the common localized-churn case: two far-apart invalidated
+      // groups no longer keep every file between them, each IN element
+      // range-tests independently), falling back to the [min, max]
+      // envelope when they are many (a huge IN-list would cost more to
+      // evaluate per file than it prunes) — and the semi-join keeps
+      // exactly the invalidated groups' rows. The gate is one
+      // approx_count_distinct in the same 1-row aggregate, so the
+      // driver collect stays bounded by construction. No invalidation →
+      // no base I/O at all.
+      val invAgg = invalidated.agg(min(col(groupCol)),
+        max(col(groupCol)),
+        approx_count_distinct(col(groupCol))).head()
+      val (recomputed, filesKept, filesTotal) =
+        if (invAgg.isNullAt(0))
+          (exact.limit(0), 0,
+            SnapshotTable.fileCount(spark, basePath, Some(toV)))
+        else {
+          val restrictPred =
+            if (invAgg.getLong(2) <= 64L) {
+              val ks = invalidated.select(col(groupCol)).distinct()
+                .collect().toSeq.map(_.get(0))
+              col(groupCol).isin(ks: _*)
+            } else
+              col(groupCol) >= lit(invAgg.get(0)) &&
+                col(groupCol) <= lit(invAgg.get(1))
+          val (restricted, kept, total) = SnapshotTable.readWherePruned(
+            spark, basePath, restrictPred, Some(toV))
+          val rec = restricted
+            .select(col(groupCol), v.as("__v"))
+            .join(invalidated.select(col(groupCol)), Seq(groupCol),
+              "left_semi")
+            .groupBy(col(groupCol))
+            .agg(min(col("__v")).as("mn"), max(col("__v")).as("mx"))
+            .join(invalidated, Seq(groupCol))
+            .select(col(groupCol), col("n"), col("total"), col("mn"),
+              col("mx"))
+          (rec, kept, total)
+        }
+      val ver = SnapshotTable.merge(exact.unionByName(recomputed), aggPath,
+        Seq(groupCol),
+        removeKeys = Some(joined.filter(col("n") === 0L)
+          .select(col(groupCol))))
+      (ver, filesKept, filesTotal)
+    } finally graft.Barrier.release(joined)
   }
 }

@@ -1852,41 +1852,43 @@ object SnapshotTable {
     import spark.implicits._
     val grouped = dvRows.groupBy(col("file"))
       .agg(sort_array(collect_set(col("pos"))).as("poss"))
-      .barrier(pinned = true)
-    val total = grouped.agg(sum(sizeOf(col("poss"))))
-      .head.getLong(0)
-    val nParts = math.min(256L, math.max(1L,
-      (total + DvRowsPerFile - 1) / DvRowsPerFile)).toInt
-    val filesUri = fsOf(spark, new Path(path))
-      .makeQualified(filesDir(path)).toString
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    grouped.repartition(nParts, col("file")).as[(String, Seq[Long])]
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          // one packed sidecar per task, uuid-named (task retries
-          // write fresh names; orphans of failed attempts vacuum away
-          // unreferenced)
-          val dir = new Path(filesUri)
-          val fsE = dir.getFileSystem(conf.value)
-          val name = s"${java.util.UUID.randomUUID()}.dvs"
-          val out = fsE.create(new Path(dir, name), false)
-          val descs = scala.collection.mutable.ArrayBuffer
-            .empty[(String, String)]
-          var off = 0L
-          try {
-            it.foreach { case (file, poss) =>
-              val blob = DvSidecar.encode(poss.toArray)
-              out.write(blob)
-              descs += ((file, DvSidecar.Desc(s"files/$name", off,
-                blob.length, poss.length).render))
-              off += blob.length
-            }
-          } finally out.close()
-          descs.iterator
-        }
-      }.collect().toMap
+      .barrier()
+    try {
+      val total = grouped.agg(sum(sizeOf(col("poss"))))
+        .head.getLong(0)
+      val nParts = math.min(256L, math.max(1L,
+        (total + DvRowsPerFile - 1) / DvRowsPerFile)).toInt
+      val filesUri = fsOf(spark, new Path(path))
+        .makeQualified(filesDir(path)).toString
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      grouped.repartition(nParts, col("file")).as[(String, Seq[Long])]
+        .mapPartitions { it =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            // one packed sidecar per task, uuid-named (task retries
+            // write fresh names; orphans of failed attempts vacuum away
+            // unreferenced)
+            val dir = new Path(filesUri)
+            val fsE = dir.getFileSystem(conf.value)
+            val name = s"${java.util.UUID.randomUUID()}.dvs"
+            val out = fsE.create(new Path(dir, name), false)
+            val descs = scala.collection.mutable.ArrayBuffer
+              .empty[(String, String)]
+            var off = 0L
+            try {
+              it.foreach { case (file, poss) =>
+                val blob = DvSidecar.encode(poss.toArray)
+                out.write(blob)
+                descs += ((file, DvSidecar.Desc(s"files/$name", off,
+                  blob.length, poss.length).render))
+                off += blob.length
+              }
+            } finally out.close()
+            descs.iterator
+          }
+        }.collect().toMap
+    } finally graft.Barrier.release(grouped)
   }
 
   /** Prior deletion coordinates of the `affected` entries of version
@@ -2499,206 +2501,208 @@ object SnapshotTable {
     val keys = updates.select(keyCols.map(col): _*)
       .unionByName(removeKeys.getOrElse(
         updates.select(keyCols.map(col): _*).limit(0)))
-      .distinct().barrier(pinned = true)
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    // Level-1 pruning, NO data scan, two metadata signals per entry:
-    //  (a) range: EVERY integral/date key column's cached [min,max]
-    //      must intersect the update keys' overall range (entries that
-    //      predate the stats format fall back to one footer read, on
-    //      the first key column only);
-    //  (b) partition membership: a key column that is also a PARTITION
-    //      column prunes by exact value-set membership — the distinct
-    //      update values (bounded by the partition count) vs the
-    //      entry's directory value.
-    // Matching is the semi-join's plain equality, so a key column whose
-    // update values are ALL null can match no current row at all.
-    // On a key-clustered or key-partitioned layout only the straddling
-    // files survive, before any row is read.
-    import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
-    val rangedKeys = keyCols.filter(k =>
-      updates.schema(k).dataType match {
-        case IntegerType | LongType | DateType => true
+      .distinct().barrier()
+    try {
+      val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
+      // Level-1 pruning, NO data scan, two metadata signals per entry:
+      //  (a) range: EVERY integral/date key column's cached [min,max]
+      //      must intersect the update keys' overall range (entries that
+      //      predate the stats format fall back to one footer read, on
+      //      the first key column only);
+      //  (b) partition membership: a key column that is also a PARTITION
+      //      column prunes by exact value-set membership — the distinct
+      //      update values (bounded by the partition count) vs the
+      //      entry's directory value.
+      // Matching is the semi-join's plain equality, so a key column whose
+      // update values are ALL null can match no current row at all.
+      // On a key-clustered or key-partitioned layout only the straddling
+      // files survive, before any row is read.
+      import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
+      val rangedKeys = keyCols.filter(k =>
+        updates.schema(k).dataType match {
+          case IntegerType | LongType | DateType => true
+          case _ => false
+        })
+      // same type guard as mayMatch's partComparable: only strings and
+      // integrals render identically between partitionPathValue(v) and
+      // Spark's partitioned-writer directory names. A timestamp key
+      // renders '... 00:00:00.0' via toString but the writer's dir omits
+      // the fraction — membership would always fail, every matching
+      // entry would be pruned, and merge would INSERT DUPLICATE keys
+      // instead of updating. Skipping the prune for such types is merely
+      // less file-skipping; never wrong.
+      val partPrunable: types.DataType => Boolean = {
+        case types.StringType | types.IntegerType | types.LongType |
+            types.ShortType | types.ByteType => true
         case _ => false
-      })
-    // same type guard as mayMatch's partComparable: only strings and
-    // integrals render identically between partitionPathValue(v) and
-    // Spark's partitioned-writer directory names. A timestamp key
-    // renders '... 00:00:00.0' via toString but the writer's dir omits
-    // the fraction — membership would always fail, every matching
-    // entry would be pruned, and merge would INSERT DUPLICATE keys
-    // instead of updating. Skipping the prune for such types is merely
-    // less file-skipping; never wrong.
-    val partPrunable: types.DataType => Boolean = {
-      case types.StringType | types.IntegerType | types.LongType |
-          types.ShortType | types.ByteType => true
-      case _ => false
-    }
-    // the distinct-value collect is gated by approx_count_distinct:
-    // an update spanning ~10^6 partition values would otherwise bloat
-    // the driver, and a membership set that large prunes nothing a
-    // range test doesn't — skip the prune (sound: keep more files)
-    val partKeyValues: Map[String, Set[String]] =
-      partitioning(spark, path).filter(k => keyCols.contains(k) &&
-          partPrunable(updates.schema(k).dataType)).flatMap { k =>
-        import org.apache.spark.sql.functions.approx_count_distinct
-        val approx = keys.agg(approx_count_distinct(col(k)))
-          .head().getLong(0)
-        if (approx > 10000L) None
-        else Some(k -> keys.select(col(k)).distinct().collect()
-          .map(r => partitionPathValue(r.get(0))).toSet)
-      }.toMap
-    val asLong: Any => Long = {
-      case i: java.lang.Integer => i.toLong
-      case l: java.lang.Long => l
-      case d: java.sql.Date => d.toLocalDate.toEpochDay
-    }
-    val ranges: Seq[(String, (Long, Long))] =
-      if (rangedKeys.isEmpty) Seq.empty
-      else {
-        val mm = keys.agg(
-          rangedKeys.flatMap(k => Seq(min(col(k)), max(col(k)))).head,
-          rangedKeys.flatMap(k => Seq(min(col(k)), max(col(k)))).tail: _*)
-          .collect()(0)
-        rangedKeys.zipWithIndex.flatMap { case (k, i) =>
-          if (mm.isNullAt(2 * i)) None
-          else Some(k -> (asLong(mm.get(2 * i)), asLong(mm.get(2 * i + 1))))
+      }
+      // the distinct-value collect is gated by approx_count_distinct:
+      // an update spanning ~10^6 partition values would otherwise bloat
+      // the driver, and a membership set that large prunes nothing a
+      // range test doesn't — skip the prune (sound: keep more files)
+      val partKeyValues: Map[String, Set[String]] =
+        partitioning(spark, path).filter(k => keyCols.contains(k) &&
+            partPrunable(updates.schema(k).dataType)).flatMap { k =>
+          import org.apache.spark.sql.functions.approx_count_distinct
+          val approx = keys.agg(approx_count_distinct(col(k)))
+            .head().getLong(0)
+          if (approx > 10000L) None
+          else Some(k -> keys.select(col(k)).distinct().collect()
+            .map(r => partitionPathValue(r.get(0))).toSet)
+        }.toMap
+      val asLong: Any => Long = {
+        case i: java.lang.Integer => i.toLong
+        case l: java.lang.Long => l
+        case d: java.sql.Date => d.toLocalDate.toEpochDay
+      }
+      val ranges: Seq[(String, (Long, Long))] =
+        if (rangedKeys.isEmpty) Seq.empty
+        else {
+          val mm = keys.agg(
+            rangedKeys.flatMap(k => Seq(min(col(k)), max(col(k)))).head,
+            rangedKeys.flatMap(k => Seq(min(col(k)), max(col(k)))).tail: _*)
+            .collect()(0)
+          rangedKeys.zipWithIndex.flatMap { case (k, i) =>
+            if (mm.isNullAt(2 * i)) None
+            else Some(k -> (asLong(mm.get(2 * i)), asLong(mm.get(2 * i + 1))))
+          }
         }
-      }
-    // string keys prune the same way via the cached byte bounds —
-    // Spark's min/max over strings IS the unsigned byte order the
-    // bounds are stored in, so non-ASCII keys prune too
-    val stringKeys = keyCols.filter(k =>
-      updates.schema(k).dataType == org.apache.spark.sql.types.StringType)
-    val strRanges: Seq[(String, (Array[Byte], Array[Byte]))] =
-      stringKeys.flatMap { k =>
-        val mm = keys.agg(min(col(k)), max(col(k))).collect()(0)
-        if (mm.isNullAt(0)) None
-        else Some(k -> (
-          mm.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          mm.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      }
-    // stored schema carries the column-mapping metadata read() strips;
-    // stats/footers are keyed by PHYSICAL names
-    val storedOpt = storedEarly
-    val log2phys: Map[String, String] = storedOpt.toSeq
-      .flatMap(_.fields.map(f => f.name -> physName(f))).toMap
-    def levelOneMayHold(entry: String, footerCheck: Boolean): Boolean = {
-      val st = relabelStats(entryStats(entry), storedOpt)
-      val rangeOk = ranges.forall { case (k, (lo, hi)) =>
-        st.get(k) match {
-          case Some((mn, mx)) => mn <= hi && mx >= lo
-          case None if footerCheck && k == rangedKeys.head =>
-            fileKeyRangeMayOverlap(spark,
-              new Path(path, entryPath(entry)),
-              log2phys.getOrElse(k, k), lo, hi)
-          case None => true // no cached stats: keep
+      // string keys prune the same way via the cached byte bounds —
+      // Spark's min/max over strings IS the unsigned byte order the
+      // bounds are stored in, so non-ASCII keys prune too
+      val stringKeys = keyCols.filter(k =>
+        updates.schema(k).dataType == org.apache.spark.sql.types.StringType)
+      val strRanges: Seq[(String, (Array[Byte], Array[Byte]))] =
+        stringKeys.flatMap { k =>
+          val mm = keys.agg(min(col(k)), max(col(k))).collect()(0)
+          if (mm.isNullAt(0)) None
+          else Some(k -> (
+            mm.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8),
+            mm.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
         }
-      }
-      val sst = relabelStats(entryStringStats(entry), storedOpt)
-      val strOk = strRanges.forall { case (k, (lo, hi)) =>
-        sst.get(k) match {
-          case Some((mn, mx)) => bytesLe(mn, hi) && bytesLe(lo, mx)
-          case None => true
+      // stored schema carries the column-mapping metadata read() strips;
+      // stats/footers are keyed by PHYSICAL names
+      val storedOpt = storedEarly
+      val log2phys: Map[String, String] = storedOpt.toSeq
+        .flatMap(_.fields.map(f => f.name -> physName(f))).toMap
+      def levelOneMayHold(entry: String, footerCheck: Boolean): Boolean = {
+        val st = relabelStats(entryStats(entry), storedOpt)
+        val rangeOk = ranges.forall { case (k, (lo, hi)) =>
+          st.get(k) match {
+            case Some((mn, mx)) => mn <= hi && mx >= lo
+            case None if footerCheck && k == rangedKeys.head =>
+              fileKeyRangeMayOverlap(spark,
+                new Path(path, entryPath(entry)),
+                log2phys.getOrElse(k, k), lo, hi)
+            case None => true // no cached stats: keep
+          }
         }
+        val sst = relabelStats(entryStringStats(entry), storedOpt)
+        val strOk = strRanges.forall { case (k, (lo, hi)) =>
+          sst.get(k) match {
+            case Some((mn, mx)) => bytesLe(mn, hi) && bytesLe(lo, mx)
+            case None => true
+          }
+        }
+        val pv = entryPartitionValues(entryPath(entry))
+        val partOk = partKeyValues.forall { case (k, set) =>
+          pv.get(k).forall(set.contains)
+        }
+        rangeOk && strOk && partOk
       }
-      val pv = entryPartitionValues(entryPath(entry))
-      val partOk = partKeyValues.forall { case (k, set) =>
-        pv.get(k).forall(set.contains)
-      }
-      rangeOk && strOk && partOk
-    }
-    val candidates: Seq[String] =
-      if (ranges.size < rangedKeys.size) Seq.empty // an all-null key col
-      else manifest.filter(levelOneMayHold(_, footerCheck = true))
-    // Level-2 pruning, exact: a distributed LEFT SEMI join of the
-    // candidate files' rows (key columns only) against the distinct
-    // update keys — only matched file NAMES reach the driver.
-    // reads of SUBSETS of the table's files go through the stored
-    // schema too: a file that predates an added column must read it
-    // as null here exactly as it does in read()
-    val tableSchema = storedOpt.orElse(Some(currentFallback.schema))
-    val affectedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else readEntriesDv(spark, path, readV, tableSchema, candidates,
-          keepRowId = true)
-        .select(col("__file") +: keyCols.map(col): _*)
-        .join(keys, keyCols, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-    val affected = manifest.filter(touched)
-    // clean segments pass through BY REFERENCE (O(churn) commit, no
-    // re-segmentation); only dirty segments' survivors and inline
-    // lines re-enter the list as loose entries
-    val dirtySegs = tagged.iterator.collect {
-      case (e, Some(sr)) if touched(e) => sr }.toSet
-    val keptRefs0 = readManifestRefs(fs, path, readV).filter(l =>
-      l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-    val loose0 = tagged.collect {
-      case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-    // a widened column's blooms were hashed from the NARROW type —
-    // carrying them would false-negative on widened probes (same
-    // hazard as widenColumn); strip from untouched lines and sidecars
-    val physWidened = widenedCols.map(n =>
-      physName(baseSt(baseSt.fieldIndex(n))))
-    val keptRefs =
-      if (physWidened.isEmpty) keptRefs0
-      else keptRefs0.map(r => physWidened.foldLeft(r)(
-        (acc, p2) => stripSidecarBloom(fs, path, acc, p2)))
-    val loose =
-      if (physWidened.isEmpty) loose0
-      else loose0.map(l => physWidened.foldLeft(l)(
-        (acc, p2) => stripBloomItem(acc, p2)))
-    // survivors read with the OLD schema (their files carry the old
-    // physical names and narrow types), then project up to the
-    // evolved one: widened columns cast, added columns null-backfill
-    import org.apache.spark.sql.functions.lit
-    def toEvolved(df: DataFrame): DataFrame = df.select(
-      evolvedSt.fields.toSeq.map(f =>
-        (if (baseSt.fieldNames.contains(f.name)) col(f.name)
-         else lit(null)).cast(nullifyAny(f.dataType)).as(f.name)): _*)
-    val updatesAligned = updates.select(evolvedSt.fields.toSeq.map(f =>
-      col(f.name).cast(nullifyAny(f.dataType)).as(f.name)): _*)
-    // stage ~one output file per rewritten input file (+1 for the
-    // updates), not one per shuffle partition — a 1-file point update
-    // must not shatter into 32 slivers
-    val rewritten =
-      if (affected.isEmpty) updatesAligned
-      else toEvolved(readEntriesDv(spark, path, readV, tableSchema, affected)
-        .join(keys, keyCols, "left_anti"))
-        .unionByName(updatesAligned)
-    val staged = stage(
-      toPhysical(rewritten.coalesce(affected.size + 1), Some(evolvedSt)),
-      path, partitioning(spark, path))
-    // conflict evidence: racer-added files conflict when the level-1
-    // key test cannot refute them (no footer reads on this path — an
-    // absent stat conservatively aborts); all-null key columns match
-    // no row at all, so nothing a racer adds can conflict. A
-    // schema-evolving merge stays abort-only: a rebase would rebuild
-    // its untouched lines from the latest manifest and lose the
-    // widened column's bloom strip.
-    val mayConflict: String => Boolean =
-      if (ranges.size < rangedKeys.size) _ => false
-      else levelOneMayHold(_, footerCheck = false)
-    val evolveMeta =
-      if (evolveSchema) schemaMeta(evolvedSt)
-      else Map.empty[String, String]
-    // the merge KEYS ride the commit meta so the change feed can pair
-    // a matched row's delete+insert sides into update pre/post images.
-    // ALWAYS written (meta is inherited commit-over-commit — omitting
-    // the key would leak a PREVIOUS merge's keys onto this commit);
-    // empty = unpairable (a pathological comma-bearing column name the
-    // meta list grammar cannot represent — the feed then keeps plain
-    // insert/delete tags for this commit)
-    val keyMeta = Map("mergeKeys" ->
-      (if (keyCols.exists(_.contains(","))) ""
-       else keyCols.mkString(",")))
-    commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
-      Map("op" -> "MERGE") ++ keyMeta ++ evolveMeta ++ meta,
-      resolve = if (evolveSchema) None
-        else Some(ConflictSpec(readV, manifest.toSet,
-          manifest.iterator.map(entryPath).toSet, affected, staged,
-          mayConflict)))
+      val candidates: Seq[String] =
+        if (ranges.size < rangedKeys.size) Seq.empty // an all-null key col
+        else manifest.filter(levelOneMayHold(_, footerCheck = true))
+      // Level-2 pruning, exact: a distributed LEFT SEMI join of the
+      // candidate files' rows (key columns only) against the distinct
+      // update keys — only matched file NAMES reach the driver.
+      // reads of SUBSETS of the table's files go through the stored
+      // schema too: a file that predates an added column must read it
+      // as null here exactly as it does in read()
+      val tableSchema = storedOpt.orElse(Some(currentFallback.schema))
+      val affectedNames =
+        if (candidates.isEmpty) Set.empty[String]
+        else readEntriesDv(spark, path, readV, tableSchema, candidates,
+            keepRowId = true)
+          .select(col("__file") +: keyCols.map(col): _*)
+          .join(keys, keyCols, "left_semi")
+          .select(col("__file")).distinct()
+          .collect().map(_.getString(0)).toSet
+      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
+      val affected = manifest.filter(touched)
+      // clean segments pass through BY REFERENCE (O(churn) commit, no
+      // re-segmentation); only dirty segments' survivors and inline
+      // lines re-enter the list as loose entries
+      val dirtySegs = tagged.iterator.collect {
+        case (e, Some(sr)) if touched(e) => sr }.toSet
+      val keptRefs0 = readManifestRefs(fs, path, readV).filter(l =>
+        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
+      val loose0 = tagged.collect {
+        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
+      // a widened column's blooms were hashed from the NARROW type —
+      // carrying them would false-negative on widened probes (same
+      // hazard as widenColumn); strip from untouched lines and sidecars
+      val physWidened = widenedCols.map(n =>
+        physName(baseSt(baseSt.fieldIndex(n))))
+      val keptRefs =
+        if (physWidened.isEmpty) keptRefs0
+        else keptRefs0.map(r => physWidened.foldLeft(r)(
+          (acc, p2) => stripSidecarBloom(fs, path, acc, p2)))
+      val loose =
+        if (physWidened.isEmpty) loose0
+        else loose0.map(l => physWidened.foldLeft(l)(
+          (acc, p2) => stripBloomItem(acc, p2)))
+      // survivors read with the OLD schema (their files carry the old
+      // physical names and narrow types), then project up to the
+      // evolved one: widened columns cast, added columns null-backfill
+      import org.apache.spark.sql.functions.lit
+      def toEvolved(df: DataFrame): DataFrame = df.select(
+        evolvedSt.fields.toSeq.map(f =>
+          (if (baseSt.fieldNames.contains(f.name)) col(f.name)
+           else lit(null)).cast(nullifyAny(f.dataType)).as(f.name)): _*)
+      val updatesAligned = updates.select(evolvedSt.fields.toSeq.map(f =>
+        col(f.name).cast(nullifyAny(f.dataType)).as(f.name)): _*)
+      // stage ~one output file per rewritten input file (+1 for the
+      // updates), not one per shuffle partition — a 1-file point update
+      // must not shatter into 32 slivers
+      val rewritten =
+        if (affected.isEmpty) updatesAligned
+        else toEvolved(readEntriesDv(spark, path, readV, tableSchema, affected)
+          .join(keys, keyCols, "left_anti"))
+          .unionByName(updatesAligned)
+      val staged = stage(
+        toPhysical(rewritten.coalesce(affected.size + 1), Some(evolvedSt)),
+        path, partitioning(spark, path))
+      // conflict evidence: racer-added files conflict when the level-1
+      // key test cannot refute them (no footer reads on this path — an
+      // absent stat conservatively aborts); all-null key columns match
+      // no row at all, so nothing a racer adds can conflict. A
+      // schema-evolving merge stays abort-only: a rebase would rebuild
+      // its untouched lines from the latest manifest and lose the
+      // widened column's bloom strip.
+      val mayConflict: String => Boolean =
+        if (ranges.size < rangedKeys.size) _ => false
+        else levelOneMayHold(_, footerCheck = false)
+      val evolveMeta =
+        if (evolveSchema) schemaMeta(evolvedSt)
+        else Map.empty[String, String]
+      // the merge KEYS ride the commit meta so the change feed can pair
+      // a matched row's delete+insert sides into update pre/post images.
+      // ALWAYS written (meta is inherited commit-over-commit — omitting
+      // the key would leak a PREVIOUS merge's keys onto this commit);
+      // empty = unpairable (a pathological comma-bearing column name the
+      // meta list grammar cannot represent — the feed then keeps plain
+      // insert/delete tags for this commit)
+      val keyMeta = Map("mergeKeys" ->
+        (if (keyCols.exists(_.contains(","))) ""
+         else keyCols.mkString(",")))
+      commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
+        Map("op" -> "MERGE") ++ keyMeta ++ evolveMeta ++ meta,
+        resolve = if (evolveSchema) None
+          else Some(ConflictSpec(readV, manifest.toSet,
+            manifest.iterator.map(entryPath).toSet, affected, staged,
+            mayConflict)))
+    } finally graft.Barrier.release(keys)
   }
 
   /** DELETE FROM the latest version: remove every row where
@@ -2821,35 +2825,37 @@ object SnapshotTable {
         keepRowId = true)
       .filter(predicate)
       .select(col("__file").as("file"), col("__pos").as("pos"))
-      .barrier(pinned = true)
-    val affectedNames = hits.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedNames.isEmpty) return readV
-    val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-    val affected = manifest.filter(touched)
-    val dirtySegs = tagged.iterator.collect {
-      case (e, Some(sr)) if touched(e) => sr }.toSet
-    val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-      l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-    val loose = tagged.collect {
-      case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-    // cumulative vector: prior coordinates of the affected files ride
-    // into the new commit's per-file blobs (each entry references ITS
-    // OWN descriptor)
-    val dvRows = priorDvRows(spark, path, readV, affected)
-      .map(hits.unionByName(_)).getOrElse(hits)
-    val descByFile = stageDvPerFile(spark, path, dvRows)
-    val masked = affected.map(e =>
-      withDv(e, Seq(descByFile(fileOf(entryPath(e))))))
-    commitPinned(spark, path, keptRefs, loose ++ masked, readV + 1,
-      Map("op" -> "DELETE-MOR") ++ meta,
-      resolve = Some(ConflictSpec(readV, manifest.toSet,
-        manifest.iterator.map(entryPath).toSet, affected, masked,
-        e => cp.evalN(entryPartitionValues(entryPath(e)),
-          relabelStats(entryStats(e), tableSchema),
-          relabelStats(entryStringStats(e), tableSchema),
-          relabelStats(entryBloomStats(e), tableSchema),
-          cpNulls(cp, e, tableSchema)))))
+      .barrier()
+    try {
+      val affectedNames = hits.select(col("file")).distinct()
+        .collect().map(_.getString(0)).toSet
+      if (affectedNames.isEmpty) return readV
+      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
+      val affected = manifest.filter(touched)
+      val dirtySegs = tagged.iterator.collect {
+        case (e, Some(sr)) if touched(e) => sr }.toSet
+      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
+        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
+      val loose = tagged.collect {
+        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
+      // cumulative vector: prior coordinates of the affected files ride
+      // into the new commit's per-file blobs (each entry references ITS
+      // OWN descriptor)
+      val dvRows = priorDvRows(spark, path, readV, affected)
+        .map(hits.unionByName(_)).getOrElse(hits)
+      val descByFile = stageDvPerFile(spark, path, dvRows)
+      val masked = affected.map(e =>
+        withDv(e, Seq(descByFile(fileOf(entryPath(e))))))
+      commitPinned(spark, path, keptRefs, loose ++ masked, readV + 1,
+        Map("op" -> "DELETE-MOR") ++ meta,
+        resolve = Some(ConflictSpec(readV, manifest.toSet,
+          manifest.iterator.map(entryPath).toSet, affected, masked,
+          e => cp.evalN(entryPartitionValues(entryPath(e)),
+            relabelStats(entryStats(e), tableSchema),
+            relabelStats(entryStringStats(e), tableSchema),
+            relabelStats(entryBloomStats(e), tableSchema),
+            cpNulls(cp, e, tableSchema)))))
+    } finally graft.Barrier.release(hits)
   }
 
   /** Merge-on-read UPDATE: `SET col = expr WHERE predicate` as ONE
@@ -2891,50 +2897,52 @@ object SnapshotTable {
     val matched = readEntriesDv(spark, path, readV, tableSchema, candidates,
         keepRowId = true)
       .filter(predicate)
-      .barrier(pinned = true)
-    val hits = matched.select(col("__file").as("file"),
-      col("__pos").as("pos"))
-    val affectedNames = hits.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedNames.isEmpty) return readV
-    val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-    val affected = manifest.filter(touched)
-    val dirtySegs = tagged.iterator.collect {
-      case (e, Some(sr)) if touched(e) => sr }.toSet
-    val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-      l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-    val loose = tagged.collect {
-      case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-    val dvRows = priorDvRows(spark, path, readV, affected)
-      .map(hits.unionByName(_)).getOrElse(hits)
-    val descByFile = stageDvPerFile(spark, path, dvRows)
-    // new images: matched rows with assignments applied, table columns
-    val updated = matched.drop("__file", "__pos")
-      .select(schemaForPred.fieldNames.toSeq.map(n =>
-        assignments.get(n).map(_.as(n)).getOrElse(col(n))): _*)
-    // size the new-image write like the DV: churn-proportional
-    val staged = stage(
-      toPhysical(updated.coalesce(math.max(1,
-        affectedNames.size / 8)), tableSchema), path,
-      partitioning(spark, path))
-    val newLines = affected.map(e =>
-      withDv(e, Seq(descByFile(fileOf(entryPath(e)))))) ++ staged
-    commitPinned(spark, path, keptRefs, loose ++ newLines, readV + 1,
-      Map("op" -> "UPDATE-MOR",
-        // the SET columns ride the meta so the change feed can pair a
-        // masked row with its updated image on the untouched-column
-        // projection (always written — inherited meta would otherwise
-        // leak a previous update's set list; empty = unpairable)
-        "updateSet" ->
-          (if (assignments.keys.exists(_.contains(","))) ""
-           else assignments.keys.toSeq.sorted.mkString(","))) ++ meta,
-      resolve = Some(ConflictSpec(readV, manifest.toSet,
-        manifest.iterator.map(entryPath).toSet, affected, newLines,
-        e => cp.evalN(entryPartitionValues(entryPath(e)),
-          relabelStats(entryStats(e), tableSchema),
-          relabelStats(entryStringStats(e), tableSchema),
-          relabelStats(entryBloomStats(e), tableSchema),
-          cpNulls(cp, e, tableSchema)))))
+      .barrier()
+    try {
+      val hits = matched.select(col("__file").as("file"),
+        col("__pos").as("pos"))
+      val affectedNames = hits.select(col("file")).distinct()
+        .collect().map(_.getString(0)).toSet
+      if (affectedNames.isEmpty) return readV
+      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
+      val affected = manifest.filter(touched)
+      val dirtySegs = tagged.iterator.collect {
+        case (e, Some(sr)) if touched(e) => sr }.toSet
+      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
+        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
+      val loose = tagged.collect {
+        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
+      val dvRows = priorDvRows(spark, path, readV, affected)
+        .map(hits.unionByName(_)).getOrElse(hits)
+      val descByFile = stageDvPerFile(spark, path, dvRows)
+      // new images: matched rows with assignments applied, table columns
+      val updated = matched.drop("__file", "__pos")
+        .select(schemaForPred.fieldNames.toSeq.map(n =>
+          assignments.get(n).map(_.as(n)).getOrElse(col(n))): _*)
+      // size the new-image write like the DV: churn-proportional
+      val staged = stage(
+        toPhysical(updated.coalesce(math.max(1,
+          affectedNames.size / 8)), tableSchema), path,
+        partitioning(spark, path))
+      val newLines = affected.map(e =>
+        withDv(e, Seq(descByFile(fileOf(entryPath(e)))))) ++ staged
+      commitPinned(spark, path, keptRefs, loose ++ newLines, readV + 1,
+        Map("op" -> "UPDATE-MOR",
+          // the SET columns ride the meta so the change feed can pair a
+          // masked row with its updated image on the untouched-column
+          // projection (always written — inherited meta would otherwise
+          // leak a previous update's set list; empty = unpairable)
+          "updateSet" ->
+            (if (assignments.keys.exists(_.contains(","))) ""
+             else assignments.keys.toSeq.sorted.mkString(","))) ++ meta,
+        resolve = Some(ConflictSpec(readV, manifest.toSet,
+          manifest.iterator.map(entryPath).toSet, affected, newLines,
+          e => cp.evalN(entryPartitionValues(entryPath(e)),
+            relabelStats(entryStats(e), tableSchema),
+            relabelStats(entryStringStats(e), tableSchema),
+            relabelStats(entryBloomStats(e), tableSchema),
+            cpNulls(cp, e, tableSchema)))))
+    } finally graft.Barrier.release(matched)
   }
 
   /** Parquet-footer key-range test: true iff `file` MAY contain a key
@@ -3200,22 +3208,17 @@ object SnapshotTable {
     * 10-minute commits (~50k versions) would otherwise analyze a
     * 50k-leaf union before the first task launched. Above the
     * threshold the call therefore EXECUTES chunk jobs eagerly, and
-    * where the chunk rows live follows `spark.graft.barrier`'s
-    * resolution: executor storage under the default `localCheckpoint`
-    * (an executor loss fails the read; re-run it), the checkpoint dir
-    * under `checkpoint` (the default once a checkpoint dir is set), a
-    * DISK_ONLY cache under `diskPersist`. For open-ended CDC
-    * consumption prefer the streaming source, which paces itself with
-    * `maxVersionsPerTrigger` and checkpoints durable offsets instead.
-    *
-    * `spark.graft.changeFeed.materializePath` (r17): when set,
-    * completed chunks SPILL TO PARQUET under a fresh subdirectory of
-    * that path instead of going through the barrier — the rows live on
-    * (reliable) storage, so a long-range CDF read survives executor
-    * loss: losing a worker re-reads parquet instead of failing the
-    * whole call. The subdirectory is this call's alone (UUID-named);
-    * the CALLER owns cleanup after consuming the frame. The lazy
-    * small-range path never materializes. */
+    * where the chunk rows live follows [[graft.Barrier]]: executor
+    * storage when no checkpoint dir is set (an executor loss fails
+    * the read; re-run it), reliable checkpoint files under the
+    * checkpoint dir once one is set (the read survives executor loss).
+    * A long-range read is durable exactly when barriers are. The
+    * returned frame reads the chunk frames, so their checkpoint files
+    * outlive the call; nothing in the engine releases them. For
+    * open-ended CDC consumption prefer the streaming source, which
+    * paces itself with `maxVersionsPerTrigger` and checkpoints
+    * durable offsets instead. The lazy small-range path never
+    * materializes. */
   def changeFeed(spark: SparkSession, path: String, fromVersion: Int,
       toVersion: Option[Int] = None,
       updateImages: Boolean = false): DataFrame = {
@@ -3265,24 +3268,6 @@ object SnapshotTable {
     require(chunkSize >= 1,
       "spark.graft.changeFeed.maxPlanVersions must be >= 1")
     val lazyWhole = (toV - fromVersion + 1) <= chunkSize
-    // chunk pinning: reliable parquet spill when the caller named a
-    // materialize path, otherwise the barrier `spark.graft.barrier`
-    // resolves to
-    val matDir = spark.conf
-      .getOption("spark.graft.changeFeed.materializePath")
-      .filter(_.nonEmpty)
-      .map(p => s"$p/cdf_${UUID.randomUUID().toString.take(8)}")
-    var chunkNo = 0
-    def pinChunk(df: DataFrame): DataFrame = matDir match {
-      case None => graft.Barrier.materialize(df)
-      case Some(dir) =>
-        val out = s"$dir/chunk_$chunkNo"
-        chunkNo += 1
-        df.write.mode("overwrite").parquet(out)
-        // explicit schema: an all-empty chunk writes no part file to
-        // infer from, and align() already fixed the exact shape
-        spark.read.schema(df.schema).parquet(out)
-    }
     // the walk: each manifest read once; version v's ref list (tiny —
     // segment refs + loose lines, never flattened entries) becomes
     // version v+1's FROM side. Missing intermediate versions cannot
@@ -3314,13 +3299,13 @@ object SnapshotTable {
       pending += align(diff.withColumn("_commit_version", lit(v)))
       prevRefs = curRefs
       if (!lazyWhole && pending.size >= chunkSize) {
-        done += pinChunk(unionTree(pending.toSeq))
+        done += graft.Barrier.materialize(unionTree(pending.toSeq))
         pending.clear()
       }
     }
     if (pending.nonEmpty)
       done += (if (lazyWhole) unionTree(pending.toSeq)
-               else pinChunk(unionTree(pending.toSeq)))
+               else graft.Barrier.materialize(unionTree(pending.toSeq)))
     unionTree(done.toSeq)
   }
 

@@ -2,7 +2,9 @@
 # Prints the four size counts a simplicity change reports before and
 # after: src/main Scala lines, distinct spark.graft.* options, distinct
 # SPARK_GRAFT_* env names, and SparkSession.builder() calls (comment
-# lines excluded).
+# lines excluded). Also counts the rows of README.md's "Options" table
+# and exits non-zero with a MISMATCH line when that differs from the
+# option count, so the table cannot drift from the code.
 #
 # Usage: tools/simplicity_counts.sh [repo-dir]   (default: this repo)
 set -euo pipefail
@@ -13,8 +15,16 @@ options=$(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/main | sort -u | wc -l)
 envs=$(grep -rhoE 'SPARK_GRAFT_[A-Z0-9_]+' src/main | sort -u | wc -l)
 builders=$(grep -rn 'SparkSession.builder()' src/main |
   grep -cvE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)' || true)
+# rows of the table under "## Options", up to the next heading
+readme_rows=$(awk '/^## /{in_opts = ($0 == "## Options"); next}
+  in_opts && /^\| `spark\.graft\./' README.md | wc -l)
 
 echo "src/main Scala lines:        $lines"
 echo "spark.graft.* options:       $options"
 echo "SPARK_GRAFT_* names:         $envs"
 echo "SparkSession.builder() calls: $builders"
+echo "README Options table rows:   $readme_rows"
+if [ "$readme_rows" -ne "$options" ]; then
+  echo "MISMATCH: README Options lists $readme_rows options, src/main reads $options"
+  exit 1
+fi
