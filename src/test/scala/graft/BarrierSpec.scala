@@ -9,10 +9,11 @@ import graft.sources.{IncrementalView, SnapshotTable}
 /** [[Barrier]]: every engine materialization barrier routes through
   * [[Barrier.materialize]], whose form follows one input — whether the
   * SparkContext has a checkpoint dir. These specs pin (a) result
-  * equality across both forms on iterative graph operators, (b) the
-  * checkpoint dir as the one switch, and (c) that under a checkpoint
-  * dir neither iterative loops nor the table verbs leave checkpoint
-  * files behind for the frames they release. */
+  * equality across both forms on iterative graph operators and a
+  * chunked CDF read, (b) the checkpoint dir as the one switch, and
+  * (c) that under a checkpoint dir neither iterative loops nor the
+  * table verbs leave checkpoint files behind for the frames they
+  * release. */
 class BarrierSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,6 +75,30 @@ class BarrierSpec extends SparkSpec {
       assert(rddDirs(dir).nonEmpty,
         "reliable checkpoints must land under the checkpoint dir")
     }
+  }
+
+  test("chunked CDF read: identical rows under the durable mode") {
+    val base = java.nio.file.Files.createTempDirectory("barriercdf")
+    val path = s"$base/t"
+    SnapshotTable.create(Seq((0L, 0L)).toDF("id", "v"), path)
+    (1 to 13).foreach(i => SnapshotTable.append(
+      Seq((i.toLong, i.toLong)).toDF("id", "v"), path))
+    def rows(df: DataFrame): Set[(Long, Long, String, Int)] =
+      df.select(col("id"), col("v"), col("change_type"),
+        col("_commit_version")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+          r.getInt(3))).toSet
+    val expected = (0 to 13).map(i =>
+      (i.toLong, i.toLong, "insert", i)).toSet
+    try {
+      spark.conf.set("spark.graft.changeFeed.maxPlanVersions", "4")
+      assert(rows(SnapshotTable.changeFeed(spark, path, 0)) === expected)
+      withCheckpointDir { dir =>
+        assert(rows(SnapshotTable.changeFeed(spark, path, 0)) === expected)
+        assert(rddDirs(dir).nonEmpty,
+          "durable chunks must land as checkpoint files under the dir")
+      }
+    } finally spark.conf.unset("spark.graft.changeFeed.maxPlanVersions")
   }
 
   test("the checkpoint dir decides: a localCheckpoint leaf and no " +

@@ -33,46 +33,44 @@ class ChangeFeedMaterializeSpec extends SparkSpec {
   test("chunked CDF: same rows with and without a checkpoint dir; " +
       "with one the chunks are checkpoint files and the read SURVIVES " +
       "losing cached blocks") {
-    // (commits after create, chunk size)
-    Seq((25, 6), (13, 4)).foreach { case (n, chunk) =>
-      val base = java.nio.file.Files.createTempDirectory("cdfmat")
-      val path = s"$base/t"
-      SnapshotTable.create(Seq((0L, 0L)).toDF("id", "v"), path)
-      (1 to n).foreach(i =>
-        SnapshotTable.append(Seq((i.toLong, i.toLong)).toDF("id", "v"),
-          path))
-      val expected = (0 to n).map(i =>
-        (i.toLong, i.toLong, "insert", i)).toSet
+    val n = 25
+    val base = java.nio.file.Files.createTempDirectory("cdfmat")
+    val path = s"$base/t"
+    SnapshotTable.create(Seq((0L, 0L)).toDF("id", "v"), path)
+    (1 to n).foreach(i =>
+      SnapshotTable.append(Seq((i.toLong, i.toLong)).toDF("id", "v"),
+        path))
+    val expected = (0 to n).map(i =>
+      (i.toLong, i.toLong, "insert", i)).toSet
+    try {
+      spark.conf.set(ChunkKey, "6")
+      // arm 1: localCheckpoint chunks — correct while blocks live,
+      // but DEAD after the blocks vanish (the simulated executor loss)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val local = SnapshotTable.changeFeed(spark, path, 0)
+      assert(rows(local) === expected)
+      assert(dropCachedSince(before) > 0,
+        "chunked CDF must have pinned chunks to cached RDDs")
+      intercept[Exception] { rows(local) }
+      // arm 2: under a checkpoint dir — identical rows, chunks as
+      // reliable checkpoint files, and the same block-loss storm is a
+      // non-event
+      val ckpt = s"$base/ckpt"
+      spark.sparkContext.setCheckpointDir(ckpt)
       try {
-        spark.conf.set(ChunkKey, chunk.toString)
-        // arm 1: localCheckpoint chunks — correct while blocks live,
-        // but DEAD after the blocks vanish (the simulated executor loss)
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val local = SnapshotTable.changeFeed(spark, path, 0)
-        assert(rows(local) === expected)
-        assert(dropCachedSince(before) > 0,
-          "chunked CDF must have pinned chunks to cached RDDs")
-        intercept[Exception] { rows(local) }
-        // arm 2: under a checkpoint dir — identical rows, chunks as
-        // reliable checkpoint files, and the same block-loss storm is a
-        // non-event
-        val ckpt = s"$base/ckpt"
-        spark.sparkContext.setCheckpointDir(ckpt)
-        try {
-          val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
-          val durable = SnapshotTable.changeFeed(spark, path, 0)
-          assert(rows(durable) === expected)
-          val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-          try assert(files.anyMatch(p =>
-              p.getFileName.toString.startsWith("rdd-")),
-            "chunks must land as checkpoint files under the dir")
-          finally files.close()
-          dropCachedSince(before2)
-          assert(rows(durable) === expected,
-            "the checkpointed frame must re-read after losing cached blocks")
-        } finally org.apache.spark.GraftTestCoreAccess
-          .clearCheckpointDir(spark.sparkContext)
-      } finally spark.conf.unset(ChunkKey)
-    }
+        val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        val durable = SnapshotTable.changeFeed(spark, path, 0)
+        assert(rows(durable) === expected)
+        val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+        try assert(files.anyMatch(p =>
+            p.getFileName.toString.startsWith("rdd-")),
+          "chunks must land as checkpoint files under the dir")
+        finally files.close()
+        dropCachedSince(before2)
+        assert(rows(durable) === expected,
+          "the checkpointed frame must re-read after losing cached blocks")
+      } finally org.apache.spark.GraftTestCoreAccess
+        .clearCheckpointDir(spark.sparkContext)
+    } finally spark.conf.unset(ChunkKey)
   }
 }
