@@ -563,26 +563,30 @@ object SnapshotTable {
       else Seq(l)
     }
 
-  /** A manifest flattened WITH provenance: each entry paired with the
-    * rel path of the segment that owns it (None = inline in the list).
+  /** A version's manifest body from one manifest read: its lines as
+    * written (segment refs and inline entries) and every entry paired
+    * with the rel path of the segment that owns it (None = inline).
     * Row-level commits use the tag to pass CLEAN segments through by
     * reference and re-stage only the dirty ones' survivors — the
-    * O(churn) write half of the segmented-manifest design. */
-  private def readManifestTagged(fs: FileSystem, path: String,
-      v: Int): Seq[(String, Option[String])] =
-    taggedOfLines(fs, path, manifestLines(fs, path, v))
+    * O(churn) write half of the segmented-manifest design
+    * ([[keptBody]]). */
+  private final case class ReadBody(refs: Seq[String],
+      tagged: Seq[(String, Option[String])]) {
+    val entries: Seq[String] = tagged.map(_._1)
+    /** The entries whose data file is one of `fileNames`. */
+    def entriesOf(fileNames: Set[String]): Seq[String] =
+      entries.filter(e => fileNames.contains(fileNameOf(entryPath(e))))
+  }
 
-  /** [[readManifestTagged]] over already-read manifest lines — the
-    * change-feed walk reads each manifest file ONCE and derives meta,
-    * refs, and tagged entries from the same lines. */
-  private def taggedOfLines(fs: FileSystem, path: String,
-      lines: Seq[String]): Seq[(String, Option[String])] =
-    lines.filterNot(_.startsWith("#")).flatMap { l =>
+  private def readBody(fs: FileSystem, path: String, v: Int): ReadBody = {
+    val refs = readManifestRefs(fs, path, v)
+    ReadBody(refs, refs.flatMap { l =>
       if (l.startsWith(SegPrefix)) {
         val rel = refRel(l)
         segEntries(fs, path, rel).map(e => (e, Some(rel)))
       } else Seq((l, None))
-    }
+    })
+  }
 
   /** (removed, added) entry lines between two manifests — given as
     * their REF lists (`#`-stripped manifest bodies: segment refs +
@@ -1053,7 +1057,9 @@ object SnapshotTable {
     * data files and a schema whose field carries the new logical name
     * over the unchanged physical name. Old versions time-travel with
     * their own schema. Partition columns cannot be renamed (their
-    * name is baked into directory paths and layout meta). */
+    * name is baked into directory paths and layout meta). Fails with
+    * ConcurrentModificationException when a concurrent commit changed
+    * the schema after this one read it — re-run on the new snapshot. */
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Int = {
     val vs = versions(spark, path)
@@ -1076,8 +1082,9 @@ object SnapshotTable {
       .map(cs => Map("bloomCols" -> cs.split(",").toSeq
         .map(c => if (c == from) to else c).mkString(",")))
       .getOrElse(Map.empty)
-    commit(spark, path, AppendSpec(Seq.empty),
-      meta = schemaMeta(renamed) ++ bloomM + ("op" -> "RENAME-COLUMN"))
+    commit(spark, path, Some(vs.max),
+      schemaMeta(renamed) ++ bloomM + ("op" -> "RENAME-COLUMN"),
+      Rebuild(appendBody(spark, fs, path, _, Nil)))
   }
 
   /** Add columns — METADATA-ONLY: the fields join the stored schema
@@ -1087,7 +1094,10 @@ object SnapshotTable {
     * physical slot was EVER used (live, or retired by a drop) binds a
     * fresh physical, so dropped bytes in old files can never
     * resurrect under a re-added name. The SQL door is
-    * `ALTER TABLE t ADD COLUMNS (...)` (plans/GraftAlterTable). */
+    * `ALTER TABLE t ADD COLUMNS (...)` (plans/GraftAlterTable). Fails
+    * with ConcurrentModificationException when a concurrent commit
+    * changed the schema after this one read it — re-run on the new
+    * snapshot. */
   def addColumns(spark: SparkSession, path: String,
       cols: Seq[types.StructField]): Int = {
     val vs = versions(spark, path)
@@ -1108,16 +1118,19 @@ object SnapshotTable {
         withPhys(f, "c_" + UUID.randomUUID().toString.take(8))
       else f
     }
-    commit(spark, path, AppendSpec(Seq.empty),
-      meta = schemaMeta(types.StructType(st.fields ++ mapped)) +
-        ("op" -> "ADD-COLUMNS"))
+    commit(spark, path, Some(vs.max),
+      schemaMeta(types.StructType(st.fields ++ mapped)) +
+        ("op" -> "ADD-COLUMNS"),
+      Rebuild(appendBody(spark, fs, path, _, Nil)))
   }
 
   /** Drop a column — METADATA-ONLY: the field leaves the schema, its
     * physical name joins the retired list, no file is rewritten, and
     * time travel to prior versions still reads it. A later re-added
     * column with the same logical name gets a fresh physical name, so
-    * the dropped bytes in old files can never resurrect. */
+    * the dropped bytes in old files can never resurrect. Fails with
+    * ConcurrentModificationException when a concurrent commit changed
+    * the schema after this one read it — re-run on the new snapshot. */
   def dropColumn(spark: SparkSession, path: String,
       name: String): Int = {
     val vs = versions(spark, path)
@@ -1139,11 +1152,12 @@ object SnapshotTable {
       .map(cs => Map("bloomCols" -> cs.split(",").toSeq
         .filterNot(_ == name).mkString(",")))
       .getOrElse(Map.empty)
-    commit(spark, path, AppendSpec(Seq.empty),
-      meta = schemaMeta(types.StructType(
+    commit(spark, path, Some(vs.max),
+      schemaMeta(types.StructType(
         st.fields.filterNot(_.name == name))) ++ bloomM +
         ("droppedPhys" -> dropped.mkString(",")) +
-        ("op" -> "DROP-COLUMN"))
+        ("op" -> "DROP-COLUMN"),
+      Rebuild(appendBody(spark, fs, path, _, Nil)))
   }
 
   private def droppedPhys(fs: FileSystem, path: String,
@@ -1157,7 +1171,10 @@ object SnapshotTable {
     * order-preserving embeddings are allowed: integral → wider
     * integral, byte/short/int/float → double. The cached manifest
     * stats are already Long-normalized, so pruning keeps working
-    * across the widening; appends after it must use the new type. */
+    * across the widening; appends after it must use the new type.
+    * Fails with ConcurrentModificationException when a concurrent
+    * commit changed the schema after this one read it — re-run on the
+    * new snapshot. */
   def widenColumn(spark: SparkSession, path: String, name: String,
       to: types.DataType): Int = {
     val vs = versions(spark, path)
@@ -1181,12 +1198,15 @@ object SnapshotTable {
     // other columns' blooms stay valid. Long-normalized min/max stats
     // carry over unchanged (they are type-agnostic by construction).
     val phys = physName(f)
-    commit(spark, path, RefTransformSpec(
-      stripBloomItem(_, phys),
-      ref => stripSidecarBloom(fs, path, ref, phys)),
-      meta = schemaMeta(types.StructType(st.fields.map(x =>
+    commit(spark, path, Some(vs.max),
+      schemaMeta(types.StructType(st.fields.map(x =>
         if (x.name == name) x.copy(dataType = to) else x))) +
-        ("op" -> "WIDEN-COLUMN"))
+        ("op" -> "WIDEN-COLUMN"),
+      // per-LINE rewrite: inline entries drop the item, segment refs
+      // swap to a stripped sidecar — O(#refs), entries never rewrite
+      Rebuild(_.toSeq.flatMap(readManifestRefs(fs, path, _)).map(l =>
+        if (l.startsWith(SegPrefix)) stripSidecarBloom(fs, path, l, phys)
+        else stripBloomItem(l, phys))))
   }
 
   /** `refLine` with `physCol`'s blooms removed from its SIDECAR: when
@@ -1913,89 +1933,168 @@ object SnapshotTable {
       else Some(pfx.take(i) :+ (pfx(i) + 1).toByte)
     }
 
-  /** How a retrying commit derives its manifest body from whatever
-    * version it lands on top of — the write-amplification contract:
-    *  - [[AppendSpec]]: previous body passes through verbatim (see
-    *    [[appendBody]] — O(#segments + churn), never O(#files));
-    *  - [[ReplaceSpec]]: the body is exactly these entries (create /
-    *    overwrite) — nothing inherited, fresh segmentation;
-    *  - [[RefTransformSpec]]: per-LINE metadata rewrite (rare DDL —
-    *    widenColumn's bloom strip): inline entries map through
-    *    `entry`, segment refs through `ref` — O(#refs), and a ref
-    *    transform that must touch its sidecar rewrites one small
-    *    sidecar file, never the segment's entries. */
-  private sealed trait BodySpec
-  private final case class AppendSpec(staged: Seq[String]) extends BodySpec
-  private final case class ReplaceSpec(entries: Seq[String]) extends BodySpec
-  private final case class RefTransformSpec(entry: String => String,
-      ref: String => String) extends BodySpec
+  /** What a rewrite keeps of `body` when it consumes the `touched`
+    * entries: segment refs owning no touched entry pass through by
+    * reference (O(churn) commit, no re-segmentation); the untouched
+    * entries of dirty segments and the untouched inline entries form
+    * the loose tail. */
+  private def keptBody(body: ReadBody, touched: String => Boolean)
+      : (Seq[String], Seq[String]) = {
+    val dirtySegs = body.tagged.iterator.collect {
+      case (e, Some(sr)) if touched(e) => sr }.toSet
+    (body.refs.filter(l =>
+        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l))),
+      body.tagged.collect {
+        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) =>
+          e })
+  }
 
-  /** Create-exclusive manifest commit with optimistic retry. The body
-    * recomputes against the CURRENT latest version on every attempt
-    * (append semantics survive losing a race). Returns the committed
-    * version number. */
+  /** A verb's rule for a head that moved past the version it read
+    * (see [[commit]]). */
+  private sealed trait OnMoved
+  /** Append-shaped: the body is rebuilt on the latest head. */
+  private final case class Rebuild(body: Option[Int] => Seq[String])
+      extends OnMoved
+  /** Whole-table replacement: the same `tail` lands on any head. */
+  private final case class Reuse(tail: Seq[String]) extends OnMoved
+  /** Row-level rewrite of the `touched` entries of `read` into
+    * `newLines`, rebased over interleaved commits when provably
+    * disjoint. `mayConflict` says whether an entry a racer added may
+    * hold rows matching this commit's read (conservative: unknown
+    * means conflict). */
+  private final case class Rebase(read: ReadBody, touched: Seq[String],
+      newLines: Seq[String], mayConflict: String => Boolean)
+      extends OnMoved
+  /** Pinned to the version read: `kept` refs plus the `tail`, or an
+    * error when the head moved. */
+  private final case class Pinned(kept: Seq[String], tail: Seq[String])
+      extends OnMoved
+
+  /** Most manifest publications one commit tries before giving up. */
+  private val MaxCommitAttempts = 50
+
+  /** The one commit path of every snapshot-table verb: publish the
+    * verb's body at version `readV + 1` (0 when `readV` is None: a
+    * create, a convert, or a first stream batch) with a
+    * create-exclusive manifest write, and return the version it
+    * landed on. The manifest is witness, publication instant
+    * (monotone over the head's), the head's meta with `meta` winning,
+    * the body, end marker.
+    *
+    * A lost slot means the head moved past `readV`; the commit lists
+    * the log and applies the verb's rule against the latest head:
+    *  - [[Rebuild]] (append, stream batch, metadata-only DDL):
+    *    rebuild the body on the latest head and retry;
+    *  - [[Reuse]] (overwrite): retry the same body;
+    *  - [[Rebase]] (merge, delete, deleteMoR, updateMoR,
+    *    replacePartitions, optimizeIncremental, indexBloom): every
+    *    consumed entry must still be present verbatim at the latest
+    *    head, and no entry a racer added for a file this commit did
+    *    not read may conflict (re-annotated survivors are exempt:
+    *    data files are immutable and deletion vectors only shrink
+    *    visibility); then the latest body minus the consumed entries
+    *    plus `newLines` is retried, else ConcurrentModificationException;
+    *  - [[Pinned]]: create and convert (`readV` None) throw
+    *    IllegalArgumentException, two writers creating one path being
+    *    a caller bug rather than a conflict to resolve; restore and
+    *    the schema-evolving merge throw ConcurrentModificationException.
+    * A [[Rebuild]] or [[Rebase]] commit whose `meta` sets `schema`
+    * never publishes over a head whose `schema` or `droppedPhys`
+    * differs from the version it read — it would revert that schema
+    * change — and throws ConcurrentModificationException instead.
+    * After [[MaxCommitAttempts]] lost slots it throws
+    * ConcurrentModificationException naming the path, the version
+    * read and the attempts. In every case the caller re-runs on the
+    * new snapshot; a failed manifest write throws from the store. */
   private def commit(spark: SparkSession, path: String,
-      body: BodySpec, meta: Map[String, String] = Map.empty,
-      expectVersion: Option[Int] = None): Int = {
+      readV: Option[Int], meta: Map[String, String],
+      onMoved: OnMoved): Int = {
     val fs = fsOf(spark, logDir(path))
     fs.mkdirs(logDir(path))
-    var attempts = 0
-    while (attempts < 50) {
-      val vs = versions(spark, path)
-      val next = if (vs.isEmpty) 0 else vs.max + 1
-      // a version-pinned commit (create/convert pin 0) must FAIL on a
-      // lost race, not retry into a silent replace of the winner:
-      // two concurrent CREATEs (or CONVERTs) racing the same path is
-      // a caller bug to surface, not a conflict to auto-resolve
-      expectVersion.foreach(ev => require(next == ev,
-        s"commit: expected to publish version $ev of $path but the " +
-          s"log is at ${vs.max} — lost a concurrent create/convert " +
-          "race (the other writer's table is live; re-read before " +
-          "writing)"))
-      val prevV = if (vs.isEmpty) None else Some(vs.max)
+    val store = GraftLogStore.forSession(spark)
+    def metaOf(v: Option[Int]) =
+      v.fold(Map.empty[String, String])(readMeta(fs, path, _))
+    val readMetaV = metaOf(readV)
+    val readLabel = readV.fold("(none)")(_.toString)
+    def schemaKeys(m: Map[String, String]) =
+      Seq("schema", "droppedPhys").map(m.get(_).filter(_.nonEmpty))
+    def rebased(r: Rebase, on: ReadBody): Seq[String] = {
+      val touched = r.touched.toSet
+      val (kept, loose) = keptBody(on, touched)
+      kept ++ inlineOrSegment(spark, fs, path, loose ++ r.newLines)
+    }
+    def moved(msg: String) = new java.util.ConcurrentModificationException(
+      s"snapshot table at $path$msg — re-run on the new snapshot")
+    @annotation.tailrec
+    def land(head: Option[Int], headMeta: Map[String, String],
+        body: Seq[String], attempt: Int): Int = {
+      val v = head.fold(0)(_ + 1)
       // metadata is INHERITED commit-over-commit (this commit's keys
       // win): markers like the streaming batch id stay on the log head
-      // forever, so vacuuming old manifests can never drop them
-      val mergedMeta =
-        ((if (vs.isEmpty) Map.empty[String, String]
-          else readMeta(fs, path, vs.max)) ++ meta) - "eot" - "wv" - "ts"
-      // witness FIRST (see WvLine), then this commit's OWN publication
-      // instant — `ts`/`wv` are deliberately never inherited: an
+      // forever, so vacuuming old manifests can never drop them. The
+      // witness comes first (see WvLine), then this commit's OWN
+      // publication instant — `ts`/`wv` are never inherited: an
       // inherited instant would backdate the commit, and versionAsOf/
-      // history prefer this value over filesystem mtimes (which a
+      // history prefer it over filesystem mtimes (which a
       // backup/restore round-trip silently rewrites). Clamped to
-      // strictly-after the previous version's instant: with multiple
-      // writers on skewed clocks a later version could otherwise
-      // carry an EARLIER timestamp, making versionAsOf resolve
-      // inconsistently around the skewed pair (Delta's in-commit
-      // timestamps enforce the same monotonicity).
-      val metaLines = Seq(WvLine,
-        s"#ts=${monotonicTs(fs, path, prevV)}") ++
-        mergedMeta.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"#$k=$v" }
-      val bodyLines = body match {
-        case AppendSpec(staged) =>
-          appendBody(spark, fs, path, prevV, staged)
-        case ReplaceSpec(entries) =>
-          // a replacement references no prior file, so no prior
-          // segment can be reusable — skip the reuse scan entirely
-          segmentedBody(spark, fs, path, None, entries)
-        case RefTransformSpec(f, g) =>
-          prevV.toSeq.flatMap(v => readManifestRefs(fs, path, v)).map(l =>
-            if (l.startsWith(SegPrefix)) g(l) else f(l))
-      }
-      val content = (metaLines ++ bodyLines ++ Seq(EotLine))
-        .mkString("\n")
-      val target = new Path(logDir(path), manifestName(next))
+      // strictly-after the head's instant: with writers on skewed
+      // clocks a later version could otherwise carry an EARLIER
+      // timestamp (Delta's in-commit timestamps enforce the same).
+      val metaLines = Seq(WvLine, s"#ts=${monotonicTs(fs, path, head)}") ++
+        ((headMeta ++ meta) - "eot" - "wv" - "ts").toSeq.sortBy(_._1)
+          .map { case (k, x) => s"#$k=$x" }
+      val content = (metaLines ++ body :+ EotLine).mkString("\n")
       // the atomicity primitive is PLUGGABLE (object stores need a
       // conditional PUT or a lock — see GraftLogStore's contract);
       // a false is a lost race, anything unrecoverable throws inside
-      if (GraftLogStore.forSession(spark)
-          .createAtomic(fs, target, content.getBytes("UTF-8")))
-        return next
-      attempts += 1
+      if (store.createAtomic(fs, new Path(logDir(path), manifestName(v)),
+          content.getBytes("UTF-8"))) v
+      else if (attempt == MaxCommitAttempts)
+        throw moved(s": gave up after $attempt attempts to commit over " +
+          s"read version $readLabel")
+      else {
+        val latest = versions(spark, path).lastOption
+        lazy val latestMeta = metaOf(latest)
+        val next = onMoved match {
+          case Pinned(_, _) if readV.isEmpty =>
+            throw new IllegalArgumentException(s"commit: expected to " +
+              s"publish version 0 of $path but the log is at " +
+              s"${latest.getOrElse(-1)} — lost a concurrent " +
+              "create/convert race (the other writer's table is live; " +
+              "re-read before writing)")
+          case Pinned(_, _) =>
+            throw moved(s" advanced past version $readLabel while this " +
+              "commit ran")
+          case Reuse(_) => body
+          case _ if meta.contains("schema") &&
+              schemaKeys(latestMeta) != schemaKeys(readMetaV) =>
+            throw moved(s": the schema changed after version $readLabel " +
+              "was read")
+          case Rebuild(f) => f(latest)
+          case r: Rebase =>
+            val on = latest.fold(ReadBody(Nil, Nil))(readBody(fs, path, _))
+            val present = on.entries.toSet
+            if (!r.touched.forall(present.contains))
+              throw moved(": a concurrent commit modified files this " +
+                "commit also rewrites")
+            val readPaths = r.read.entries.iterator.map(entryPath).toSet
+            if (on.entries.exists(l =>
+                !readPaths.contains(entryPath(l)) && r.mayConflict(l)))
+              throw moved(": a concurrent commit added files that may " +
+                "match this commit's read")
+            rebased(r, on)
+        }
+        land(latest, latestMeta, next, attempt + 1)
+      }
     }
-    sys.error(s"snapshot commit: gave up after $attempts conflicts")
+    val first = onMoved match {
+      case Rebuild(f) => f(readV)
+      case Reuse(tail) => inlineOrSegment(spark, fs, path, tail)
+      case r: Rebase => rebased(r, r.read)
+      case Pinned(kept, tail) =>
+        kept ++ inlineOrSegment(spark, fs, path, tail)
+    }
+    land(readV, readMetaV, first, 1)
   }
 
   /** Commit `df` as version 0. Fails if the table already exists.
@@ -2015,9 +2114,9 @@ object SnapshotTable {
     val partMeta =
       if (partitionBy.isEmpty) Map.empty[String, String]
       else Map("partition" -> partitionBy.mkString(","))
-    commit(spark, path, ReplaceSpec(stage(df, path, partitionBy)),
-      meta = schemaMeta(df.schema) ++ partMeta + ("op" -> "CREATE"),
-      expectVersion = Some(0))
+    commit(spark, path, None,
+      schemaMeta(df.schema) ++ partMeta + ("op" -> "CREATE"),
+      Pinned(Nil, stage(df, path, partitionBy)))
   }
 
   /** Convert a plain parquet directory (flat or Hive-partitioned)
@@ -2101,19 +2200,11 @@ object SnapshotTable {
     val partMeta =
       if (partitionBy.isEmpty) Map.empty[String, String]
       else Map("partition" -> partitionBy.mkString(","))
-    commit(spark, path, ReplaceSpec(entries),
-      meta = schemaMeta(schema) ++ partMeta + ("op" -> "CONVERT"),
-      expectVersion = Some(0))
+    commit(spark, path, None,
+      schemaMeta(schema) ++ partMeta + ("op" -> "CONVERT"),
+      Pinned(Nil, entries))
   }
 
-  /** Commit `df`'s rows on top of the latest version (its files plus
-    * the staged ones). Requires an existing table, and `df`'s columns
-    * must match it — unless `evolveSchema` is set, which ADDS any new
-    * columns to the table schema (stored in the commit's meta, so the
-    * change is metadata-only: no old file is rewritten, old rows read
-    * the new columns as NULL; a column common to both sides must keep
-    * its type). Dropping or retyping a column is deliberately not
-    * expressible — that is an overwrite. */
   /** The stored schema an append of `df` commits (shared by [[append]]
     * and [[appendStreamBatch]]): the current table schema, plus —
     * only under `evolveSchema` — `df`'s new columns (metadata-only:
@@ -2172,6 +2263,18 @@ object SnapshotTable {
       currentOpt.fold(df.schema.fields)(_.fields ++ addedMapped))
   }
 
+  /** Commit `df`'s rows on top of the latest version (its files plus
+    * the staged ones). Requires an existing table, and `df`'s columns
+    * must match it — unless `evolveSchema` is set, which ADDS any new
+    * columns to the table schema (stored in the commit's meta, so the
+    * change is metadata-only: no old file is rewritten, old rows read
+    * the new columns as NULL; a column common to both sides must keep
+    * its type). Dropping or retyping a column is deliberately not
+    * expressible — that is an overwrite. Every append records the
+    * schema it read, so it fails with ConcurrentModificationException
+    * when a concurrent commit changed the schema after this one read
+    * it — re-run on the new snapshot. Concurrent appends that leave
+    * the schema alone both land. */
   def append(df: DataFrame, path: String,
       evolveSchema: Boolean = false): Int = {
     val spark = df.sparkSession
@@ -2188,8 +2291,9 @@ object SnapshotTable {
     val stagedIndexed = maintainBlooms(spark, path,
       readMeta(fs, path, vs.max), Some(evolved), df.columns.toSeq,
       staged)
-    commit(spark, path, AppendSpec(stagedIndexed),
-      meta = schemaMeta(evolved) + ("op" -> "APPEND"))
+    commit(spark, path, Some(vs.max),
+      schemaMeta(evolved) + ("op" -> "APPEND"),
+      Rebuild(appendBody(spark, fs, path, _, stagedIndexed)))
   }
 
   /** Commit `df` as a full replacement (new version referencing only
@@ -2199,6 +2303,7 @@ object SnapshotTable {
       repartitionBy: Option[Seq[String]] = None,
       op: String = "OVERWRITE"): Int = {
     val spark = df.sparkSession
+    val readV = versions(spark, path).lastOption
     // an overwrite is the one commit allowed to CHANGE the partition
     // layout (every file is rewritten anyway): None inherits, Some(..)
     // re-lays the table and records the new layout in the log meta
@@ -2208,10 +2313,11 @@ object SnapshotTable {
     // a full rewrite re-baselines the schema: files carry the logical
     // names again, so the column mapping and retired-physical list
     // reset (old versions keep their own schema meta)
-    commit(spark, path, ReplaceSpec(stage(df, path, layout)),
-      meta = schemaMeta(df.schema) ++
+    commit(spark, path, readV,
+      schemaMeta(df.schema) ++
         Map("partition" -> layout.mkString(","), "droppedPhys" -> "",
-          "op" -> op))
+          "op" -> op),
+      Reuse(stage(df, path, layout)))
   }
 
   /** Hive-style DYNAMIC partition overwrite as ONE manifest commit:
@@ -2242,8 +2348,7 @@ object SnapshotTable {
     // data churn, not DDL
     val evolved = evolvedAppendSchema(spark, fs, path, readV, df,
       evolveSchema = false)
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
+    val body = readBody(fs, path, readV)
     val staged0 = stage(toPhysical(df, Some(evolved)), path, layout)
     val staged = maintainBlooms(spark, path, readMeta(fs, path, readV),
       Some(evolved), df.columns.toSeq, staged0)
@@ -2254,19 +2359,9 @@ object SnapshotTable {
     if (touchedVals.isEmpty) return readV
     val touched = (e: String) => touchedVals.contains(
       layout.map(c => entryPartitionValues(entryPath(e)).get(c)))
-    val dirtySegs = tagged.iterator.collect {
-      case (e, Some(sr)) if touched(e) => sr }.toSet
-    val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-      l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-    val loose = tagged.collect {
-      case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains)
-        => e }
-    val affected = manifest.filter(touched)
-    commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
+    commit(spark, path, Some(readV),
       Map("op" -> "REPLACE-PARTITIONS") ++ meta,
-      resolve = Some(ConflictSpec(readV, manifest.toSet,
-        manifest.iterator.map(entryPath).toSet, affected, staged,
-        e => touched(e))))
+      Rebase(body, body.entries.filter(touched), staged, touched))
   }
 
   /** EXACTLY-ONCE idempotent append for a streaming micro-batch: the
@@ -2290,7 +2385,9 @@ object SnapshotTable {
     * RESTARTED stream whose schema gained columns: the additive
     * evolution commits with the batch (metadata-only — old files
     * read the new columns as null), exactly [[append]]'s contract;
-    * anything else still refuses loudly. */
+    * anything else still refuses loudly. An evolving batch fails with
+    * ConcurrentModificationException when a concurrent commit changed
+    * the schema after this one read it — re-run on the new snapshot. */
   def appendStreamBatch(df: DataFrame, path: String,
       batchId: Long, partitionBy: Seq[String] = Nil,
       evolveSchema: Boolean = false): Option[Int] = {
@@ -2349,9 +2446,10 @@ object SnapshotTable {
         else if (evolveSchema) mapped.fold(
           Map.empty[String, String])(schemaMeta)
         else Map.empty[String, String]
-      Some(commit(spark, path, AppendSpec(stagedIndexed),
-        meta = Map("streamBatch" -> batchId.toString,
-          "op" -> "STREAM-APPEND") ++ schemaM))
+      Some(commit(spark, path, priorVs.lastOption,
+        Map("streamBatch" -> batchId.toString,
+          "op" -> "STREAM-APPEND") ++ schemaM,
+        Rebuild(appendBody(spark, fs, path, _, stagedIndexed))))
     }
   }
 
@@ -2427,8 +2525,8 @@ object SnapshotTable {
   /** [[merge]] reading a PINNED snapshot version — the testable shape
     * of the optimistic-concurrency contract: two mergeAt calls on the
     * same version ARE a write-write race, and the second one rebases
-    * (disjoint files and key ranges) or aborts (true overlap) per the
-    * [[ConflictSpec]] rules. */
+    * (disjoint files and key ranges) or aborts (true overlap) per
+    * [[commit]]'s [[Rebase]] rule. */
   private[graft] def mergeAt(updates: DataFrame, path: String,
       keyCols: Seq[String], readV: Int,
       meta: Map[String, String] = Map.empty,
@@ -2436,8 +2534,8 @@ object SnapshotTable {
       evolveSchema: Boolean = false): Int = {
     val spark = updates.sparkSession
     val fs = fsOf(spark, new Path(path))
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
+    val body = readBody(fs, path, readV)
+    val manifest = body.entries
     // schema check from the stored schema when present — building the
     // (DV-masked, projected) read plan just to list column names is
     // wasted planning work on every merge
@@ -2503,7 +2601,6 @@ object SnapshotTable {
         updates.select(keyCols.map(col): _*).limit(0)))
       .distinct().barrier()
     try {
-      val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
       // Level-1 pruning, NO data scan, two metadata signals per entry:
       //  (a) range: EVERY integral/date key column's cached [min,max]
       //      must intersect the update keys' overall range (entries that
@@ -2628,30 +2725,7 @@ object SnapshotTable {
           .join(keys, keyCols, "left_semi")
           .select(col("__file")).distinct()
           .collect().map(_.getString(0)).toSet
-      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-      val affected = manifest.filter(touched)
-      // clean segments pass through BY REFERENCE (O(churn) commit, no
-      // re-segmentation); only dirty segments' survivors and inline
-      // lines re-enter the list as loose entries
-      val dirtySegs = tagged.iterator.collect {
-        case (e, Some(sr)) if touched(e) => sr }.toSet
-      val keptRefs0 = readManifestRefs(fs, path, readV).filter(l =>
-        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-      val loose0 = tagged.collect {
-        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-      // a widened column's blooms were hashed from the NARROW type —
-      // carrying them would false-negative on widened probes (same
-      // hazard as widenColumn); strip from untouched lines and sidecars
-      val physWidened = widenedCols.map(n =>
-        physName(baseSt(baseSt.fieldIndex(n))))
-      val keptRefs =
-        if (physWidened.isEmpty) keptRefs0
-        else keptRefs0.map(r => physWidened.foldLeft(r)(
-          (acc, p2) => stripSidecarBloom(fs, path, acc, p2)))
-      val loose =
-        if (physWidened.isEmpty) loose0
-        else loose0.map(l => physWidened.foldLeft(l)(
-          (acc, p2) => stripBloomItem(acc, p2)))
+      val affected = body.entriesOf(affectedNames)
       // survivors read with the OLD schema (their files carry the old
       // physical names and narrow types), then project up to the
       // evolved one: widened columns cast, added columns null-backfill
@@ -2677,12 +2751,23 @@ object SnapshotTable {
       // key test cannot refute them (no footer reads on this path — an
       // absent stat conservatively aborts); all-null key columns match
       // no row at all, so nothing a racer adds can conflict. A
-      // schema-evolving merge stays abort-only: a rebase would rebuild
+      // schema-evolving merge stays pinned: a rebase would rebuild
       // its untouched lines from the latest manifest and lose the
-      // widened column's bloom strip.
-      val mayConflict: String => Boolean =
-        if (ranges.size < rangedKeys.size) _ => false
-        else levelOneMayHold(_, footerCheck = false)
+      // widened column's bloom strip — blooms hashed from the NARROW
+      // type would false-negative on widened probes (same hazard as
+      // widenColumn), so they leave the kept lines and sidecars.
+      val onMoved =
+        if (!evolveSchema) Rebase(body, affected, staged,
+          if (ranges.size < rangedKeys.size) _ => false
+          else levelOneMayHold(_, footerCheck = false))
+        else {
+          val physWidened = widenedCols.map(n =>
+            physName(baseSt(baseSt.fieldIndex(n))))
+          val (kept, loose) = keptBody(body, affected.toSet)
+          Pinned(kept.map(physWidened.foldLeft(_)(
+              stripSidecarBloom(fs, path, _, _))),
+            loose.map(physWidened.foldLeft(_)(stripBloomItem)) ++ staged)
+        }
       val evolveMeta =
         if (evolveSchema) schemaMeta(evolvedSt)
         else Map.empty[String, String]
@@ -2696,12 +2781,8 @@ object SnapshotTable {
       val keyMeta = Map("mergeKeys" ->
         (if (keyCols.exists(_.contains(","))) ""
          else keyCols.mkString(",")))
-      commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
-        Map("op" -> "MERGE") ++ keyMeta ++ evolveMeta ++ meta,
-        resolve = if (evolveSchema) None
-          else Some(ConflictSpec(readV, manifest.toSet,
-            manifest.iterator.map(entryPath).toSet, affected, staged,
-            mayConflict)))
+      commit(spark, path, Some(readV),
+        Map("op" -> "MERGE") ++ keyMeta ++ evolveMeta ++ meta, onMoved)
     } finally graft.Barrier.release(keys)
   }
 
@@ -2720,65 +2801,61 @@ object SnapshotTable {
     * changes() emits the deletes as exact row images. */
   def delete(spark: SparkSession, path: String, predicate: Column,
       meta: Map[String, String] = Map.empty): Int = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    val r = predRead(spark, path, predicate)
+    val affectedNames =
+      if (r.candidates.isEmpty) Set.empty[String]
+      else readEntriesDv(spark, path, r.readV, r.tableSchema,
+          r.candidates, keepRowId = true)
+        .filter(predicate)
+        .select(col("__file")).distinct()
+        .collect().map(_.getString(0)).toSet
+    val affected = r.body.entriesOf(affectedNames)
+    if (affected.isEmpty) r.readV
+    else {
+      val kept =
+        readEntriesDv(spark, path, r.readV, r.tableSchema, affected)
+          .filter(not(coalesce(predicate, lit(false))))
+      val staged = stage(
+        toPhysical(kept.coalesce(affected.size), r.tableSchema), path,
+        partitioning(spark, path))
+      commit(spark, path, Some(r.readV), Map("op" -> "DELETE") ++ meta,
+        Rebase(r.body, affected, staged, r.entryMayMatch))
+    }
+  }
+
+  /** The read prologue of the predicate verbs ([[delete]],
+    * [[deleteMoR]], [[updateMoR]]): the head version and its body,
+    * the stored schema (None = legacy log) and the schema the
+    * predicate resolves against, and `entryMayMatch` — the compiled
+    * predicate's metadata test for one entry (same evaluator as
+    * readWhere: partition values, cached ranges, byte bounds, blooms,
+    * null counts). It selects the `candidates` the row scan reads, so
+    * on a layout clustered or partitioned by the predicate column the
+    * scan touches only the straddling files, and it is the conflict
+    * evidence against entries a racer adds (conservative). */
+  private final case class PredRead(readV: Int, body: ReadBody,
+      tableSchema: Option[types.StructType], schema: types.StructType,
+      entryMayMatch: String => Boolean) {
+    val candidates: Seq[String] = body.entries.filter(entryMayMatch)
+  }
+
+  private def predRead(spark: SparkSession, path: String,
+      predicate: Column): PredRead = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no snapshot table at $path")
     val readV = vs.max
     val fs = fsOf(spark, new Path(path))
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    val body = readBody(fs, path, readV)
     val tableSchema = storedSchema(fs, path, readV)
-    // metadata pre-prune (same evaluator as readWhere): a file whose
-    // partition values or cached ranges PROVE the predicate can't hold
-    // needs neither the affected-scan nor a rewrite — on a layout
-    // clustered/partitioned by the predicate column the scan touches
-    // only the straddling files
-    val schemaForPred =
-      tableSchema.getOrElse(read(spark, path, Some(readV)).schema)
-    val pred = resolvedPredicate(spark, schemaForPred, predicate)
-    val cp = compilePred(pred)
-    val candidates = manifest.filter(e =>
+    val schema = tableSchema.getOrElse(read(spark, path, Some(readV)).schema)
+    val cp = compilePred(resolvedPredicate(spark, schema, predicate))
+    PredRead(readV, body, tableSchema, schema, e =>
       cp.evalN(entryPartitionValues(entryPath(e)),
         relabelStats(entryStats(e), tableSchema),
         relabelStats(entryStringStats(e), tableSchema),
         relabelStats(entryBloomStats(e), tableSchema),
         cpNulls(cp, e, tableSchema)))
-    val affectedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else readEntriesDv(spark, path, readV, tableSchema, candidates,
-          keepRowId = true)
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-    val affected = manifest.filter(touched)
-    if (affected.isEmpty) readV
-    else {
-      val dirtySegs = tagged.iterator.collect {
-        case (e, Some(sr)) if touched(e) => sr }.toSet
-      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-      val loose = tagged.collect {
-        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-      val kept =
-        readEntriesDv(spark, path, readV, tableSchema, affected)
-          .filter(not(coalesce(predicate, lit(false))))
-      val staged = stage(
-        toPhysical(kept.coalesce(affected.size), tableSchema), path,
-        partitioning(spark, path))
-      // racer-added files conflict when the metadata evaluator cannot
-      // refute this delete's predicate on them (conservative)
-      commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
-        Map("op" -> "DELETE") ++ meta,
-        resolve = Some(ConflictSpec(readV, manifest.toSet,
-          manifest.iterator.map(entryPath).toSet, affected, staged,
-          e => cp.evalN(entryPartitionValues(entryPath(e)),
-            relabelStats(entryStats(e), tableSchema),
-            relabelStats(entryStringStats(e), tableSchema),
-            relabelStats(entryBloomStats(e), tableSchema),
-            cpNulls(cp, e, tableSchema)))))
-    }
   }
 
   /** Merge-on-read DELETE: instead of rewriting the files that hold
@@ -2800,61 +2877,31 @@ object SnapshotTable {
     * like [[delete]]; no-match predicates commit nothing. */
   def deleteMoR(spark: SparkSession, path: String, predicate: Column,
       meta: Map[String, String] = Map.empty): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val fs = fsOf(spark, new Path(path))
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
     import org.apache.spark.sql.functions.col
-    val tableSchema = storedSchema(fs, path, readV)
-    val schemaForPred =
-      tableSchema.getOrElse(read(spark, path, Some(readV)).schema)
-    val pred = resolvedPredicate(spark, schemaForPred, predicate)
-    val cp = compilePred(pred)
-    val candidates = manifest.filter(e =>
-      cp.evalN(entryPartitionValues(entryPath(e)),
-        relabelStats(entryStats(e), tableSchema),
-        relabelStats(entryStringStats(e), tableSchema),
-        relabelStats(entryBloomStats(e), tableSchema),
-        cpNulls(cp, e, tableSchema)))
-    if (candidates.isEmpty) return readV
+    val r = predRead(spark, path, predicate)
+    if (r.candidates.isEmpty) return r.readV
     // live matching rows only: already-masked rows never re-enter
-    val hits = readEntriesDv(spark, path, readV, tableSchema, candidates,
-        keepRowId = true)
+    val hits = readEntriesDv(spark, path, r.readV, r.tableSchema,
+        r.candidates, keepRowId = true)
       .filter(predicate)
       .select(col("__file").as("file"), col("__pos").as("pos"))
       .barrier()
     try {
       val affectedNames = hits.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
-      if (affectedNames.isEmpty) return readV
-      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-      val affected = manifest.filter(touched)
-      val dirtySegs = tagged.iterator.collect {
-        case (e, Some(sr)) if touched(e) => sr }.toSet
-      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-      val loose = tagged.collect {
-        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
+      if (affectedNames.isEmpty) return r.readV
+      val affected = r.body.entriesOf(affectedNames)
       // cumulative vector: prior coordinates of the affected files ride
       // into the new commit's per-file blobs (each entry references ITS
       // OWN descriptor)
-      val dvRows = priorDvRows(spark, path, readV, affected)
+      val dvRows = priorDvRows(spark, path, r.readV, affected)
         .map(hits.unionByName(_)).getOrElse(hits)
       val descByFile = stageDvPerFile(spark, path, dvRows)
       val masked = affected.map(e =>
-        withDv(e, Seq(descByFile(fileOf(entryPath(e))))))
-      commitPinned(spark, path, keptRefs, loose ++ masked, readV + 1,
+        withDv(e, Seq(descByFile(fileNameOf(entryPath(e))))))
+      commit(spark, path, Some(r.readV),
         Map("op" -> "DELETE-MOR") ++ meta,
-        resolve = Some(ConflictSpec(readV, manifest.toSet,
-          manifest.iterator.map(entryPath).toSet, affected, masked,
-          e => cp.evalN(entryPartitionValues(entryPath(e)),
-            relabelStats(entryStats(e), tableSchema),
-            relabelStats(entryStringStats(e), tableSchema),
-            relabelStats(entryBloomStats(e), tableSchema),
-            cpNulls(cp, e, tableSchema)))))
+        Rebase(r.body, affected, masked, r.entryMayMatch))
     } finally graft.Barrier.release(hits)
   }
 
@@ -2869,33 +2916,15 @@ object SnapshotTable {
   def updateMoR(spark: SparkSession, path: String, predicate: Column,
       assignments: Map[String, Column],
       meta: Map[String, String] = Map.empty): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val fs = fsOf(spark, new Path(path))
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
-    val fileOf = (p: String) => p.substring(p.lastIndexOf('/') + 1)
     import org.apache.spark.sql.functions.col
-    val tableSchema = storedSchema(fs, path, readV)
-    val schemaForPred =
-      tableSchema.getOrElse(read(spark, path, Some(readV)).schema)
-    require(assignments.keys.forall(k =>
-      schemaForPred.fieldNames.contains(k)),
+    val r = predRead(spark, path, predicate)
+    require(assignments.keys.forall(r.schema.fieldNames.contains),
       s"updateMoR assigns unknown columns: " +
-        assignments.keys.filterNot(schemaForPred.fieldNames.contains)
+        assignments.keys.filterNot(r.schema.fieldNames.contains)
           .mkString(","))
-    val pred = resolvedPredicate(spark, schemaForPred, predicate)
-    val cp = compilePred(pred)
-    val candidates = manifest.filter(e =>
-      cp.evalN(entryPartitionValues(entryPath(e)),
-        relabelStats(entryStats(e), tableSchema),
-        relabelStats(entryStringStats(e), tableSchema),
-        relabelStats(entryBloomStats(e), tableSchema),
-        cpNulls(cp, e, tableSchema)))
-    if (candidates.isEmpty) return readV
-    val matched = readEntriesDv(spark, path, readV, tableSchema, candidates,
-        keepRowId = true)
+    if (r.candidates.isEmpty) return r.readV
+    val matched = readEntriesDv(spark, path, r.readV, r.tableSchema,
+        r.candidates, keepRowId = true)
       .filter(predicate)
       .barrier()
     try {
@@ -2903,30 +2932,23 @@ object SnapshotTable {
         col("__pos").as("pos"))
       val affectedNames = hits.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
-      if (affectedNames.isEmpty) return readV
-      val touched = (e: String) => affectedNames.contains(fileOf(entryPath(e)))
-      val affected = manifest.filter(touched)
-      val dirtySegs = tagged.iterator.collect {
-        case (e, Some(sr)) if touched(e) => sr }.toSet
-      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-      val loose = tagged.collect {
-        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
-      val dvRows = priorDvRows(spark, path, readV, affected)
+      if (affectedNames.isEmpty) return r.readV
+      val affected = r.body.entriesOf(affectedNames)
+      val dvRows = priorDvRows(spark, path, r.readV, affected)
         .map(hits.unionByName(_)).getOrElse(hits)
       val descByFile = stageDvPerFile(spark, path, dvRows)
       // new images: matched rows with assignments applied, table columns
       val updated = matched.drop("__file", "__pos")
-        .select(schemaForPred.fieldNames.toSeq.map(n =>
+        .select(r.schema.fieldNames.toSeq.map(n =>
           assignments.get(n).map(_.as(n)).getOrElse(col(n))): _*)
       // size the new-image write like the DV: churn-proportional
       val staged = stage(
         toPhysical(updated.coalesce(math.max(1,
-          affectedNames.size / 8)), tableSchema), path,
+          affectedNames.size / 8)), r.tableSchema), path,
         partitioning(spark, path))
       val newLines = affected.map(e =>
-        withDv(e, Seq(descByFile(fileOf(entryPath(e)))))) ++ staged
-      commitPinned(spark, path, keptRefs, loose ++ newLines, readV + 1,
+        withDv(e, Seq(descByFile(fileNameOf(entryPath(e)))))) ++ staged
+      commit(spark, path, Some(r.readV),
         Map("op" -> "UPDATE-MOR",
           // the SET columns ride the meta so the change feed can pair a
           // masked row with its updated image on the untouched-column
@@ -2935,13 +2957,7 @@ object SnapshotTable {
           "updateSet" ->
             (if (assignments.keys.exists(_.contains(","))) ""
              else assignments.keys.toSeq.sorted.mkString(","))) ++ meta,
-        resolve = Some(ConflictSpec(readV, manifest.toSet,
-          manifest.iterator.map(entryPath).toSet, affected, newLines,
-          e => cp.evalN(entryPartitionValues(entryPath(e)),
-            relabelStats(entryStats(e), tableSchema),
-            relabelStats(entryStringStats(e), tableSchema),
-            relabelStats(entryBloomStats(e), tableSchema),
-            cpNulls(cp, e, tableSchema)))))
+        Rebase(r.body, affected, newLines, r.entryMayMatch))
     } finally graft.Barrier.release(matched)
   }
 
@@ -3175,14 +3191,15 @@ object SnapshotTable {
     //  - streamBatch: rewinding the exactly-once marker would make a
     //    sink re-accept already-delivered batch ids (see scaladoc);
     //  - op / restoredFrom: this commit's own identity, set below.
-    // (eot/wv/ts never inherit — commitPinned strips and restamps.)
+    // (eot/wv/ts never inherit — commit strips and restamps.)
     val carryForward = Set("streamBatch", "op", "restoredFrom",
       "eot", "wv", "ts")
     val resets = (headMeta.keySet -- oldMeta.keySet -- carryForward)
       .map(_ -> "").toMap
-    commitPinned(spark, path, refs, loose, head + 1,
+    commit(spark, path, Some(head),
       oldMeta ++ resets +
-        ("op" -> "RESTORE", "restoredFrom" -> version.toString))
+        ("op" -> "RESTORE", "restoredFrom" -> version.toString),
+      Pinned(refs, loose))
   }
 
   /** Batch change-data-feed over a version RANGE — the batch twin of
@@ -3369,108 +3386,6 @@ object SnapshotTable {
             .otherwise(lit("update_preimage")))
           .otherwise(col("change_type")))
     }
-  }
-
-  /** Evidence for optimistic conflict RESOLUTION of a pinned
-    * row-level commit (the Delta-style logical conflict check): when
-    * the pinned version slot is lost, the commit REBASES onto the new
-    * latest version and retries — instead of aborting — provided
-    *  1. every entry line this commit consumed (rewrote, re-masked,
-    *     or re-annotated) is still present VERBATIM at the latest
-    *     version — no racer touched the same files; and
-    *  2. no line a racer introduced for a NEW file may hold rows
-    *     matching this commit's read (`mayConflict`, conservative —
-    *     unknown means conflict). Lines racers re-annotated on files
-    *     that already existed at `readV` are exempt: data files are
-    *     immutable and deletion vectors only SHRINK visibility, so a
-    *     surviving file can never grow matching rows.
-    * Anything else still aborts with ConcurrentModificationException.
-    * Abort-only serialized every writer on a hot table; this lets
-    * disjoint row-level commits — merges on different key ranges,
-    * compaction racing an append — all land. */
-  private final case class ConflictSpec(
-      readV: Int,
-      readLines: Set[String],
-      readPaths: Set[String],
-      touched: Seq[String],
-      newLines: Seq[String],
-      mayConflict: String => Boolean)
-
-  /** Create-exclusive commit of exactly `version` (body = `keptRefs`
-    * segment references + the `loose` inline tail, segmented when it
-    * outgrows the threshold). Losing the slot means the snapshot this
-    * commit was derived from is no longer latest: with a
-    * [[ConflictSpec]] the commit rebases and retries when provably
-    * disjoint from the interleaved commits, otherwise (or without
-    * one) it fails with ConcurrentModificationException and the
-    * CALLER must re-run on the new snapshot. Same torn-manifest
-    * cleanup as [[commit]]. */
-  private def commitPinned(spark: SparkSession, path: String,
-      keptRefs: Seq[String], loose: Seq[String], version: Int,
-      meta: Map[String, String] = Map.empty,
-      resolve: Option[ConflictSpec] = None): Int = {
-    val fs = fsOf(spark, logDir(path))
-    fs.mkdirs(logDir(path))
-    // true = committed v; false = LOST THE RACE for v (the pluggable
-    // store's atomic create refused the name); unrecoverable write
-    // failures throw inside the store
-    def attempt(v: Int, refs: Seq[String], tail: Seq[String]): Boolean = {
-      // inherit the prior version's metadata (streaming markers etc.,
-      // this commit's keys winning) — same rule as commit(), witness
-      // first and a fresh publication instant, never inherited,
-      // clamped monotone over the prior version (see commit())
-      val metaLines = Seq(WvLine,
-        s"#ts=${monotonicTs(fs, path, if (v > 0) Some(v - 1) else None)}") ++
-        ((readMeta(fs, path, v - 1) ++ meta) - "eot" - "wv" - "ts")
-          .toSeq.sortBy(_._1).map { case (k, v2) => s"#$k=$v2" }
-      val body = refs ++ inlineOrSegment(spark, fs, path, tail) ++
-        Seq(EotLine)
-      val target = new Path(logDir(path), manifestName(v))
-      GraftLogStore.forSession(spark).createAtomic(fs, target,
-        (metaLines ++ body).mkString("\n").getBytes("UTF-8"))
-    }
-    if (attempt(version, keptRefs, loose)) return version
-    val cs = resolve.getOrElse(
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot table at $path advanced past version ${version - 1} " +
-          "while this commit ran — re-run on the new snapshot"))
-    var tries = 0
-    while (tries < 20) {
-      val latest = versions(spark, path).max
-      val refsL = readManifestRefs(fs, path, latest)
-      val taggedL = readManifestTagged(fs, path, latest)
-      val latestLines = taggedL.map(_._1).toSet
-      // (1) our consumed lines must survive verbatim — a racer that
-      // rewrote, re-masked, or dropped any of them is a true overlap
-      if (!cs.touched.forall(latestLines.contains))
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot table at $path: a concurrent commit modified " +
-            "files this commit also rewrites — re-run on the new snapshot")
-      // (2) racer-added files must provably hold no matching rows;
-      // re-annotated survivors of files we read are exempt (their
-      // visible rows only shrink)
-      val added = taggedL.iterator.map(_._1)
-        .filterNot(cs.readLines.contains)
-        .filterNot(l => cs.readPaths.contains(entryPath(l)))
-      if (added.exists(cs.mayConflict))
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot table at $path: a concurrent commit added files " +
-            "that may match this commit's read — re-run on the new snapshot")
-      // rebase: the LATEST body minus our consumed lines, plus our
-      // new lines — clean segments pass through by reference
-      val touchedSet = cs.touched.toSet
-      val dirty = taggedL.iterator.collect {
-        case (e2, Some(sr)) if touchedSet.contains(e2) => sr }.toSet
-      val keptR = refsL.filter(l => l.startsWith(SegPrefix) &&
-        !dirty.contains(refRel(l)))
-      val looseR = taggedL.collect {
-        case (e2, sOpt) if !touchedSet.contains(e2) &&
-          sOpt.forall(dirty.contains) => e2 }
-      if (attempt(latest + 1, keptR, looseR ++ cs.newLines))
-        return latest + 1
-      tries += 1
-    }
-    sys.error(s"snapshot commit: gave up after $tries rebase conflicts")
   }
 
   /** The publication instant to stamp into a new commit:
@@ -4912,7 +4827,8 @@ object SnapshotTable {
     require(vs.nonEmpty, s"no snapshot table at $path")
     val readV = vs.max
     val fs = fsOf(spark, logDir(path))
-    val manifest = readManifest(fs, path, readV)
+    val body = readBody(fs, path, readV)
+    val manifest = body.entries
     // bits = 0 AUTO-SIZES by file count: cap the whole index near
     // 2^33 bits (~1 GB decoded) per column, clamped to [2^13, 2^16]
     // — at 16 files that is the classic 2^16 (8 KB/file), at 1M
@@ -4940,14 +4856,12 @@ object SnapshotTable {
     // Conflict evidence: every entry is re-annotated (touched), but a
     // racer's pure APPEND never conflicts — its files simply stay
     // un-bloomed (no item = keep = sound), so the rebase lands both.
-    commitPinned(spark, path, Seq.empty, enriched, readV + 1,
-      meta = Map("bloomCols" -> cols.mkString(","),
+    commit(spark, path, Some(readV),
+      Map("bloomCols" -> cols.mkString(","),
         "bloomBits" -> bitsEff.toString,
         "bloomHashes" -> hashes.toString,
         "op" -> "INDEX-BLOOM"),
-      resolve = Some(ConflictSpec(readV, manifest.toSet,
-        manifest.iterator.map(entryPath).toSet, manifest, enriched,
-        _ => false)))
+      Rebase(body, manifest, enriched, _ => false))
   }
 
   /** `staged` entries enriched per the table's recorded bloom policy
@@ -5147,11 +5061,9 @@ object SnapshotTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no snapshot table at $path")
     val readV = vs.max
-    val tagged = readManifestTagged(fs, path, readV)
-    val manifest = tagged.map(_._1)
-    val touched = (e: String) => entryDvs(e).nonEmpty ||
-      entryLenOf(fs, path, e) < targetFileBytes / 2
-    val rewrite = manifest.filter(touched)
+    val body = readBody(fs, path, readV)
+    val rewrite = body.entries.filter(e => entryDvs(e).nonEmpty ||
+      entryLenOf(fs, path, e) < targetFileBytes / 2)
     // two small files compact into one; a single DV'd file still
     // rewrites (the point is clearing its read tax, not its size)
     if (rewrite.size < 2 && !rewrite.exists(e => entryDvs(e).nonEmpty))
@@ -5166,21 +5078,12 @@ object SnapshotTable {
         .coalesce(nFiles)
       val staged = stage(toPhysical(compacted, rewriteSchema), path,
         partitioning(spark, path))
-      val dirtySegs = tagged.iterator.collect {
-        case (e, Some(sr)) if touched(e) => sr }.toSet
-      val keptRefs = readManifestRefs(fs, path, readV).filter(l =>
-        l.startsWith(SegPrefix) && !dirtySegs.contains(refRel(l)))
-      val loose = tagged.collect {
-        case (e, sOpt) if !touched(e) && sOpt.forall(dirtySegs.contains) => e }
       // compaction depends on no row content beyond the files it
       // rewrites: a racer's ADDED files never conflict (they are
       // merely not compacted this pass), so it composes with
       // concurrent appends; touching the same files still aborts
-      Some(commitPinned(spark, path, keptRefs, loose ++ staged, readV + 1,
-        meta = Map("op" -> "OPTIMIZE"),
-        resolve = Some(ConflictSpec(readV, manifest.toSet,
-          manifest.iterator.map(entryPath).toSet, rewrite, staged,
-          _ => false))))
+      Some(commit(spark, path, Some(readV), Map("op" -> "OPTIMIZE"),
+        Rebase(body, rewrite, staged, _ => false)))
     }
   }
 

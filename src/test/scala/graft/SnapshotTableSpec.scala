@@ -4468,6 +4468,140 @@ class SnapshotTableSpec extends SparkSpec {
       (e.getCause != null &&
         e.getCause.getMessage.contains("simulated disk failure")))
   }
+
+  test("a commit that never wins a slot gives up with " +
+      "ConcurrentModificationException naming path, read version, attempts") {
+    val path = freshPath("giveup")
+    SnapshotTable.create(spark.range(10).toDF("id"), path)
+    spark.conf.set("spark.graft.logStore.class",
+      classOf[LosingLogStore].getName)
+    try {
+      // an append-shaped commit and a row-level rebase share one cap
+      Seq[() => Int](
+        () => SnapshotTable.append(spark.range(10, 12).toDF("id"), path),
+        () => SnapshotTable.delete(spark, path, col("id") < 3L)
+      ).foreach { verb =>
+        LosingLogStore.calls.set(0)
+        val e = intercept[java.util.ConcurrentModificationException](verb())
+        assert(LosingLogStore.calls.get() === 50)
+        assert(e.getMessage.contains(path), e.getMessage)
+        assert(e.getMessage.contains("read version 0"), e.getMessage)
+        assert(e.getMessage.contains("50 attempts"), e.getMessage)
+      }
+    } finally spark.conf.unset("spark.graft.logStore.class")
+    assert(SnapshotTable.versions(spark, path) === Seq(0))
+    assert(SnapshotTable.read(spark, path).count() === 10)
+  }
+
+  test("a schema-changing commit refuses to publish over a concurrent " +
+      "schema change: no committed column is lost or brought back") {
+    import org.apache.spark.sql.types.{StringType, StructField}
+    spark.conf.set("spark.graft.logStore.class",
+      classOf[RacingLogStore].getName)
+    try {
+      // append vs addColumns: the append read the schema before the
+      // column was added and must not publish it away
+      val p1 = freshPath("schemarace1")
+      SnapshotTable.create((0L until 5L).toDF("id"), p1)
+      RacingLogStore.raceNext(p1)(SnapshotTable.addColumns(spark, p1,
+        Seq(StructField("extra", StringType))))
+      val e1 = intercept[java.util.ConcurrentModificationException] {
+        SnapshotTable.append((5L until 8L).toDF("id"), p1)
+      }
+      assert(e1.getMessage.contains(p1), e1.getMessage)
+      assert(SnapshotTable.versions(spark, p1) === Seq(0, 1))
+      assert(SnapshotTable.read(spark, p1).columns.toSeq ===
+        Seq("id", "extra"))
+      // two evolving appends adding different columns: the loser
+      // re-runs on the new snapshot and both columns land
+      val p2 = freshPath("schemarace2")
+      SnapshotTable.create((0L until 5L).toDF("id"), p2)
+      RacingLogStore.raceNext(p2)(SnapshotTable.append(
+        Seq((5L, "b5")).toDF("id", "b"), p2, evolveSchema = true))
+      val c6 = Seq((6L, "c6")).toDF("id", "c")
+      intercept[java.util.ConcurrentModificationException] {
+        SnapshotTable.append(c6, p2, evolveSchema = true)
+      }
+      assert(SnapshotTable.read(spark, p2).columns.toSeq === Seq("id", "b"))
+      SnapshotTable.append(c6, p2, evolveSchema = true)
+      val t2 = SnapshotTable.read(spark, p2)
+      assert(t2.columns.toSeq === Seq("id", "b", "c"))
+      assert(t2.where(col("id") === 5L).select("b").head.getString(0) === "b5")
+      assert(t2.where(col("id") === 6L).select("c").head.getString(0) === "c6")
+      assert(t2.count() === 7)
+      // dropColumn vs dropColumn: the loser must not bring back the
+      // column the winner dropped
+      val p3 = freshPath("schemarace3")
+      SnapshotTable.create(Seq((1L, 2L, 3L)).toDF("id", "x", "y"), p3)
+      RacingLogStore.raceNext(p3)(SnapshotTable.dropColumn(spark, p3, "x"))
+      intercept[java.util.ConcurrentModificationException] {
+        SnapshotTable.dropColumn(spark, p3, "y")
+      }
+      assert(SnapshotTable.read(spark, p3).columns.toSeq === Seq("id", "y"))
+      SnapshotTable.dropColumn(spark, p3, "y")
+      assert(SnapshotTable.read(spark, p3).columns.toSeq === Seq("id"))
+    } finally spark.conf.unset("spark.graft.logStore.class")
+  }
+
+  test("every row-level verb rebases over a disjoint racing append and " +
+      "matches the serial append-then-verb") {
+    spark.conf.set("spark.graft.manifest.segmentEntries", "2")
+    spark.conf.set("spark.graft.logStore.class",
+      classOf[RacingLogStore].getName)
+    try {
+      // 8 range-clustered files in 2 partitions (segments of 2 entries)
+      // plus one inline entry: a verb touching id < 5 keeps clean
+      // segment refs and carries a loose tail
+      def table(tag: String): String = {
+        val p = freshPath(tag)
+        SnapshotTable.create((0L until 40L)
+          .map(i => (i, i * 10, if (i < 20) "a" else "b"))
+          .toDF("id", "v", "part").repartitionByRange(8, col("id")),
+          p, partitionBy = Seq("part"))
+        SnapshotTable.append(Seq((40L, 400L, "b")).toDF("id", "v", "part"), p)
+        p
+      }
+      def racer(p: String): Unit = SnapshotTable.append((1000L until 1005L)
+        .map(i => (i, i, "c")).toDF("id", "v", "part"), p)
+      def rows(p: String): Seq[(Long, Long, String)] =
+        SnapshotTable.read(spark, p).select("id", "v", "part")
+          .as[(Long, Long, String)].collect().toSeq.sorted
+      val verbs: Seq[(String, String => Any)] = Seq(
+        "delete" -> (p => SnapshotTable.delete(spark, p, col("id") < 5L)),
+        "deleteMoR" -> (p =>
+          SnapshotTable.deleteMoR(spark, p, col("id") < 5L)),
+        "updateMoR" -> (p => SnapshotTable.updateMoR(spark, p,
+          col("id") < 5L, Map("v" -> lit(-1L)))),
+        "merge" -> (p => SnapshotTable.merge(
+          Seq((1L, 7L, "a"), (2L, 8L, "a")).toDF("id", "v", "part"), p,
+          Seq("id"))),
+        "replacePartitions" -> (p => SnapshotTable.replacePartitions(
+          Seq((3L, 9L, "a")).toDF("id", "v", "part"), p)),
+        "optimizeIncremental" -> (p =>
+          SnapshotTable.optimizeIncremental(spark, p, 1L << 30)),
+        "indexBloom" -> (p => SnapshotTable.indexBloom(spark, p, Seq("id"))))
+      verbs.foreach { case (name, verb) =>
+        val raced = table(s"raced$name")
+        val head = SnapshotTable.versions(spark, raced).max
+        val body = scala.io.Source.fromFile(
+          f"$raced/_graft_log/v$head%08d.manifest").getLines().toSeq
+        assert(body.exists(_.startsWith("@seg=")) &&
+          body.exists(l => l.startsWith("files/")), s"$name: $body")
+        RacingLogStore.raceNext(raced)(racer(raced))
+        verb(raced)
+        assert(!RacingLogStore.pending(raced), s"$name never committed")
+        assert(SnapshotTable.versions(spark, raced).takeRight(3) ===
+          Seq(head, head + 1, head + 2), name)
+        val serial = table(s"serial$name")
+        racer(serial)
+        verb(serial)
+        assert(rows(raced) === rows(serial), name)
+      }
+    } finally {
+      spark.conf.unset("spark.graft.logStore.class")
+      spark.conf.unset("spark.graft.manifest.segmentEntries")
+    }
+  }
 }
 
 /** Local filesystem that fails every exclusive manifest create the way

@@ -26,3 +26,45 @@ object ConditionalPutLogStore {
   val claimed =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 }
+
+/** A store that makes a commit lose its version slot on purpose: a
+  * racer registered for a table path runs once, right before the next
+  * createAtomic on that path, so the commit that triggered it always
+  * finds its slot taken by the racer's commit. The registration is
+  * removed before the racer runs, so the racer's own commits pass
+  * straight through (the re-entrancy guard). */
+class RacingLogStore extends graft.sources.HdfsLogStore {
+  override def createAtomic(fs: FileSystem, target: Path,
+      content: Array[Byte]): Boolean = {
+    // target = <table>/_graft_log/v<N>.manifest
+    val table = target.getParent.getParent.toUri.getPath
+    Option(RacingLogStore.racers.remove(table)).foreach(_.apply())
+    super.createAtomic(fs, target, content)
+  }
+}
+
+object RacingLogStore {
+  val racers =
+    new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
+
+  /** Run `racer` once, before the next manifest commit on `path`. */
+  def raceNext(path: String)(racer: => Unit): Unit =
+    racers.put(new Path(path).toUri.getPath, () => racer)
+
+  def pending(path: String): Boolean =
+    racers.containsKey(new Path(path).toUri.getPath)
+}
+
+/** A store under which every commit loses its slot and nothing is
+  * ever written: the commit loop's give-up path. */
+class LosingLogStore extends graft.sources.GraftLogStore {
+  override def createAtomic(fs: FileSystem, target: Path,
+      content: Array[Byte]): Boolean = {
+    LosingLogStore.calls.incrementAndGet()
+    false
+  }
+}
+
+object LosingLogStore {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
+}
