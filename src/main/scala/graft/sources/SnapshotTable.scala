@@ -1981,11 +1981,12 @@ object SnapshotTable {
     * (monotone over the head's), the head's meta with `meta` winning,
     * the body, end marker.
     *
-    * A lost slot means the head moved past `readV`; the commit lists
-    * the log and applies the verb's rule against the latest head:
+    * Every attempt first lists the log. When the head is past `readV`
+    * — already at the listing, or because the last attempt lost its
+    * slot — the commit applies the verb's rule against that head:
     *  - [[Rebuild]] (append, stream batch, metadata-only DDL):
-    *    rebuild the body on the latest head and retry;
-    *  - [[Reuse]] (overwrite): retry the same body;
+    *    rebuild the body on the latest head;
+    *  - [[Reuse]] (overwrite): the same body;
     *  - [[Rebase]] (merge, delete, deleteMoR, updateMoR,
     *    replacePartitions, optimizeIncremental, indexBloom): every
     *    consumed entry must still be present verbatim at the latest
@@ -1993,15 +1994,20 @@ object SnapshotTable {
     *    not read may conflict (re-annotated survivors are exempt:
     *    data files are immutable and deletion vectors only shrink
     *    visibility); then the latest body minus the consumed entries
-    *    plus `newLines` is retried, else ConcurrentModificationException;
+    *    plus `newLines`, else ConcurrentModificationException;
     *  - [[Pinned]]: create and convert (`readV` None) throw
     *    IllegalArgumentException, two writers creating one path being
     *    a caller bug rather than a conflict to resolve; restore and
     *    the schema-evolving merge throw ConcurrentModificationException.
-    * A [[Rebuild]] or [[Rebase]] commit whose `meta` sets `schema`
-    * never publishes over a head whose `schema` or `droppedPhys`
-    * differs from the version it read — it would revert that schema
-    * change — and throws ConcurrentModificationException instead.
+    * Writing at `readV + 1` without the listing could land BELOW the
+    * head once [[vacuum]] has removed that slot's manifest: the create
+    * would succeed and the commit would never be read. A read version
+    * vacuumed while the verb ran throws ConcurrentModificationException.
+    * A [[Rebuild]] or [[Rebase]] commit never publishes over a head
+    * whose `schema` or `droppedPhys` differs from the version it read
+    * — it would revert that change, or publish files and blooms
+    * written for the old schema — and throws
+    * ConcurrentModificationException instead.
     * After [[MaxCommitAttempts]] lost slots it throws
     * ConcurrentModificationException naming the path, the version
     * read and the attempts. In every case the caller re-runs on the
@@ -2014,8 +2020,15 @@ object SnapshotTable {
     val store = GraftLogStore.forSession(spark)
     def metaOf(v: Option[Int]) =
       v.fold(Map.empty[String, String])(readMeta(fs, path, _))
-    val readMetaV = metaOf(readV)
     val readLabel = readV.fold("(none)")(_.toString)
+    def moved(msg: String) = new java.util.ConcurrentModificationException(
+      s"snapshot table at $path$msg — re-run on the new snapshot")
+    // a read version vacuumed while the verb ran is a conflict too
+    val readMetaV =
+      try metaOf(readV)
+      catch { case _: java.io.FileNotFoundException =>
+        throw moved(s": version $readLabel was vacuumed while this " +
+          "commit ran") }
     def schemaKeys(m: Map[String, String]) =
       Seq("schema", "droppedPhys").map(m.get(_).filter(_.nonEmpty))
     def rebased(r: Rebase, on: ReadBody): Seq[String] = {
@@ -2023,11 +2036,51 @@ object SnapshotTable {
       val (kept, loose) = keptBody(on, touched)
       kept ++ inlineOrSegment(spark, fs, path, loose ++ r.newLines)
     }
-    def moved(msg: String) = new java.util.ConcurrentModificationException(
-      s"snapshot table at $path$msg — re-run on the new snapshot")
+    // the body over the version read, built BEFORE the listing that
+    // decides whether it still applies: only that listing and the
+    // head's instant read lie between the check and the create
+    val first = onMoved match {
+      case Rebuild(f) => f(readV)
+      case Reuse(tail) => inlineOrSegment(spark, fs, path, tail)
+      case r: Rebase => rebased(r, r.read)
+      case Pinned(kept, tail) =>
+        kept ++ inlineOrSegment(spark, fs, path, tail)
+    }
+    // the verb's rule for a head past the version read
+    def bodyOver(head: Option[Int], headMeta: Map[String, String])
+        : Seq[String] = onMoved match {
+      case Pinned(_, _) if readV.isEmpty =>
+        throw new IllegalArgumentException(s"commit: expected to " +
+          s"publish version 0 of $path but the log is at " +
+          s"${head.getOrElse(-1)} — lost a concurrent " +
+          "create/convert race (the other writer's table is live; " +
+          "re-read before writing)")
+      case Pinned(_, _) =>
+        throw moved(s" advanced past version $readLabel while this " +
+          "commit ran")
+      case Reuse(_) => first
+      case _ if schemaKeys(headMeta) != schemaKeys(readMetaV) =>
+        throw moved(s": the schema changed after version $readLabel " +
+          "was read")
+      case Rebuild(f) => f(head)
+      case r: Rebase =>
+        val on = head.fold(ReadBody(Nil, Nil))(readBody(fs, path, _))
+        val present = on.entries.toSet
+        if (!r.touched.forall(present.contains))
+          throw moved(": a concurrent commit modified files this " +
+            "commit also rewrites")
+        val readPaths = r.read.entries.iterator.map(entryPath).toSet
+        if (on.entries.exists(l =>
+            !readPaths.contains(entryPath(l)) && r.mayConflict(l)))
+          throw moved(": a concurrent commit added files that may " +
+            "match this commit's read")
+        rebased(r, on)
+    }
     @annotation.tailrec
-    def land(head: Option[Int], headMeta: Map[String, String],
-        body: Seq[String], attempt: Int): Int = {
+    def land(attempt: Int): Int = {
+      val head = versions(spark, path).lastOption
+      val headMeta = if (head == readV) readMetaV else metaOf(head)
+      val body = if (head == readV) first else bodyOver(head, headMeta)
       val v = head.fold(0)(_ + 1)
       // metadata is INHERITED commit-over-commit (this commit's keys
       // win): markers like the streaming batch id stay on the log head
@@ -2052,49 +2105,9 @@ object SnapshotTable {
       else if (attempt == MaxCommitAttempts)
         throw moved(s": gave up after $attempt attempts to commit over " +
           s"read version $readLabel")
-      else {
-        val latest = versions(spark, path).lastOption
-        lazy val latestMeta = metaOf(latest)
-        val next = onMoved match {
-          case Pinned(_, _) if readV.isEmpty =>
-            throw new IllegalArgumentException(s"commit: expected to " +
-              s"publish version 0 of $path but the log is at " +
-              s"${latest.getOrElse(-1)} — lost a concurrent " +
-              "create/convert race (the other writer's table is live; " +
-              "re-read before writing)")
-          case Pinned(_, _) =>
-            throw moved(s" advanced past version $readLabel while this " +
-              "commit ran")
-          case Reuse(_) => body
-          case _ if meta.contains("schema") &&
-              schemaKeys(latestMeta) != schemaKeys(readMetaV) =>
-            throw moved(s": the schema changed after version $readLabel " +
-              "was read")
-          case Rebuild(f) => f(latest)
-          case r: Rebase =>
-            val on = latest.fold(ReadBody(Nil, Nil))(readBody(fs, path, _))
-            val present = on.entries.toSet
-            if (!r.touched.forall(present.contains))
-              throw moved(": a concurrent commit modified files this " +
-                "commit also rewrites")
-            val readPaths = r.read.entries.iterator.map(entryPath).toSet
-            if (on.entries.exists(l =>
-                !readPaths.contains(entryPath(l)) && r.mayConflict(l)))
-              throw moved(": a concurrent commit added files that may " +
-                "match this commit's read")
-            rebased(r, on)
-        }
-        land(latest, latestMeta, next, attempt + 1)
-      }
+      else land(attempt + 1)
     }
-    val first = onMoved match {
-      case Rebuild(f) => f(readV)
-      case Reuse(tail) => inlineOrSegment(spark, fs, path, tail)
-      case r: Rebase => rebased(r, r.read)
-      case Pinned(kept, tail) =>
-        kept ++ inlineOrSegment(spark, fs, path, tail)
-    }
-    land(readV, readMetaV, first, 1)
+    land(1)
   }
 
   /** Commit `df` as version 0. Fails if the table already exists.
@@ -2283,14 +2296,14 @@ object SnapshotTable {
     val fs = fsOf(spark, logDir(path))
     val evolved = evolvedAppendSchema(spark, fs, path, vs.max, df,
       evolveSchema)
+    val readMetaV = readMeta(fs, path, vs.max)
     // appends inherit the table's partition layout from the log meta
     val staged = stage(toPhysical(df, Some(evolved)), path,
       partitioning(spark, path))
     // and maintain the bloom index for their own files, like
     // streaming batches — batch appends must not decay pruning either
-    val stagedIndexed = maintainBlooms(spark, path,
-      readMeta(fs, path, vs.max), Some(evolved), df.columns.toSeq,
-      staged)
+    val stagedIndexed = maintainBlooms(spark, path, readMetaV,
+      Some(evolved), df.columns.toSeq, staged)
     commit(spark, path, Some(vs.max),
       schemaMeta(evolved) + ("op" -> "APPEND"),
       Rebuild(appendBody(spark, fs, path, _, stagedIndexed)))

@@ -4493,8 +4493,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, path).count() === 10)
   }
 
-  test("a schema-changing commit refuses to publish over a concurrent " +
-      "schema change: no committed column is lost or brought back") {
+  test("a commit refuses to publish over a concurrent schema change: " +
+      "no committed column is lost or brought back, no stale bloom lands") {
     import org.apache.spark.sql.types.{StringType, StructField}
     spark.conf.set("spark.graft.logStore.class",
       classOf[RacingLogStore].getName)
@@ -4540,7 +4540,65 @@ class SnapshotTableSpec extends SparkSpec {
       assert(SnapshotTable.read(spark, p3).columns.toSeq === Seq("id", "y"))
       SnapshotTable.dropColumn(spark, p3, "y")
       assert(SnapshotTable.read(spark, p3).columns.toSeq === Seq("id"))
+      // indexBloom vs widenColumn: blooms hashed from the narrow type
+      // must not publish over the widened column, where every probe
+      // would false-negative and prune the file holding the key
+      val p4 = freshPath("schemarace4")
+      SnapshotTable.create((0 until 2000).map(i => (i, s"t$i"))
+        .toDF("id", "tag").repartition(8, col("id")), p4)
+      RacingLogStore.raceNext(p4)(SnapshotTable.widenColumn(spark, p4, "id",
+        org.apache.spark.sql.types.LongType))
+      intercept[java.util.ConcurrentModificationException] {
+        SnapshotTable.indexBloom(spark, p4, Seq("id"))
+      }
+      assert(SnapshotTable.versions(spark, p4) === Seq(0, 1))
+      val (hit4, kept4, total4) = SnapshotTable.readWherePruned(spark, p4,
+        col("id") === 1234L)
+      assert(hit4.count() === 1 && kept4 === total4)
     } finally spark.conf.unset("spark.graft.logStore.class")
+  }
+
+  test("a commit whose read version was vacuumed while it staged never " +
+      "lands below the head") {
+    // the verb's first row parks its staging task; meanwhile three
+    // commits land and vacuum drops the version it read and the slot
+    // after it — a create there would succeed and never be read
+    val park = udf { (i: Long) =>
+      if (StagingGate.parked.compareAndSet(false, true)) {
+        StagingGate.staging.countDown()
+        StagingGate.resume.await()
+      }
+      i
+    }.asNondeterministic()
+    val verbs: Seq[(String, String => Int)] = Seq(
+      "append" -> (p => SnapshotTable.append(
+        spark.range(5, 8).select(park(col("id")).as("id")), p)),
+      "delete" -> (p => SnapshotTable.delete(spark, p, park(col("id")) < 2L)))
+    verbs.foreach { case (name, verb) =>
+      val p = freshPath(s"vacrace$name")
+      SnapshotTable.create((0L until 5L).toDF("id"), p)
+      StagingGate.reset()
+      @volatile var result: Either[Throwable, Int] = null
+      val t = new Thread(() =>
+        result = try Right(verb(p)) catch { case e: Throwable => Left(e) })
+      t.start()
+      assert(StagingGate.staging.await(120,
+        java.util.concurrent.TimeUnit.SECONDS), s"$name never staged")
+      (1L to 3L).foreach(i => SnapshotTable.append(Seq(100L + i).toDF("id"), p))
+      SnapshotTable.vacuum(spark, p)
+      assert(SnapshotTable.versions(spark, p) === Seq(2, 3), name)
+      StagingGate.resume.countDown()
+      t.join(120000)
+      assert(!t.isAlive, s"$name never returned")
+      result match {
+        case Left(e: java.util.ConcurrentModificationException) =>
+          assert(e.getMessage.contains(p), e.getMessage)
+        case other => fail(s"$name: expected a conflict, got $other")
+      }
+      assert(SnapshotTable.versions(spark, p) === Seq(2, 3), name)
+      assert(SnapshotTable.read(spark, p).as[Long].collect().toSet ===
+        (0L until 5L).toSet ++ Set(101L, 102L, 103L), name)
+    }
   }
 
   test("every row-level verb rebases over a disjoint racing append and " +
@@ -4601,6 +4659,20 @@ class SnapshotTableSpec extends SparkSpec {
       spark.conf.unset("spark.graft.logStore.class")
       spark.conf.unset("spark.graft.manifest.segmentEntries")
     }
+  }
+}
+
+/** Parks the first row a verb stages until the spec resumes it; JVM
+  * statics, so the UDF's executor copy shares them in local mode. */
+object StagingGate {
+  val parked = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile var staging = new java.util.concurrent.CountDownLatch(1)
+  @volatile var resume = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    staging = new java.util.concurrent.CountDownLatch(1)
+    resume = new java.util.concurrent.CountDownLatch(1)
+    parked.set(false)
   }
 }
 
