@@ -120,10 +120,11 @@ object ManifestScaleProbe {
       out0.close()
       val segBytes = fs.listStatus(new Path(dir, "_graft_log")).toSeq
         .map(_.getLen).sum
+      val v0 = Some(SnapshotTable.snapshot(spark, dir, Some(0)))
       // r10 shape (reuse check hashes every entry, O(#files)) kept
       // for comparison against the delta path below
       val t1 = System.nanoTime()
-      val body1 = SnapshotTable.segmentedBody(spark, fs, dir, Some(0),
+      val body1 = SnapshotTable.segmentedBody(spark, fs, dir, v0,
         entries :+ line(n.toLong + 7, bloom = false))
       val appendMs = (System.nanoTime() - t1) / 1e6
       val newSegs = body1.filterNot(body0.toSet.contains)
@@ -137,7 +138,7 @@ object ManifestScaleProbe {
       // the REAL append path (r11): previous refs pass through
       // verbatim, staged entries join the inline tail — O(#segments)
       val t2 = System.nanoTime()
-      val body2 = SnapshotTable.appendBody(spark, fs, dir, Some(0),
+      val body2 = SnapshotTable.appendBody(spark, fs, dir, v0,
         Seq(line(n.toLong + 8, bloom = false)))
       val appendDeltaMs = (System.nanoTime() - t2) / 1e6
       val inheritedRefs = body2.count(_.startsWith("@seg="))

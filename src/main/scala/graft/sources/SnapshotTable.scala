@@ -550,43 +550,92 @@ object SnapshotTable {
       case _ => 0
     }
 
-  private def readManifestRefs(fs: FileSystem, path: String,
-      v: Int): Seq[String] =
-    manifestLines(fs, path, v).filterNot(_.startsWith("#"))
-
-  /** Data-file entries of a manifest (metadata `#key=value` lines,
-    * e.g. the streaming batch marker, are per-commit and excluded;
-    * segment references resolve to their entry lines). */
-  private def readManifest(fs: FileSystem, path: String, v: Int): Seq[String] =
-    readManifestRefs(fs, path, v).flatMap { l =>
+  /** One table version, read from its manifest exactly once. A
+    * manifest is immutable once its `#eot` marker is written (a
+    * create-exclusive name, never rewritten; [[manifestLines]] refuses
+    * any unterminated one), so every fact a verb needs about the
+    * version — its `#key=value` meta, stored schema, retired physical
+    * names, partition layout, body and entries — derives from this one
+    * read, and a verb that takes one snapshot sees one version
+    * throughout instead of re-reading (or re-listing to) a possibly
+    * different head.
+    *
+    * `refs` is the body as written: segment refs and inline entries.
+    * `entries` resolves the segments (metadata lines, e.g. the
+    * streaming batch marker, are per-commit and excluded); `tagged`
+    * pairs every entry with the rel path of the segment that owns it
+    * (None = inline), which row-level commits use to pass CLEAN
+    * segments through by reference and re-stage only the dirty ones'
+    * survivors — the O(churn) write half of the segmented-manifest
+    * design ([[keptBody]]). Both resolve on first use. */
+  private[graft] final class Snapshot private (fs: FileSystem,
+      path: String, val version: Int, lines: Seq[String]) {
+    def this(fs: FileSystem, path: String, version: Int) =
+      this(fs, path, version, manifestLines(fs, path, version))
+    val meta: Map[String, String] =
+      lines.filter(_.startsWith("#")).flatMap { l =>
+        l.drop(1).split("=", 2) match {
+          case Array(k, v2) => Some(k -> v2)
+          case _ => None
+        }
+      }.toMap
+    val refs: Seq[String] = lines.filterNot(_.startsWith("#"))
+    /** The stored schema; None for logs that predate schema tracking
+      * (those read with footer-inferred schema). Empty = the key's
+      * RESET value (see [[restore]]'s inverted meta rewind): a restored
+      * pre-schema-era version reads as legacy instead of keeping the
+      * abandoned head's schema in force over the restored entries. */
+    lazy val schema: Option[types.StructType] =
+      meta.get("schema").filter(_.nonEmpty).map(j =>
+        types.DataType.fromJson(j).asInstanceOf[types.StructType])
+    /** Physical column names retired by [[dropColumn]]. */
+    lazy val droppedPhys: Seq[String] = listMeta("droppedPhys")
+    /** Partition columns (`#partition`, inherited commit-over-commit
+      * like all meta); empty = flat. */
+    lazy val partition: Seq[String] = listMeta("partition")
+    private def listMeta(key: String): Seq[String] =
+      meta.get(key).map(_.split(",").toSeq.filter(_.nonEmpty))
+        .getOrElse(Seq.empty)
+    lazy val entries: Seq[String] = refs.flatMap { l =>
       if (l.startsWith(SegPrefix)) segEntries(fs, path, refRel(l))
       else Seq(l)
     }
-
-  /** A version's manifest body from one manifest read: its lines as
-    * written (segment refs and inline entries) and every entry paired
-    * with the rel path of the segment that owns it (None = inline).
-    * Row-level commits use the tag to pass CLEAN segments through by
-    * reference and re-stage only the dirty ones' survivors — the
-    * O(churn) write half of the segmented-manifest design
-    * ([[keptBody]]). */
-  private final case class ReadBody(refs: Seq[String],
-      tagged: Seq[(String, Option[String])]) {
-    val entries: Seq[String] = tagged.map(_._1)
+    lazy val tagged: Seq[(String, Option[String])] = refs.flatMap { l =>
+      if (l.startsWith(SegPrefix)) {
+        val rel = refRel(l)
+        val owner = Some(rel)
+        segEntries(fs, path, rel).map(e => (e, owner))
+      } else Seq((l, None))
+    }
     /** The entries whose data file is one of `fileNames`. */
     def entriesOf(fileNames: Set[String]): Seq[String] =
       entries.filter(e => fileNames.contains(fileNameOf(entryPath(e))))
   }
 
-  private def readBody(fs: FileSystem, path: String, v: Int): ReadBody = {
-    val refs = readManifestRefs(fs, path, v)
-    ReadBody(refs, refs.flatMap { l =>
-      if (l.startsWith(SegPrefix)) {
-        val rel = refRel(l)
-        segEntries(fs, path, rel).map(e => (e, Some(rel)))
-      } else Seq((l, None))
-    })
+  /** The table's committed versions, ascending; refuses a path that
+    * holds no table. */
+  private def tableVersions(spark: SparkSession, path: String): Seq[Int] = {
+    val vs = versions(spark, path)
+    require(vs.nonEmpty, s"no snapshot table at $path")
+    vs
   }
+
+  /** The table at `version` (default: the newest), from one log
+    * listing and one manifest read. */
+  private[graft] def snapshot(spark: SparkSession, path: String,
+      version: Option[Int] = None): Snapshot = {
+    val vs = tableVersions(spark, path)
+    val v = version.getOrElse(vs.max)
+    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    new Snapshot(fsOf(spark, logDir(path)), path, v)
+  }
+
+  /** The newest version, or None when `path` holds no table yet (the
+    * verbs that may create one: overwrite, the first stream batch). */
+  private def headSnapshot(spark: SparkSession,
+      path: String): Option[Snapshot] =
+    versions(spark, path).lastOption
+      .map(new Snapshot(fsOf(spark, logDir(path)), path, _))
 
   /** (removed, added) entry lines between two manifests — given as
     * their REF lists (`#`-stripped manifest bodies: segment refs +
@@ -851,21 +900,20 @@ object SnapshotTable {
     }
   }
 
-  /** The manifest body for `entries` on top of `prevV`: reuse every
+  /** The manifest body for `entries` on top of `prev`: reuse every
     * previous segment whose entries all survive verbatim, stage new
     * segments for the rest. Below the threshold the body stays the
     * flat entry list. Staged segment files are unreferenced until the
     * list commits — a lost race or crash leaves only orphans for
     * vacuum, exactly like staged data files. */
   private[graft] def segmentedBody(spark: SparkSession, fs: FileSystem,
-      path: String, prevV: Option[Int], entries: Seq[String])
+      path: String, prev: Option[Snapshot], entries: Seq[String])
       : Seq[String] = {
     val target = segmentEntriesConf(spark)
     if (entries.size <= target) return entries
     val remaining = new scala.collection.mutable.HashSet[String]
     remaining ++= entries
-    val keptRefs = prevV.toSeq
-      .flatMap(v => readManifestRefs(fs, path, v))
+    val keptRefs = prev.toSeq.flatMap(_.refs)
       .filter(_.startsWith(SegPrefix))
       .filter { ref =>
         val es = segEntries(fs, path, refRel(ref))
@@ -937,7 +985,7 @@ object SnapshotTable {
     if (loose.size <= segmentEntriesConf(spark)) loose
     else writeSegments(spark, fs, path, loose)
 
-  /** Manifest body for an APPEND-shaped commit on top of `prevV`:
+  /** Manifest body for an APPEND-shaped commit on top of `prev`:
     * previous segment refs pass through VERBATIM — never opened,
     * never re-verified (a ref IS its segment's identity: segment
     * files are immutable and uuid-named, so reuse needs no
@@ -948,24 +996,12 @@ object SnapshotTable {
     * 1-entry append on a 1M-file table; this path does zero
     * per-entry work). */
   private[graft] def appendBody(spark: SparkSession, fs: FileSystem,
-      path: String, prevV: Option[Int], staged: Seq[String])
+      path: String, prev: Option[Snapshot], staged: Seq[String])
       : Seq[String] = {
-    val refs = prevV.toSeq.flatMap(v => readManifestRefs(fs, path, v))
-    val (segRefs, inline) = refs.partition(_.startsWith(SegPrefix))
+    val (segRefs, inline) =
+      prev.toSeq.flatMap(_.refs).partition(_.startsWith(SegPrefix))
     segRefs ++ inlineOrSegment(spark, fs, path, inline ++ staged)
   }
-
-  /** Per-commit metadata of a manifest (`#key=value` header lines). */
-  private def readMeta(fs: FileSystem, path: String, v: Int): Map[String, String] =
-    metaOfLines(manifestLines(fs, path, v))
-
-  private def metaOfLines(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith("#")).flatMap { l =>
-      l.drop(1).split("=", 2) match {
-        case Array(k, v2) => Some(k -> v2)
-        case _ => None
-      }
-    }.toMap
 
   /** `#schema=<json>` meta line content: the version's read schema,
     * nullable-normalized (a file that predates an added column reads
@@ -993,17 +1029,6 @@ object SnapshotTable {
       valueContainsNull = true)
     case other => other
   }
-
-  /** A version's stored schema; None for logs that predate schema
-    * tracking (those read with footer-inferred schema, as before). */
-  private def storedSchema(fs: FileSystem, path: String,
-      v: Int): Option[types.StructType] =
-    // empty = the key's RESET value (see [[restore]]'s inverted meta
-    // rewind): a restored pre-schema-era version reads as legacy —
-    // footer-inferred schema — instead of keeping the abandoned
-    // head's schema in force over the restored entries
-    readMeta(fs, path, v).get("schema").filter(_.nonEmpty).map(j =>
-      types.DataType.fromJson(j).asInstanceOf[types.StructType])
 
   /** Column mapping (Delta-style): each field's PHYSICAL name — the
     * name its bytes carry in parquet files and manifest stat keys —
@@ -1062,14 +1087,13 @@ object SnapshotTable {
     * the schema after this one read it — re-run on the new snapshot. */
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val head = snapshot(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val st = storedSchema(fs, path, vs.max).getOrElse(
+    val st = head.schema.getOrElse(
       sys.error(s"renameColumn: $path has no stored schema (legacy log)"))
     require(st.fieldNames.contains(from), s"no column $from")
     require(!st.fieldNames.contains(to), s"column $to already exists")
-    require(!partitioning(spark, path).contains(from),
+    require(!head.partition.contains(from),
       s"cannot rename partition column $from")
     val renamed = types.StructType(st.fields.map(f =>
       if (f.name == from) withPhys(f, physName(f)).copy(name = to)
@@ -1077,12 +1101,12 @@ object SnapshotTable {
     // the bloom POLICY tracks logical names — follow the rename, or
     // maintainBlooms would silently stop blooming new files (its
     // column filter would never match again) and pruning would decay
-    val bloomM = readMeta(fs, path, vs.max).get("bloomCols")
+    val bloomM = head.meta.get("bloomCols")
       .filter(_.split(",").contains(from))
       .map(cs => Map("bloomCols" -> cs.split(",").toSeq
         .map(c => if (c == from) to else c).mkString(",")))
       .getOrElse(Map.empty)
-    commit(spark, path, Some(vs.max),
+    commit(spark, path, Some(head),
       schemaMeta(renamed) ++ bloomM + ("op" -> "RENAME-COLUMN"),
       Rebuild(appendBody(spark, fs, path, _, Nil)))
   }
@@ -1100,25 +1124,23 @@ object SnapshotTable {
     * snapshot. */
   def addColumns(spark: SparkSession, path: String,
       cols: Seq[types.StructField]): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val head = snapshot(spark, path)
     require(cols.nonEmpty, "addColumns: no columns given")
     val fs = fsOf(spark, logDir(path))
-    val st = storedSchema(fs, path, vs.max).getOrElse(
+    val st = head.schema.getOrElse(
       sys.error(s"addColumns: $path has no stored schema (legacy log)"))
     cols.foreach(f => require(!st.fieldNames.contains(f.name),
       s"column ${f.name} already exists"))
     require(cols.map(_.name).distinct.length == cols.length,
       "addColumns: duplicate column names in the add list")
-    val usedPhys = st.fields.map(physName).toSet ++
-      droppedPhys(fs, path, vs.max)
+    val usedPhys = st.fields.map(physName).toSet ++ head.droppedPhys
     val mapped = cols.map { f0 =>
       val f = f0.copy(nullable = true)
       if (usedPhys.contains(f.name))
         withPhys(f, "c_" + UUID.randomUUID().toString.take(8))
       else f
     }
-    commit(spark, path, Some(vs.max),
+    commit(spark, path, Some(head),
       schemaMeta(types.StructType(st.fields ++ mapped)) +
         ("op" -> "ADD-COLUMNS"),
       Rebuild(appendBody(spark, fs, path, _, Nil)))
@@ -1133,37 +1155,31 @@ object SnapshotTable {
     * the schema after this one read it — re-run on the new snapshot. */
   def dropColumn(spark: SparkSession, path: String,
       name: String): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val head = snapshot(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val st = storedSchema(fs, path, vs.max).getOrElse(
+    val st = head.schema.getOrElse(
       sys.error(s"dropColumn: $path has no stored schema (legacy log)"))
     require(st.fieldNames.contains(name), s"no column $name")
     require(st.fields.length > 1, "cannot drop the only column")
-    require(!partitioning(spark, path).contains(name),
+    require(!head.partition.contains(name),
       s"cannot drop partition column $name")
     val phys = physName(st.fields.find(_.name == name).get)
-    val dropped = (droppedPhys(fs, path, vs.max) :+ phys).distinct
+    val dropped = (head.droppedPhys :+ phys).distinct
     // a dropped column leaves the bloom policy too (its logical name
     // could later be re-bound to a FRESH physical slot — blooming
     // that new column under the old policy would be an accident)
-    val bloomM = readMeta(fs, path, vs.max).get("bloomCols")
+    val bloomM = head.meta.get("bloomCols")
       .filter(_.split(",").contains(name))
       .map(cs => Map("bloomCols" -> cs.split(",").toSeq
         .filterNot(_ == name).mkString(",")))
       .getOrElse(Map.empty)
-    commit(spark, path, Some(vs.max),
+    commit(spark, path, Some(head),
       schemaMeta(types.StructType(
         st.fields.filterNot(_.name == name))) ++ bloomM +
         ("droppedPhys" -> dropped.mkString(",")) +
         ("op" -> "DROP-COLUMN"),
       Rebuild(appendBody(spark, fs, path, _, Nil)))
   }
-
-  private def droppedPhys(fs: FileSystem, path: String,
-      v: Int): Seq[String] =
-    readMeta(fs, path, v).get("droppedPhys")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
 
   /** Widen a column's type — METADATA-ONLY (Spark 4's parquet readers
     * apply widening promotions at scan time, so old files' narrower
@@ -1177,14 +1193,13 @@ object SnapshotTable {
     * new snapshot. */
   def widenColumn(spark: SparkSession, path: String, name: String,
       to: types.DataType): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val head = snapshot(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val st = storedSchema(fs, path, vs.max).getOrElse(
+    val st = head.schema.getOrElse(
       sys.error(s"widenColumn: $path has no stored schema (legacy log)"))
     val f = st.fields.find(_.name == name)
       .getOrElse(sys.error(s"no column $name"))
-    require(!partitioning(spark, path).contains(name),
+    require(!head.partition.contains(name),
       s"cannot widen partition column $name")
     require(isExactWidening(f.dataType, to),
       s"widenColumn: ${f.dataType} -> $to is not an exact " +
@@ -1198,13 +1213,13 @@ object SnapshotTable {
     // other columns' blooms stay valid. Long-normalized min/max stats
     // carry over unchanged (they are type-agnostic by construction).
     val phys = physName(f)
-    commit(spark, path, Some(vs.max),
+    commit(spark, path, Some(head),
       schemaMeta(types.StructType(st.fields.map(x =>
         if (x.name == name) x.copy(dataType = to) else x))) +
         ("op" -> "WIDEN-COLUMN"),
       // per-LINE rewrite: inline entries drop the item, segment refs
       // swap to a stripped sidecar — O(#refs), entries never rewrite
-      Rebuild(_.toSeq.flatMap(readManifestRefs(fs, path, _)).map(l =>
+      Rebuild(_.toSeq.flatMap(_.refs).map(l =>
         if (l.startsWith(SegPrefix)) stripSidecarBloom(fs, path, l, phys)
         else stripBloomItem(l, phys))))
   }
@@ -1411,16 +1426,11 @@ object SnapshotTable {
     else parts(0) + "\t" + items.mkString(";")
   }
 
-  /** Number of manifest entries still referencing a deletion vector
-    * at `version` (latest by default). 0 = every merge-on-read mask
-    * has been materialized (no per-read anti-join tax); the operative
-    * health metric for a deleteMoR/updateMoR-heavy table, and the
-    * signal that [[optimizeIncremental]] has work to do. */
   /** Test/observability hook: a version's resolved manifest entry
     * lines (segments expanded). */
   private[graft] def manifestEntries(spark: SparkSession, path: String,
       v: Int): Seq[String] =
-    readManifest(fsOf(spark, logDir(path)), path, v)
+    new Snapshot(fsOf(spark, logDir(path)), path, v).entries
 
   /** A version's manifest entry LINES restricted to `wanted` data-file
     * rel paths — the stream source's slice re-materializer: its offset
@@ -1431,17 +1441,16 @@ object SnapshotTable {
     * call; what's RETAINED is slice-sized. */
   private[graft] def entriesForPaths(spark: SparkSession, path: String,
       v: Int, wanted: Set[String]): Seq[String] =
-    readManifest(fsOf(spark, logDir(path)), path, v)
-      .filter(e => wanted(entryPath(e)))
+    manifestEntries(spark, path, v).filter(e => wanted(entryPath(e)))
 
+  /** Number of manifest entries still referencing a deletion vector
+    * at `version` (latest by default). 0 = every merge-on-read mask
+    * has been materialized (no per-read anti-join tax); the operative
+    * health metric for a deleteMoR/updateMoR-heavy table, and the
+    * signal that [[optimizeIncremental]] has work to do. */
   def pendingDvEntries(spark: SparkSession, path: String,
-      version: Option[Int] = None): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val v = version.getOrElse(vs.max)
-    readManifest(fsOf(spark, logDir(path)), path, v)
-      .count(e => entryDvs(e).nonEmpty)
-  }
+      version: Option[Int] = None): Int =
+    snapshot(spark, path, version).entries.count(e => entryDvs(e).nonEmpty)
 
   /** Entry identity for change detection: path plus dv reference — a
     * merge-on-read delete changes an entry's visible ROWS without
@@ -1454,10 +1463,9 @@ object SnapshotTable {
     * split large commit reads only its own slice of the added
     * entries, masks included). */
   private[graft] def readEntriesAt(spark: SparkSession, path: String,
-      v: Int, entries: Seq[String]): DataFrame = {
-    val fs = fsOf(spark, logDir(path))
-    readEntriesDv(spark, path, v, storedSchema(fs, path, v), entries)
-  }
+      v: Int, entries: Seq[String]): DataFrame =
+    readEntriesDv(spark, path, v,
+      new Snapshot(fsOf(spark, logDir(path)), path, v).schema, entries)
 
   /** Central DV-applied reader: read `entries` (full manifest lines)
     * and mask every row whose (file, pos) appears in a referenced
@@ -1530,15 +1538,10 @@ object SnapshotTable {
     d.copy(rel = fs.makeQualified(new Path(path, d.rel)).toString).render
   }
 
-  /** The table's partition columns per the log-head meta (`#partition`,
-    * inherited commit-over-commit like all meta); empty = flat. */
-  def partitioning(spark: SparkSession, path: String): Seq[String] = {
-    val vs = versions(spark, path)
-    if (vs.isEmpty) Seq.empty
-    else readMeta(fsOf(spark, logDir(path)), path, vs.max)
-      .get("partition").map(_.split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
-  }
+  /** The table's partition columns per the log head
+    * ([[Snapshot.partition]]); empty = flat or no table. */
+  def partitioning(spark: SparkSession, path: String): Seq[String] =
+    headSnapshot(spark, path).fold(Seq.empty[String])(_.partition)
 
   /** Hive-style partition values encoded in a manifest entry's rel
     * path (`files/lang=en/uuid.parquet` → `lang -> en`); empty for
@@ -1572,9 +1575,6 @@ object SnapshotTable {
       }
       sb.toString
   }
-
-  private def manifestPaths(fs: FileSystem, path: String, v: Int): Seq[String] =
-    readManifest(fs, path, v).map(entryPath)
 
   /** Stage `df` as immutable uuid-named parquet files under `files/`;
     * returns their manifest ENTRIES (relative path + cached key-range
@@ -1938,7 +1938,7 @@ object SnapshotTable {
     * reference (O(churn) commit, no re-segmentation); the untouched
     * entries of dirty segments and the untouched inline entries form
     * the loose tail. */
-  private def keptBody(body: ReadBody, touched: String => Boolean)
+  private def keptBody(body: Snapshot, touched: String => Boolean)
       : (Seq[String], Seq[String]) = {
     val dirtySegs = body.tagged.iterator.collect {
       case (e, Some(sr)) if touched(e) => sr }.toSet
@@ -1953,7 +1953,7 @@ object SnapshotTable {
     * (see [[commit]]). */
   private sealed trait OnMoved
   /** Append-shaped: the body is rebuilt on the latest head. */
-  private final case class Rebuild(body: Option[Int] => Seq[String])
+  private final case class Rebuild(body: Option[Snapshot] => Seq[String])
       extends OnMoved
   /** Whole-table replacement: the same `tail` lands on any head. */
   private final case class Reuse(tail: Seq[String]) extends OnMoved
@@ -1962,7 +1962,7 @@ object SnapshotTable {
     * disjoint. `mayConflict` says whether an entry a racer added may
     * hold rows matching this commit's read (conservative: unknown
     * means conflict). */
-  private final case class Rebase(read: ReadBody, touched: Seq[String],
+  private final case class Rebase(read: Snapshot, touched: Seq[String],
       newLines: Seq[String], mayConflict: String => Boolean)
       extends OnMoved
   /** Pinned to the version read: `kept` refs plus the `tail`, or an
@@ -1974,16 +1974,17 @@ object SnapshotTable {
   private val MaxCommitAttempts = 50
 
   /** The one commit path of every snapshot-table verb: publish the
-    * verb's body at version `readV + 1` (0 when `readV` is None: a
-    * create, a convert, or a first stream batch) with a
-    * create-exclusive manifest write, and return the version it
-    * landed on. The manifest is witness, publication instant
+    * verb's body one version past `read`, the snapshot the verb read
+    * (version 0 when `read` is None: a create, a convert, or a first
+    * stream batch), with a create-exclusive manifest write, and return
+    * the version it landed on. The manifest is witness, publication instant
     * (monotone over the head's), the head's meta with `meta` winning,
     * the body, end marker.
     *
-    * Every attempt first lists the log. When the head is past `readV`
-    * — already at the listing, or because the last attempt lost its
-    * slot — the commit applies the verb's rule against that head:
+    * Every attempt first lists the log. When the head is past the
+    * version read — already at the listing, or because the last
+    * attempt lost its slot — the commit reads that head once as a
+    * [[Snapshot]] and applies the verb's rule against it:
     *  - [[Rebuild]] (append, stream batch, metadata-only DDL):
     *    rebuild the body on the latest head;
     *  - [[Reuse]] (overwrite): the same body;
@@ -1995,43 +1996,38 @@ object SnapshotTable {
     *    data files are immutable and deletion vectors only shrink
     *    visibility); then the latest body minus the consumed entries
     *    plus `newLines`, else ConcurrentModificationException;
-    *  - [[Pinned]]: create and convert (`readV` None) throw
+    *  - [[Pinned]]: create and convert (`read` None) throw
     *    IllegalArgumentException, two writers creating one path being
     *    a caller bug rather than a conflict to resolve; restore and
     *    the schema-evolving merge throw ConcurrentModificationException.
-    * Writing at `readV + 1` without the listing could land BELOW the
-    * head once [[vacuum]] has removed that slot's manifest: the create
-    * would succeed and the commit would never be read. A read version
-    * vacuumed while the verb ran throws ConcurrentModificationException.
-    * A [[Rebuild]] or [[Rebase]] commit never publishes over a head
-    * whose `schema` or `droppedPhys` differs from the version it read
-    * — it would revert that change, or publish files and blooms
-    * written for the old schema — and throws
-    * ConcurrentModificationException instead.
+    * Writing one past the version read without the listing could land
+    * BELOW the head once [[vacuum]] has removed that slot's manifest:
+    * the create would succeed and the commit would never be read. A
+    * read version missing from the first listing (vacuumed while the
+    * verb ran) throws ConcurrentModificationException. A [[Rebuild]]
+    * or [[Rebase]] commit never publishes over a head whose `schema`,
+    * `droppedPhys` or `partition` differs from the version it read —
+    * it would revert that change, or publish files and blooms written
+    * for the old schema or staged under the old partition layout —
+    * and throws ConcurrentModificationException instead.
     * After [[MaxCommitAttempts]] lost slots it throws
     * ConcurrentModificationException naming the path, the version
     * read and the attempts. In every case the caller re-runs on the
     * new snapshot; a failed manifest write throws from the store. */
   private def commit(spark: SparkSession, path: String,
-      readV: Option[Int], meta: Map[String, String],
+      read: Option[Snapshot], meta: Map[String, String],
       onMoved: OnMoved): Int = {
     val fs = fsOf(spark, logDir(path))
     fs.mkdirs(logDir(path))
     val store = GraftLogStore.forSession(spark)
-    def metaOf(v: Option[Int]) =
-      v.fold(Map.empty[String, String])(readMeta(fs, path, _))
+    val readV = read.map(_.version)
     val readLabel = readV.fold("(none)")(_.toString)
     def moved(msg: String) = new java.util.ConcurrentModificationException(
       s"snapshot table at $path$msg — re-run on the new snapshot")
-    // a read version vacuumed while the verb ran is a conflict too
-    val readMetaV =
-      try metaOf(readV)
-      catch { case _: java.io.FileNotFoundException =>
-        throw moved(s": version $readLabel was vacuumed while this " +
-          "commit ran") }
-    def schemaKeys(m: Map[String, String]) =
-      Seq("schema", "droppedPhys").map(m.get(_).filter(_.nonEmpty))
-    def rebased(r: Rebase, on: ReadBody): Seq[String] = {
+    def abortKeys(s: Option[Snapshot]) =
+      Seq("schema", "droppedPhys", "partition")
+        .map(k => s.flatMap(_.meta.get(k)).filter(_.nonEmpty))
+    def rebased(r: Rebase, on: Snapshot): Seq[String] = {
       val touched = r.touched.toSet
       val (kept, loose) = keptBody(on, touched)
       kept ++ inlineOrSegment(spark, fs, path, loose ++ r.newLines)
@@ -2040,48 +2036,53 @@ object SnapshotTable {
     // decides whether it still applies: only that listing and the
     // head's instant read lie between the check and the create
     val first = onMoved match {
-      case Rebuild(f) => f(readV)
+      case Rebuild(f) => f(read)
       case Reuse(tail) => inlineOrSegment(spark, fs, path, tail)
       case r: Rebase => rebased(r, r.read)
       case Pinned(kept, tail) =>
         kept ++ inlineOrSegment(spark, fs, path, tail)
     }
     // the verb's rule for a head past the version read
-    def bodyOver(head: Option[Int], headMeta: Map[String, String])
-        : Seq[String] = onMoved match {
+    def bodyOver(head: Snapshot): Seq[String] = onMoved match {
       case Pinned(_, _) if readV.isEmpty =>
         throw new IllegalArgumentException(s"commit: expected to " +
           s"publish version 0 of $path but the log is at " +
-          s"${head.getOrElse(-1)} — lost a concurrent " +
+          s"${head.version} — lost a concurrent " +
           "create/convert race (the other writer's table is live; " +
           "re-read before writing)")
       case Pinned(_, _) =>
         throw moved(s" advanced past version $readLabel while this " +
           "commit ran")
       case Reuse(_) => first
-      case _ if schemaKeys(headMeta) != schemaKeys(readMetaV) =>
-        throw moved(s": the schema changed after version $readLabel " +
-          "was read")
-      case Rebuild(f) => f(head)
+      case _ if abortKeys(Some(head)) != abortKeys(read) =>
+        throw moved(s": the schema or partition layout changed after " +
+          s"version $readLabel was read")
+      case Rebuild(f) => f(Some(head))
       case r: Rebase =>
-        val on = head.fold(ReadBody(Nil, Nil))(readBody(fs, path, _))
-        val present = on.entries.toSet
+        val present = head.entries.toSet
         if (!r.touched.forall(present.contains))
           throw moved(": a concurrent commit modified files this " +
             "commit also rewrites")
         val readPaths = r.read.entries.iterator.map(entryPath).toSet
-        if (on.entries.exists(l =>
+        if (head.entries.exists(l =>
             !readPaths.contains(entryPath(l)) && r.mayConflict(l)))
           throw moved(": a concurrent commit added files that may " +
             "match this commit's read")
-        rebased(r, on)
+        rebased(r, head)
     }
     @annotation.tailrec
     def land(attempt: Int): Int = {
-      val head = versions(spark, path).lastOption
-      val headMeta = if (head == readV) readMetaV else metaOf(head)
-      val body = if (head == readV) first else bodyOver(head, headMeta)
-      val v = head.fold(0)(_ + 1)
+      val vs = versions(spark, path)
+      // a read version vacuumed while the verb ran is a conflict too
+      if (attempt == 1 && readV.exists(!vs.contains(_)))
+        throw moved(s": version $readLabel was vacuumed while this " +
+          "commit ran")
+      val headV = vs.lastOption
+      val head =
+        if (headV == readV) read else headV.map(new Snapshot(fs, path, _))
+      // headV is None only when readV is too: a moved head is a Some
+      val body = if (headV == readV) first else head.fold(first)(bodyOver)
+      val v = headV.fold(0)(_ + 1)
       // metadata is INHERITED commit-over-commit (this commit's keys
       // win): markers like the streaming batch id stay on the log head
       // forever, so vacuuming old manifests can never drop them. The
@@ -2093,8 +2094,9 @@ object SnapshotTable {
       // strictly-after the head's instant: with writers on skewed
       // clocks a later version could otherwise carry an EARLIER
       // timestamp (Delta's in-commit timestamps enforce the same).
-      val metaLines = Seq(WvLine, s"#ts=${monotonicTs(fs, path, head)}") ++
-        ((headMeta ++ meta) - "eot" - "wv" - "ts").toSeq.sortBy(_._1)
+      val metaLines = Seq(WvLine, s"#ts=${monotonicTs(fs, path, headV)}") ++
+        ((head.fold(Map.empty[String, String])(_.meta) ++ meta) -
+          "eot" - "wv" - "ts").toSeq.sortBy(_._1)
           .map { case (k, x) => s"#$k=$x" }
       val content = (metaLines ++ body :+ EotLine).mkString("\n")
       // the atomicity primitive is PLUGGABLE (object stores need a
@@ -2224,8 +2226,8 @@ object SnapshotTable {
     * old files read them as null). Common columns must keep their
     * type; without `evolveSchema` the schemas must match exactly,
     * refused loudly otherwise. */
-  private def evolvedAppendSchema(spark: SparkSession, fs: FileSystem,
-      path: String, headV: Int, df: DataFrame, evolveSchema: Boolean,
+  private def evolvedAppendSchema(spark: SparkSession, path: String,
+      head: Snapshot, df: DataFrame, evolveSchema: Boolean,
       inferLegacy: Boolean = true): types.StructType = {
     // the table schema is metadata (stored in the log head); fall back
     // to footer inference for legacy logs, and to "unknown" for a head
@@ -2236,10 +2238,10 @@ object SnapshotTable {
     // unchecked path never paid; such batches stage schema-unchecked,
     // as before.
     val currentOpt: Option[types.StructType] =
-      storedSchema(fs, path, headV).orElse {
+      head.schema.orElse {
         if (!inferLegacy) None
         else {
-          val rels = manifestPaths(fs, path, headV)
+          val rels = head.entries.map(entryPath)
           if (rels.isEmpty) None
           else Some(readFilesAs(spark, path, None, rels).schema)
         }
@@ -2267,7 +2269,7 @@ object SnapshotTable {
     // still present in old files) gets a fresh physical name — old
     // bytes must never resurrect under a new column
     val usedPhys = currentOpt.toSeq.flatMap(_.fields.map(physName))
-      .toSet ++ droppedPhys(fs, path, headV)
+      .toSet ++ head.droppedPhys
     val addedMapped = added.map(f =>
       if (usedPhys.contains(f.name))
         withPhys(f, "c_" + UUID.randomUUID().toString.take(8))
@@ -2291,20 +2293,16 @@ object SnapshotTable {
   def append(df: DataFrame, path: String,
       evolveSchema: Boolean = false): Int = {
     val spark = df.sparkSession
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val head = snapshot(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val evolved = evolvedAppendSchema(spark, fs, path, vs.max, df,
-      evolveSchema)
-    val readMetaV = readMeta(fs, path, vs.max)
+    val evolved = evolvedAppendSchema(spark, path, head, df, evolveSchema)
     // appends inherit the table's partition layout from the log meta
-    val staged = stage(toPhysical(df, Some(evolved)), path,
-      partitioning(spark, path))
+    val staged = stage(toPhysical(df, Some(evolved)), path, head.partition)
     // and maintain the bloom index for their own files, like
     // streaming batches — batch appends must not decay pruning either
-    val stagedIndexed = maintainBlooms(spark, path, readMetaV,
+    val stagedIndexed = maintainBlooms(spark, path, head.meta,
       Some(evolved), df.columns.toSeq, staged)
-    commit(spark, path, Some(vs.max),
+    commit(spark, path, Some(head),
       schemaMeta(evolved) + ("op" -> "APPEND"),
       Rebuild(appendBody(spark, fs, path, _, stagedIndexed)))
   }
@@ -2313,20 +2311,26 @@ object SnapshotTable {
     * the staged files; prior versions stay readable until vacuum).
     * The table's partition layout is preserved. */
   def overwrite(df: DataFrame, path: String,
-      repartitionBy: Option[Seq[String]] = None,
-      op: String = "OVERWRITE"): Int = {
-    val spark = df.sparkSession
-    val readV = versions(spark, path).lastOption
+      repartitionBy: Option[Seq[String]] = None): Int = {
+    val read = headSnapshot(df.sparkSession, path)
     // an overwrite is the one commit allowed to CHANGE the partition
     // layout (every file is rewritten anyway): None inherits, Some(..)
     // re-lays the table and records the new layout in the log meta
     // (Some(Nil) = de-partition). Old versions keep reading their own
     // layout — partition values live in each entry's path, not the meta.
-    val layout = repartitionBy.getOrElse(partitioning(spark, path))
+    replaceAll(df, path, read, repartitionBy.getOrElse(
+      read.fold(Seq.empty[String])(_.partition)), "OVERWRITE")
+  }
+
+  /** [[overwrite]] over the snapshot `read` (None = no table yet),
+    * laid out by `layout` and recorded as operation `op` (the layout
+    * passes [[optimize]] and [[optimizeZOrder]] commit this way). */
+  private def replaceAll(df: DataFrame, path: String,
+      read: Option[Snapshot], layout: Seq[String], op: String): Int = {
     // a full rewrite re-baselines the schema: files carry the logical
     // names again, so the column mapping and retired-physical list
     // reset (old versions keep their own schema meta)
-    commit(spark, path, readV,
+    commit(df.sparkSession, path, read,
       schemaMeta(df.schema) ++
         Map("partition" -> layout.mkString(","), "droppedPhys" -> "",
           "op" -> op),
@@ -2348,33 +2352,29 @@ object SnapshotTable {
   def replacePartitions(df: DataFrame, path: String,
       meta: Map[String, String] = Map.empty): Int = {
     val spark = df.sparkSession
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val layout = partitioning(spark, path)
+    val read = snapshot(spark, path)
+    val layout = read.partition
     require(layout.nonEmpty,
       "replacePartitions needs a PARTITIONED table (whole-table " +
         s"replacement is overwrite's job) — $path has no partition " +
         "layout")
-    val fs = fsOf(spark, new Path(path))
     // schema checked exactly like append — a partition replace is
     // data churn, not DDL
-    val evolved = evolvedAppendSchema(spark, fs, path, readV, df,
+    val evolved = evolvedAppendSchema(spark, path, read, df,
       evolveSchema = false)
-    val body = readBody(fs, path, readV)
     val staged0 = stage(toPhysical(df, Some(evolved)), path, layout)
-    val staged = maintainBlooms(spark, path, readMeta(fs, path, readV),
+    val staged = maintainBlooms(spark, path, read.meta,
       Some(evolved), df.columns.toSeq, staged0)
     val touchedVals = staged.iterator
       .map(e => layout.map(c =>
         entryPartitionValues(entryPath(e)).get(c)))
       .toSet
-    if (touchedVals.isEmpty) return readV
+    if (touchedVals.isEmpty) return read.version
     val touched = (e: String) => touchedVals.contains(
       layout.map(c => entryPartitionValues(entryPath(e)).get(c)))
-    commit(spark, path, Some(readV),
+    commit(spark, path, Some(read),
       Map("op" -> "REPLACE-PARTITIONS") ++ meta,
-      Rebase(body, body.entries.filter(touched), staged, touched))
+      Rebase(read, read.entries.filter(touched), staged, touched))
   }
 
   /** EXACTLY-ONCE idempotent append for a streaming micro-batch: the
@@ -2405,38 +2405,25 @@ object SnapshotTable {
       batchId: Long, partitionBy: Seq[String] = Nil,
       evolveSchema: Boolean = false): Option[Int] = {
     val spark = df.sparkSession
-    if (committedStreamBatch(spark, path).exists(_ >= batchId)) None
+    // the log is listed ONCE and the head read ONCE per batch — the
+    // delivered marker, layout, schema, and bloom policy all come from
+    // that snapshot (this is the per-trigger hot path; every extra
+    // listing is an object-store RPC)
+    val prior = headSnapshot(spark, path)
+    if (prior.flatMap(streamBatchOf).exists(_ >= batchId)) None
     else {
-      // the log is listed ONCE and the head's meta read ONCE per
-      // batch — layout, schema, and bloom policy all come from them
-      // (this is the per-trigger hot path; every extra listing is an
-      // object-store RPC)
-      val priorVs = versions(spark, path)
       val fs = fsOf(spark, logDir(path))
-      val priorMeta =
-        if (priorVs.isEmpty) Map.empty[String, String]
-        else readMeta(fs, path, priorVs.max)
-      val layout =
-        if (priorVs.isEmpty) partitionBy
-        else {
-          val stored = priorMeta.get("partition")
-            .map(_.split(",").toSeq.filter(_.nonEmpty))
-            .getOrElse(Seq.empty)
-          require(partitionBy.isEmpty || partitionBy == stored,
-            s"stream partitionBy [${partitionBy.mkString(",")}] does " +
-              s"not match the table's layout [${stored.mkString(",")}]")
-          stored
-        }
-      val mapped =
-        if (priorVs.isEmpty) None
-        else {
-          val evolved = evolvedAppendSchema(spark, fs, path,
-            priorVs.max, df, evolveSchema, inferLegacy = false)
-          // legacy logs without schema meta stage unchecked (as
-          // before r15): evolvedAppendSchema returns df.schema there,
-          // which carries no physical mapping to translate
-          Some(evolved)
-        }
+      val layout = prior.fold(partitionBy) { p =>
+        require(partitionBy.isEmpty || partitionBy == p.partition,
+          s"stream partitionBy [${partitionBy.mkString(",")}] does " +
+            s"not match the table's layout [${p.partition.mkString(",")}]")
+        p.partition
+      }
+      // legacy logs without schema meta stage unchecked (as before
+      // r15): evolvedAppendSchema returns df.schema there, which
+      // carries no physical mapping to translate
+      val mapped = prior.map(evolvedAppendSchema(spark, path, _, df,
+        evolveSchema, inferLegacy = false))
       val staged = stage(toPhysical(df, mapped), path, layout)
       // bloom MAINTENANCE under streaming churn: if the table carries
       // a bloom policy ([[indexBloom]] meta), bloom this batch's new
@@ -2445,37 +2432,37 @@ object SnapshotTable {
       // decays as batches accumulate (un-bloomed entries are sound
       // but un-prunable). Min/max stats are harvested by stage()
       // unconditionally, as for every write path.
-      val stagedIndexed = maintainBlooms(spark, path, priorMeta,
-        mapped, df.columns.toSeq, staged)
+      val stagedIndexed = maintainBlooms(spark, path,
+        prior.fold(Map.empty[String, String])(_.meta), mapped,
+        df.columns.toSeq, staged)
       // first batch creates the table and records its schema (and
       // partition layout); later batches inherit through the meta
       // chain — except an EVOLVING batch, which must commit the
       // widened schema with its own data
       val schemaM =
-        if (priorVs.isEmpty)
+        if (prior.isEmpty)
           schemaMeta(df.schema) ++
             (if (layout.isEmpty) Map.empty[String, String]
              else Map("partition" -> layout.mkString(",")))
         else if (evolveSchema) mapped.fold(
           Map.empty[String, String])(schemaMeta)
         else Map.empty[String, String]
-      Some(commit(spark, path, priorVs.lastOption,
+      Some(commit(spark, path, prior,
         Map("streamBatch" -> batchId.toString,
           "op" -> "STREAM-APPEND") ++ schemaM,
         Rebuild(appendBody(spark, fs, path, _, stagedIndexed))))
     }
   }
 
-  /** Newest streaming batch id committed to this table, scanning the
-    * log newest-first (non-stream commits in between are skipped;
-    * bounded by the vacuum-trimmed log length). */
-  def committedStreamBatch(spark: SparkSession, path: String): Option[Long] = {
-    val fs = fsOf(spark, logDir(path))
-    versions(spark, path).reverseIterator
-      .map(v => readMeta(fs, path, v).get("streamBatch")
-        .filter(_.nonEmpty))
-      .collectFirst { case Some(b) => b.toLong }
-  }
+  /** Newest streaming batch id committed to this table, read from the
+    * log head: every commit inherits the head's meta and [[restore]]
+    * carries the marker forward, so the head holds the newest marker
+    * whatever non-stream commits came after it. */
+  def committedStreamBatch(spark: SparkSession, path: String): Option[Long] =
+    headSnapshot(spark, path).flatMap(streamBatchOf)
+
+  private def streamBatchOf(s: Snapshot): Option[Long] =
+    s.meta.get("streamBatch").filter(_.nonEmpty).map(_.toLong)
 
   /** Row-level MERGE (upsert) as a copy-on-write commit: rows of
     * `updates` REPLACE every current row sharing their `keyCols`
@@ -2528,12 +2515,9 @@ object SnapshotTable {
   def merge(updates: DataFrame, path: String, keyCols: Seq[String],
       meta: Map[String, String] = Map.empty,
       removeKeys: Option[DataFrame] = None,
-      evolveSchema: Boolean = false): Int = {
-    val vs = versions(updates.sparkSession, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    mergeAt(updates, path, keyCols, vs.max, meta, removeKeys,
-      evolveSchema)
-  }
+      evolveSchema: Boolean = false): Int =
+    mergeOn(updates, path, keyCols, snapshot(updates.sparkSession, path),
+      meta, removeKeys, evolveSchema)
 
   /** [[merge]] reading a PINNED snapshot version — the testable shape
     * of the optimistic-concurrency contract: two mergeAt calls on the
@@ -2544,16 +2528,23 @@ object SnapshotTable {
       keyCols: Seq[String], readV: Int,
       meta: Map[String, String] = Map.empty,
       removeKeys: Option[DataFrame] = None,
-      evolveSchema: Boolean = false): Int = {
+      evolveSchema: Boolean = false): Int =
+    mergeOn(updates, path, keyCols,
+      snapshot(updates.sparkSession, path, Some(readV)), meta, removeKeys,
+      evolveSchema)
+
+  private def mergeOn(updates: DataFrame, path: String,
+      keyCols: Seq[String], read: Snapshot, meta: Map[String, String],
+      removeKeys: Option[DataFrame], evolveSchema: Boolean): Int = {
     val spark = updates.sparkSession
     val fs = fsOf(spark, new Path(path))
-    val body = readBody(fs, path, readV)
-    val manifest = body.entries
+    val readV = read.version
+    val manifest = read.entries
     // schema check from the stored schema when present — building the
     // (DV-masked, projected) read plan just to list column names is
     // wasted planning work on every merge
-    val storedEarly = storedSchema(fs, path, readV)
-    lazy val currentFallback = read(spark, path, Some(readV))
+    val storedEarly = read.schema
+    lazy val currentFallback = readAt(spark, path, read)
     val tableCols = storedEarly.map(_.fieldNames.toSeq)
       .getOrElse(currentFallback.columns.toSeq)
     if (!evolveSchema)
@@ -2579,7 +2570,7 @@ object SnapshotTable {
           val ut = updates.schema(f.name).dataType
           if (ut == f.dataType) f
           else if (isExactWidening(f.dataType, ut)) {
-            require(!partitioning(spark, path).contains(f.name),
+            require(!read.partition.contains(f.name),
               s"cannot widen partition column ${f.name} via merge")
             widened += f.name
             f.copy(dataType = ut)
@@ -2588,7 +2579,7 @@ object SnapshotTable {
             "not an exact order-preserving widening")
         }
         val usedPhys = baseSt.fields.map(physName).toSet ++
-          droppedPhys(fs, path, readV)
+          read.droppedPhys
         val added = updates.schema.fields
           .filterNot(f => baseSt.fieldNames.contains(f.name))
           .map(f => if (usedPhys.contains(f.name))
@@ -2651,7 +2642,7 @@ object SnapshotTable {
       // the driver, and a membership set that large prunes nothing a
       // range test doesn't — skip the prune (sound: keep more files)
       val partKeyValues: Map[String, Set[String]] =
-        partitioning(spark, path).filter(k => keyCols.contains(k) &&
+        read.partition.filter(k => keyCols.contains(k) &&
             partPrunable(updates.schema(k).dataType)).flatMap { k =>
           import org.apache.spark.sql.functions.approx_count_distinct
           val approx = keys.agg(approx_count_distinct(col(k)))
@@ -2738,7 +2729,7 @@ object SnapshotTable {
           .join(keys, keyCols, "left_semi")
           .select(col("__file")).distinct()
           .collect().map(_.getString(0)).toSet
-      val affected = body.entriesOf(affectedNames)
+      val affected = read.entriesOf(affectedNames)
       // survivors read with the OLD schema (their files carry the old
       // physical names and narrow types), then project up to the
       // evolved one: widened columns cast, added columns null-backfill
@@ -2759,7 +2750,7 @@ object SnapshotTable {
           .unionByName(updatesAligned)
       val staged = stage(
         toPhysical(rewritten.coalesce(affected.size + 1), Some(evolvedSt)),
-        path, partitioning(spark, path))
+        path, read.partition)
       // conflict evidence: racer-added files conflict when the level-1
       // key test cannot refute them (no footer reads on this path — an
       // absent stat conservatively aborts); all-null key columns match
@@ -2770,13 +2761,13 @@ object SnapshotTable {
       // type would false-negative on widened probes (same hazard as
       // widenColumn), so they leave the kept lines and sidecars.
       val onMoved =
-        if (!evolveSchema) Rebase(body, affected, staged,
+        if (!evolveSchema) Rebase(read, affected, staged,
           if (ranges.size < rangedKeys.size) _ => false
           else levelOneMayHold(_, footerCheck = false))
         else {
           val physWidened = widenedCols.map(n =>
             physName(baseSt(baseSt.fieldIndex(n))))
-          val (kept, loose) = keptBody(body, affected.toSet)
+          val (kept, loose) = keptBody(read, affected.toSet)
           Pinned(kept.map(physWidened.foldLeft(_)(
               stripSidecarBloom(fs, path, _, _))),
             loose.map(physWidened.foldLeft(_)(stripBloomItem)) ++ staged)
@@ -2794,7 +2785,7 @@ object SnapshotTable {
       val keyMeta = Map("mergeKeys" ->
         (if (keyCols.exists(_.contains(","))) ""
          else keyCols.mkString(",")))
-      commit(spark, path, Some(readV),
+      commit(spark, path, Some(read),
         Map("op" -> "MERGE") ++ keyMeta ++ evolveMeta ++ meta, onMoved)
     } finally graft.Barrier.release(keys)
   }
@@ -2818,28 +2809,27 @@ object SnapshotTable {
     val r = predRead(spark, path, predicate)
     val affectedNames =
       if (r.candidates.isEmpty) Set.empty[String]
-      else readEntriesDv(spark, path, r.readV, r.tableSchema,
+      else readEntriesDv(spark, path, r.read.version, r.read.schema,
           r.candidates, keepRowId = true)
         .filter(predicate)
         .select(col("__file")).distinct()
         .collect().map(_.getString(0)).toSet
-    val affected = r.body.entriesOf(affectedNames)
-    if (affected.isEmpty) r.readV
+    val affected = r.read.entriesOf(affectedNames)
+    if (affected.isEmpty) r.read.version
     else {
       val kept =
-        readEntriesDv(spark, path, r.readV, r.tableSchema, affected)
+        readEntriesDv(spark, path, r.read.version, r.read.schema, affected)
           .filter(not(coalesce(predicate, lit(false))))
       val staged = stage(
-        toPhysical(kept.coalesce(affected.size), r.tableSchema), path,
-        partitioning(spark, path))
-      commit(spark, path, Some(r.readV), Map("op" -> "DELETE") ++ meta,
-        Rebase(r.body, affected, staged, r.entryMayMatch))
+        toPhysical(kept.coalesce(affected.size), r.read.schema), path,
+        r.read.partition)
+      commit(spark, path, Some(r.read), Map("op" -> "DELETE") ++ meta,
+        Rebase(r.read, affected, staged, r.entryMayMatch))
     }
   }
 
   /** The read prologue of the predicate verbs ([[delete]],
-    * [[deleteMoR]], [[updateMoR]]): the head version and its body,
-    * the stored schema (None = legacy log) and the schema the
+    * [[deleteMoR]], [[updateMoR]]): the head snapshot, the schema the
     * predicate resolves against, and `entryMayMatch` — the compiled
     * predicate's metadata test for one entry (same evaluator as
     * readWhere: partition values, cached ranges, byte bounds, blooms,
@@ -2847,23 +2837,18 @@ object SnapshotTable {
     * on a layout clustered or partitioned by the predicate column the
     * scan touches only the straddling files, and it is the conflict
     * evidence against entries a racer adds (conservative). */
-  private final case class PredRead(readV: Int, body: ReadBody,
-      tableSchema: Option[types.StructType], schema: types.StructType,
-      entryMayMatch: String => Boolean) {
-    val candidates: Seq[String] = body.entries.filter(entryMayMatch)
+  private final case class PredRead(read: Snapshot,
+      schema: types.StructType, entryMayMatch: String => Boolean) {
+    val candidates: Seq[String] = read.entries.filter(entryMayMatch)
   }
 
   private def predRead(spark: SparkSession, path: String,
       predicate: Column): PredRead = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val fs = fsOf(spark, new Path(path))
-    val body = readBody(fs, path, readV)
-    val tableSchema = storedSchema(fs, path, readV)
-    val schema = tableSchema.getOrElse(read(spark, path, Some(readV)).schema)
+    val read = snapshot(spark, path)
+    val tableSchema = read.schema
+    val schema = tableSchema.getOrElse(readAt(spark, path, read).schema)
     val cp = compilePred(resolvedPredicate(spark, schema, predicate))
-    PredRead(readV, body, tableSchema, schema, e =>
+    PredRead(read, schema, e =>
       cp.evalN(entryPartitionValues(entryPath(e)),
         relabelStats(entryStats(e), tableSchema),
         relabelStats(entryStringStats(e), tableSchema),
@@ -2892,9 +2877,9 @@ object SnapshotTable {
       meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.col
     val r = predRead(spark, path, predicate)
-    if (r.candidates.isEmpty) return r.readV
+    if (r.candidates.isEmpty) return r.read.version
     // live matching rows only: already-masked rows never re-enter
-    val hits = readEntriesDv(spark, path, r.readV, r.tableSchema,
+    val hits = readEntriesDv(spark, path, r.read.version, r.read.schema,
         r.candidates, keepRowId = true)
       .filter(predicate)
       .select(col("__file").as("file"), col("__pos").as("pos"))
@@ -2902,19 +2887,19 @@ object SnapshotTable {
     try {
       val affectedNames = hits.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
-      if (affectedNames.isEmpty) return r.readV
-      val affected = r.body.entriesOf(affectedNames)
+      if (affectedNames.isEmpty) return r.read.version
+      val affected = r.read.entriesOf(affectedNames)
       // cumulative vector: prior coordinates of the affected files ride
       // into the new commit's per-file blobs (each entry references ITS
       // OWN descriptor)
-      val dvRows = priorDvRows(spark, path, r.readV, affected)
+      val dvRows = priorDvRows(spark, path, r.read.version, affected)
         .map(hits.unionByName(_)).getOrElse(hits)
       val descByFile = stageDvPerFile(spark, path, dvRows)
       val masked = affected.map(e =>
         withDv(e, Seq(descByFile(fileNameOf(entryPath(e))))))
-      commit(spark, path, Some(r.readV),
+      commit(spark, path, Some(r.read),
         Map("op" -> "DELETE-MOR") ++ meta,
-        Rebase(r.body, affected, masked, r.entryMayMatch))
+        Rebase(r.read, affected, masked, r.entryMayMatch))
     } finally graft.Barrier.release(hits)
   }
 
@@ -2935,8 +2920,8 @@ object SnapshotTable {
       s"updateMoR assigns unknown columns: " +
         assignments.keys.filterNot(r.schema.fieldNames.contains)
           .mkString(","))
-    if (r.candidates.isEmpty) return r.readV
-    val matched = readEntriesDv(spark, path, r.readV, r.tableSchema,
+    if (r.candidates.isEmpty) return r.read.version
+    val matched = readEntriesDv(spark, path, r.read.version, r.read.schema,
         r.candidates, keepRowId = true)
       .filter(predicate)
       .barrier()
@@ -2945,9 +2930,9 @@ object SnapshotTable {
         col("__pos").as("pos"))
       val affectedNames = hits.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
-      if (affectedNames.isEmpty) return r.readV
-      val affected = r.body.entriesOf(affectedNames)
-      val dvRows = priorDvRows(spark, path, r.readV, affected)
+      if (affectedNames.isEmpty) return r.read.version
+      val affected = r.read.entriesOf(affectedNames)
+      val dvRows = priorDvRows(spark, path, r.read.version, affected)
         .map(hits.unionByName(_)).getOrElse(hits)
       val descByFile = stageDvPerFile(spark, path, dvRows)
       // new images: matched rows with assignments applied, table columns
@@ -2957,11 +2942,11 @@ object SnapshotTable {
       // size the new-image write like the DV: churn-proportional
       val staged = stage(
         toPhysical(updated.coalesce(math.max(1,
-          affectedNames.size / 8)), r.tableSchema), path,
-        partitioning(spark, path))
+          affectedNames.size / 8)), r.read.schema), path,
+        r.read.partition)
       val newLines = affected.map(e =>
         withDv(e, Seq(descByFile(fileNameOf(entryPath(e)))))) ++ staged
-      commit(spark, path, Some(r.readV),
+      commit(spark, path, Some(r.read),
         Map("op" -> "UPDATE-MOR",
           // the SET columns ride the meta so the change feed can pair a
           // masked row with its updated image on the untouched-column
@@ -2970,7 +2955,7 @@ object SnapshotTable {
           "updateSet" ->
             (if (assignments.keys.exists(_.contains(","))) ""
              else assignments.keys.toSeq.sorted.mkString(","))) ++ meta,
-        Rebase(r.body, affected, newLines, r.entryMayMatch))
+        Rebase(r.read, affected, newLines, r.entryMayMatch))
     } finally graft.Barrier.release(matched)
   }
 
@@ -3020,9 +3005,7 @@ object SnapshotTable {
   def changes(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Option[Int] = None,
       updateImages: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val vs = tableVersions(spark, path)
     val toV = toVersion.getOrElse(vs.max)
     require(vs.contains(fromVersion) && vs.contains(toV) && fromVersion <= toV,
       s"changes needs committed versions from<=to, got $fromVersion..$toV " +
@@ -3039,22 +3022,18 @@ object SnapshotTable {
     // with its own entry lines applies each side's own deletion vector.
     // Segment-level pre-cancellation ([[diffEntrySides]]) keeps the
     // driver compare churn-proportional on segmented tables.
-    val toLines = manifestLines(fs, path, toV)
+    val to = new Snapshot(fs, path, toV)
     val (oldE, neuE) = diffEntrySides(fs, path,
-      readManifestRefs(fs, path, fromVersion),
-      toLines.filterNot(_.startsWith("#")))
+      new Snapshot(fs, path, fromVersion).refs, to.refs)
     // both sides read with the TO version's schema: across a schema
     // evolution the feed compares on the new schema (old rows' added
     // columns are null), keeping the diff well-typed
-    val toMeta = metaOfLines(toLines)
-    val toSchema = toMeta.get("schema").filter(_.nonEmpty).map(j =>
-      types.DataType.fromJson(j).asInstanceOf[types.StructType])
     val tagged = diffFrame(spark, path, fromVersion, oldE, toV, neuE,
-      toSchema, () => read(spark, path, Some(toV)))
+      to.schema, () => readAt(spark, path, to))
     if (!updateImages) tagged
-    else pairUpdateImages(spark, tagged, toMeta,
-      toSchema.map(_.fieldNames.toSeq)
-        .getOrElse(read(spark, path, Some(toV)).columns.toSeq))
+    else pairUpdateImages(spark, tagged, to.meta,
+      to.schema.map(_.fieldNames.toSeq)
+        .getOrElse(readAt(spark, path, to).columns.toSeq))
   }
 
   /** The tagged insert/delete frame over a diff's (removed, added)
@@ -3179,19 +3158,16 @@ object SnapshotTable {
     * still what the operator wants). Restoring the current head is a
     * no-op. */
   def restore(spark: SparkSession, path: String, version: Int): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val vs = tableVersions(spark, path)
     require(vs.contains(version),
       s"restore: version $version not in ${vs.mkString(",")} " +
         "(vacuumed away?)")
-    val head = vs.max
-    if (version == head) return head
+    if (version == vs.max) return vs.max
     val fs = fsOf(spark, logDir(path))
-    val body = readManifestRefs(fs, path, version)
-    val (refs, loose) = body.partition(_.startsWith(SegPrefix))
-    val oldMeta = readMeta(fs, path, version) -
-      "eot" - "wv" - "ts" - "streamBatch"
-    val headMeta = readMeta(fs, path, head)
+    val old = new Snapshot(fs, path, version)
+    val (refs, loose) = old.refs.partition(_.startsWith(SegPrefix))
+    val oldMeta = old.meta - "eot" - "wv" - "ts" - "streamBatch"
+    val head = new Snapshot(fs, path, vs.max)
     // INVERTED meta rewind (r16, was a hand-maintained reset
     // whitelist): the restored commit's meta is rebuilt from the
     // restored version's meta ALONE — every key the abandoned head
@@ -3207,7 +3183,7 @@ object SnapshotTable {
     // (eot/wv/ts never inherit — commit strips and restamps.)
     val carryForward = Set("streamBatch", "op", "restoredFrom",
       "eot", "wv", "ts")
-    val resets = (headMeta.keySet -- oldMeta.keySet -- carryForward)
+    val resets = (head.meta.keySet -- oldMeta.keySet -- carryForward)
       .map(_ -> "").toMap
     commit(spark, path, Some(head),
       oldMeta ++ resets +
@@ -3253,14 +3229,15 @@ object SnapshotTable {
       toVersion: Option[Int] = None,
       updateImages: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val vs = tableVersions(spark, path)
     val toV = toVersion.getOrElse(vs.max)
     require(vs.contains(fromVersion) && vs.contains(toV) &&
         fromVersion <= toV,
       s"changeFeed needs committed versions from<=to, got " +
         s"$fromVersion..$toV of ${vs.mkString(",")}")
-    val target = read(spark, path, Some(toV)).schema
+    val fs = fsOf(spark, logDir(path))
+    val to = new Snapshot(fs, path, toV)
+    val target = readAt(spark, path, to).schema
     def align(df: DataFrame): DataFrame = {
       val extra = df.columns.filterNot(c =>
         target.fieldNames.contains(c) ||
@@ -3291,7 +3268,6 @@ object SnapshotTable {
       base.select((target.fieldNames.toSeq :+ "change_type" :+
         "_commit_version").map(col): _*)
     }
-    val fs = fsOf(spark, logDir(path))
     val chunkSize = spark.conf
       .getOption("spark.graft.changeFeed.maxPlanVersions")
       .map(_.toInt).getOrElse(DefaultCdfPlanVersions)
@@ -3305,29 +3281,25 @@ object SnapshotTable {
     // above pin both range ends to committed versions).
     var prevRefs: Seq[String] =
       if (fromVersion == 0) Seq.empty
-      else readManifestRefs(fs, path, fromVersion - 1)
+      else new Snapshot(fs, path, fromVersion - 1).refs
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (v <- fromVersion to toV) {
-      val lines = manifestLines(fs, path, v)
-      val meta = metaOfLines(lines)
-      val curRefs = lines.filterNot(_.startsWith("#"))
-      val schemaV = meta.get("schema").filter(_.nonEmpty).map(j =>
-        types.DataType.fromJson(j).asInstanceOf[types.StructType])
+      val cur = if (v == toV) to else new Snapshot(fs, path, v)
       val diff: DataFrame =
-        if (v == 0) read(spark, path, Some(0))
+        if (v == 0) readAt(spark, path, cur)
           .withColumn("change_type", lit("insert"))
         else {
-          val (oldE, neuE) = diffEntrySides(fs, path, prevRefs, curRefs)
-          val t = diffFrame(spark, path, v - 1, oldE, v, neuE, schemaV,
-            () => read(spark, path, Some(v)))
+          val (oldE, neuE) = diffEntrySides(fs, path, prevRefs, cur.refs)
+          val t = diffFrame(spark, path, v - 1, oldE, v, neuE, cur.schema,
+            () => readAt(spark, path, cur))
           if (!updateImages) t
-          else pairUpdateImages(spark, t, meta,
-            schemaV.map(_.fieldNames.toSeq)
-              .getOrElse(read(spark, path, Some(v)).columns.toSeq))
+          else pairUpdateImages(spark, t, cur.meta,
+            cur.schema.map(_.fieldNames.toSeq)
+              .getOrElse(readAt(spark, path, cur).columns.toSeq))
         }
       pending += align(diff.withColumn("_commit_version", lit(v)))
-      prevRefs = curRefs
+      prevRefs = cur.refs
       if (!lazyWhole && pending.size >= chunkSize) {
         done += graft.Barrier.materialize(unionTree(pending.toSeq))
         pending.clear()
@@ -3427,8 +3399,8 @@ object SnapshotTable {
   private def commitInstant(fs: FileSystem, path: String, v: Int): Long = {
     // `#ts=` is stamped as the SECOND line of every modern manifest
     // (witness, then publication instant, then inherited meta), so a
-    // bounded head read answers it — going through readMeta →
-    // manifestLines would read AND parse the entire body, O(versions
+    // bounded head read answers it — reading a [[Snapshot]] would
+    // read AND parse the entire body, O(versions
     // × manifest bytes) of driver I/O when history()/versionAsOf walk
     // a long log of large manifests. Only lines terminated by '\n'
     // inside the head window are trusted (a torn/in-flight tail can
@@ -3494,9 +3466,8 @@ object SnapshotTable {
   def versionAsOf(spark: SparkSession, path: String,
       tsMillis: Long): Int = {
     val fs = fsOf(spark, logDir(path))
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val committed = vs.filter(v => commitInstant(fs, path, v) <= tsMillis)
+    val committed = tableVersions(spark, path)
+      .filter(v => commitInstant(fs, path, v) <= tsMillis)
     require(committed.nonEmpty,
       s"no version of $path existed at $tsMillis (oldest kept commit " +
         s"is newer — vacuumed, or the table came later)")
@@ -3511,26 +3482,22 @@ object SnapshotTable {
   /** Read a version (default: latest). Time travel = pass any
     * committed version number. */
   def read(spark: SparkSession, path: String,
-      version: Option[Int] = None): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
-    val fs = fsOf(spark, logDir(path))
-    val entries = readManifest(fs, path, v)
-    if (entries.isEmpty) {
+      version: Option[Int] = None): DataFrame =
+    readAt(spark, path, snapshot(spark, path, version))
+
+  private def readAt(spark: SparkSession, path: String,
+      s: Snapshot): DataFrame =
+    if (s.entries.isEmpty) {
       // a version may legally reference no files (every row deleted,
       // or an empty write): readable as the empty table when the log
       // carries its schema
-      val st = storedSchema(fs, path, v).getOrElse(sys.error(
-        s"version $v references no data files and no stored schema " +
-          "(legacy empty commit)"))
-      return spark.createDataFrame(
+      val st = s.schema.getOrElse(sys.error(
+        s"version ${s.version} references no data files and no stored " +
+          "schema (legacy empty commit)"))
+      spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         nullify(st))
-    }
-    readEntriesDv(spark, path, v, storedSchema(fs, path, v), entries)
-  }
+    } else readEntriesDv(spark, path, s.version, s.schema, s.entries)
 
   /** Table history, newest first — the DESCRIBE HISTORY surface:
     * one row per retained commit with (version, timestamp, operation,
@@ -3544,16 +3511,16 @@ object SnapshotTable {
     * carry, mtime only for legacy manifests. Pure metadata: O(log
     * length) driver work, no data I/O. */
   def history(spark: SparkSession, path: String): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val vs = tableVersions(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val rows = vs.sorted.reverse.map { v =>
+    val rows = vs.reverse.map { v =>
+      val s = new Snapshot(fs, path, v)
       // every write path re-stamps `op` on its own commit (commit()
       // merges this commit's keys last), so inheritance can never
       // mislabel a commit with its predecessor's operation
-      val op = readMeta(fs, path, v).get("op").orNull
+      val op = s.meta.get("op").orNull
       val ts = commitInstant(fs, path, v)
-      val n = refAwareCount(fs, path, v)
+      val n = refAwareCount(fs, path, s)
       org.apache.spark.sql.Row(v, new java.sql.Timestamp(ts), op, n)
     }
     spark.createDataFrame(
@@ -3571,17 +3538,16 @@ object SnapshotTable {
     * legacy entries), partition layout, last commit instant and
     * operation. Metadata-only — no data I/O. */
   def detail(spark: SparkSession, path: String): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+    val vs = tableVersions(spark, path)
     val fs = fsOf(spark, logDir(path))
-    val head = vs.max
-    val es = readManifest(fs, path, head)
+    val head = new Snapshot(fs, path, vs.max)
+    val es = head.entries
     val size = es.map(e => entryLenOf(fs, path, e)).sum
     val row = org.apache.spark.sql.Row(
-      path, head, vs.length, es.length, size,
-      partitioning(spark, path).mkString(","),
-      new java.sql.Timestamp(commitInstant(fs, path, head)),
-      readMeta(fs, path, head).get("op").orNull)
+      path, head.version, vs.length, es.length, size,
+      head.partition.mkString(","),
+      new java.sql.Timestamp(commitInstant(fs, path, head.version)),
+      head.meta.get("op").orNull)
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(row), 1),
       types.StructType(Seq(
@@ -3604,12 +3570,9 @@ object SnapshotTable {
     * metadata, no segment resolution (the `n=` aggregates carry the
     * counts). */
   private[graft] def fileCount(spark: SparkSession, path: String,
-      version: Option[Int] = None): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
+      version: Option[Int] = None): Int =
     refAwareCount(fsOf(spark, logDir(path)), path,
-      version.getOrElse(vs.max))
-  }
+      snapshot(spark, path, version))
 
   /** Entry count of a manifest, ref-aware: segment refs answer from
     * their `n=` aggregate without resolving; a ref whose aggregate is
@@ -3617,8 +3580,9 @@ object SnapshotTable {
     * never empty) RESOLVES the segment instead of silently reporting
     * 1 — this count feeds IncrementalView's pruning denominator, and
     * an understated total would overstate pruning. */
-  private def refAwareCount(fs: FileSystem, path: String, v: Int): Int =
-    readManifestRefs(fs, path, v).map { l =>
+  private def refAwareCount(fs: FileSystem, path: String,
+      s: Snapshot): Int =
+    s.refs.map { l =>
       if (!l.startsWith(SegPrefix)) 1
       else {
         val n = refCount(l)
@@ -3652,14 +3616,12 @@ object SnapshotTable {
   private[graft] def readWherePruned(spark: SparkSession, path: String,
       predicate: Column, version: Option[Int] = None)
       : (DataFrame, Int, Int) = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val snap = snapshot(spark, path, version)
+    val v = snap.version
     val fs = fsOf(spark, logDir(path))
-    val refs = readManifestRefs(fs, path, v)
-    val schema = storedSchema(fs, path, v)
-    val st = schema.getOrElse(read(spark, path, Some(v)).schema)
+    val refs = snap.refs
+    val schema = snap.schema
+    val st = schema.getOrElse(readAt(spark, path, snap).schema)
     val pred = resolvedPredicate(spark, st, predicate)
     // compiled ONCE; evaluated per entry (the Expression walk was
     // ~40% of full-parse planning cost at 1M entries — r11 probe)
@@ -4491,18 +4453,16 @@ object SnapshotTable {
       sortCols: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, new Path(path))
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val totalBytes = readManifest(fs, path, vs.max)
-      .map(e => entryLenOf(fs, path, e)).sum
+    val head = snapshot(spark, path)
+    val totalBytes = head.entries.map(e => entryLenOf(fs, path, e)).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = read(spark, path)
+    val df = readAt(spark, path, head)
     val laid =
       if (sortCols.nonEmpty)
         df.repartitionByRange(nFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
       else df.repartition(nFiles)
-    overwrite(laid, path, op = "OPTIMIZE")
+    replaceAll(laid, path, Some(head), head.partition, "OPTIMIZE")
   }
 
   /** Catalyst-integrated read: the version's manifest becomes a
@@ -4534,20 +4494,18 @@ object SnapshotTable {
   def readCatalyst(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
+    val snap = snapshot(spark, path, version)
+    val parts = catalystRelationParts(spark, path, snap)
     // FIRST CHOICE: the front-door relation — since r13 it covers
     // DV'd and column-mapped versions too (GraftParquetFileFormat
     // masks row positions and translates names INSIDE the scan), so
     // the explicit API gets the same columnar plan with no per-query
     // DV anti-join above it
-    frontDoorRelation(spark, path, v).foreach { rel =>
+    parts.flatMap(frontDoorOf(spark, _)).foreach { rel =>
       return org.apache.spark.sql.GraftSqlAccess.ofRelation(spark, rel)
     }
-    catalystRelationParts(spark, path, v) match {
-      case None => read(spark, path, Some(v))
+    parts match {
+      case None => readAt(spark, path, snap)
       case Some((relation, dvRels, st)) =>
         // odd-schema-order fallback: the classic layered shape
         // (anti-join above the scan)
@@ -4585,20 +4543,21 @@ object SnapshotTable {
     * projection. Non-partition fields scan under PHYSICAL names
     * (evolved tables' files carry stable physical names; partition
     * columns can't be renamed). */
-  private[graft] def catalystRelationParts(spark: SparkSession,
-      path: String, v: Int): Option[(org.apache.spark.sql.execution
-        .datasources.HadoopFsRelation, Seq[(String, String)],
-        types.StructType)] = {
+  private type CatalystParts = (org.apache.spark.sql.execution
+    .datasources.HadoopFsRelation, Seq[(String, String)], types.StructType)
+
+  private def catalystRelationParts(spark: SparkSession,
+      path: String, snap: Snapshot): Option[CatalystParts] = {
     val fs = fsOf(spark, logDir(path))
+    val v = snap.version
     // planning reads the manifest LIST only — segment refs stay
     // unresolved unless something below genuinely needs their entries
-    val refs = readManifestRefs(fs, path, v)
-    val schemaOpt = storedSchema(fs, path, v)
+    val refs = snap.refs
+    val schemaOpt = snap.schema
     // the version's OWN partition layout: time travel across an
     // overwrite that re-partitioned must use the entries' real layout,
     // not the log head's
-    val partCols = readMeta(fs, path, v).get("partition")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
+    val partCols = snap.partition
     // EMPTY versions (delete-all, truncating overwrite) stay on the
     // front door when the log stores their schema: a zero-segment
     // index plans an ordinary (0-file) FileScan instead of dropping
@@ -4613,8 +4572,7 @@ object SnapshotTable {
     // manifests postdate schema tracking), so this fallback never
     // forces segment resolution
     val st = schemaOpt.getOrElse(
-      readFilesAs(spark, path, None,
-        readManifest(fs, path, v).map(entryPath)).schema)
+      readFilesAs(spark, path, None, snap.entries.map(entryPath)).schema)
     val partSchema = nullify(types.StructType(
       partCols.map(c => st(st.fieldIndex(c)))))
     val dataSchema = nullify(types.StructType(
@@ -4711,7 +4669,12 @@ object SnapshotTable {
     * row-translating V1 relation, which is always correct. */
   private[graft] def frontDoorRelation(spark: SparkSession, path: String,
       version: Int): Option[org.apache.spark.sql.sources.BaseRelation] =
-    catalystRelationParts(spark, path, version).flatMap {
+    catalystRelationParts(spark, path,
+      new Snapshot(fsOf(spark, logDir(path)), path, version))
+      .flatMap(frontDoorOf(spark, _))
+
+  private def frontDoorOf(spark: SparkSession, parts: CatalystParts)
+      : Option[org.apache.spark.sql.sources.BaseRelation] = parts match {
       case (relation, dvRefs, st) =>
         val log2phys = st.fields.iterator
           .filter(f => physName(f) != f.name)
@@ -4752,13 +4715,9 @@ object SnapshotTable {
   def metadataTable(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")}")
-    val fs = fsOf(spark, logDir(path))
-    val refs = readManifestRefs(fs, path, v)
-    val (segRefs, inline) = refs.partition(_.startsWith(SegPrefix))
+    val snap = snapshot(spark, path, version)
+    val v = snap.version
+    val (segRefs, inline) = snap.refs.partition(_.startsWith(SegPrefix))
     val segPaths = segRefs.map(l => new Path(path, refRel(l)).toString)
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -4795,18 +4754,16 @@ object SnapshotTable {
   def optimizeZOrder(spark: SparkSession, path: String,
       zCols: Seq[String], targetFileBytes: Long): Int = {
     val fs = fsOf(spark, new Path(path))
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val totalBytes = readManifest(fs, path, vs.max)
-      .map(e => entryLenOf(fs, path, e)).sum
+    val head = snapshot(spark, path)
+    val totalBytes = head.entries.map(e => entryLenOf(fs, path, e)).sum
     val nFiles = math.max(1,
       math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = read(spark, path)
-    val parts = partitioning(spark, path)
+    val df = readAt(spark, path, head)
+    val parts = head.partition
     val laid =
       if (parts.isEmpty) ZOrder.zOrderBy(df, zCols, nFiles)
       else ZOrder.zOrderWithin(df, parts, zCols, nFiles)
-    overwrite(laid, path, op = "OPTIMIZE-ZORDER")
+    replaceAll(laid, path, Some(head), parts, "OPTIMIZE-ZORDER")
   }
 
   /** Build per-file BLOOM FILTERS for `cols` and publish them as a
@@ -4836,12 +4793,8 @@ object SnapshotTable {
     require(bits == 0 || (bits >= 64 && Integer.bitCount(bits) == 1),
       s"need power-of-two bits >= 64 (or 0 = auto) and hashes >= 1")
     require(hashes >= 1, "need hashes >= 1")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val fs = fsOf(spark, logDir(path))
-    val body = readBody(fs, path, readV)
-    val manifest = body.entries
+    val read = snapshot(spark, path)
+    val manifest = read.entries
     // bits = 0 AUTO-SIZES by file count: cap the whole index near
     // 2^33 bits (~1 GB decoded) per column, clamped to [2^13, 2^16]
     // — at 16 files that is the classic 2^16 (8 KB/file), at 1M
@@ -4853,8 +4806,8 @@ object SnapshotTable {
       else java.lang.Long.highestOneBit(math.min(math.max(
         (1L << 33) / math.max(1, manifest.size), 1L << 13),
         1L << 16)).toInt
-    val schemaOpt = storedSchema(fs, path, readV)
-    val st = schemaOpt.getOrElse(read(spark, path, Some(readV)).schema)
+    val schemaOpt = read.schema
+    val st = schemaOpt.getOrElse(readAt(spark, path, read).schema)
     require(cols.nonEmpty && cols.forall(st.fieldNames.contains),
       s"indexBloom columns [${cols.mkString(",")}] must exist in " +
         s"[${st.fieldNames.mkString(",")}]")
@@ -4869,12 +4822,12 @@ object SnapshotTable {
     // Conflict evidence: every entry is re-annotated (touched), but a
     // racer's pure APPEND never conflicts — its files simply stay
     // un-bloomed (no item = keep = sound), so the rebase lands both.
-    commit(spark, path, Some(readV),
+    commit(spark, path, Some(read),
       Map("bloomCols" -> cols.mkString(","),
         "bloomBits" -> bitsEff.toString,
         "bloomHashes" -> hashes.toString,
         "op" -> "INDEX-BLOOM"),
-      Rebase(body, manifest, enriched, _ => false))
+      Rebase(read, manifest, enriched, _ => false))
   }
 
   /** `staged` entries enriched per the table's recorded bloom policy
@@ -5071,11 +5024,8 @@ object SnapshotTable {
   def optimizeIncremental(spark: SparkSession, path: String,
       targetFileBytes: Long): Option[Int] = {
     val fs = fsOf(spark, new Path(path))
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no snapshot table at $path")
-    val readV = vs.max
-    val body = readBody(fs, path, readV)
-    val rewrite = body.entries.filter(e => entryDvs(e).nonEmpty ||
+    val read = snapshot(spark, path)
+    val rewrite = read.entries.filter(e => entryDvs(e).nonEmpty ||
       entryLenOf(fs, path, e) < targetFileBytes / 2)
     // two small files compact into one; a single DV'd file still
     // rewrites (the point is clearing its read tax, not its size)
@@ -5085,18 +5035,17 @@ object SnapshotTable {
       val totalBytes = rewrite.map(e => entryLenOf(fs, path, e)).sum
       val nFiles = math.max(1,
         math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val rewriteSchema = storedSchema(fs, path, readV)
       val compacted =
-        readEntriesDv(spark, path, readV, rewriteSchema, rewrite)
+        readEntriesDv(spark, path, read.version, read.schema, rewrite)
         .coalesce(nFiles)
-      val staged = stage(toPhysical(compacted, rewriteSchema), path,
-        partitioning(spark, path))
+      val staged = stage(toPhysical(compacted, read.schema), path,
+        read.partition)
       // compaction depends on no row content beyond the files it
       // rewrites: a racer's ADDED files never conflict (they are
       // merely not compacted this pass), so it composes with
       // concurrent appends; touching the same files still aborts
-      Some(commit(spark, path, Some(readV), Map("op" -> "OPTIMIZE"),
-        Rebase(body, rewrite, staged, _ => false)))
+      Some(commit(spark, path, Some(read), Map("op" -> "OPTIMIZE"),
+        Rebase(read, rewrite, staged, _ => false)))
     }
   }
 
@@ -5159,18 +5108,19 @@ object SnapshotTable {
     val fs = fsOf(spark, new Path(path))
     val vs = versions(spark, path)
     val keepN = effectiveKeep(spark, keep)
-    val kept = vs.takeRight(keepN)
-    val referenced = kept.flatMap { v =>
-      val es = readManifest(fs, path, v)
-      es.map(entryPath) ++ es.flatMap(entryDvs).map(DvSidecar.relOf)
-    }.toSet.map((rel: String) => new Path(path, rel).getName)
-    // segment files referenced by KEPT manifest lists survive; the
-    // rest (orphans of lost commit races, segments of dropped
-    // versions) reclaim under the same grace window as data files
-    val referencedSegs = kept.flatMap(v =>
-      readManifestRefs(fs, path, v).filter(_.startsWith(SegPrefix))
-        .flatMap(l => Seq(new Path(path, refRel(l)).getName) ++
-          refBloomRel(l).map(r => new Path(path, r).getName))).toSet
+    // data files referenced by KEPT versions survive, and so do the
+    // segment files their manifest lists reference; the rest (orphans
+    // of lost commit races, segments of dropped versions) reclaim
+    // under the grace window
+    val (keptFiles, keptSegs) = vs.takeRight(keepN).map { v =>
+      val s = new Snapshot(fs, path, v)
+      (s.entries.flatMap(e =>
+          entryPath(e) +: entryDvs(e).map(DvSidecar.relOf)),
+        s.refs.filter(_.startsWith(SegPrefix))
+          .flatMap(l => refRel(l) +: refBloomRel(l).toSeq))
+    }.unzip
+    val referenced = keptFiles.flatten.map(new Path(path, _).getName).toSet
+    val referencedSegs = keptSegs.flatten.map(new Path(path, _).getName).toSet
     // delete()==false also means "already gone" (Hadoop's contract) —
     // a re-run after partial progress, or a concurrent vacuum, must
     // count such files as reclaimed, not fail; only a file that is

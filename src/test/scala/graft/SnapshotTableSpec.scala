@@ -4555,6 +4555,22 @@ class SnapshotTableSpec extends SparkSpec {
       val (hit4, kept4, total4) = SnapshotTable.readWherePruned(spark, p4,
         col("id") === 1234L)
       assert(hit4.count() === 1 && kept4 === total4)
+      // append vs an overwrite that re-partitions with the same
+      // schema: files staged under the old layout must not publish
+      // into a manifest that declares the new one
+      val p5 = freshPath("schemarace5")
+      SnapshotTable.create(Seq((1L, "x", "p"), (2L, "y", "q"))
+        .toDF("id", "a", "b"), p5, partitionBy = Seq("a"))
+      RacingLogStore.raceNext(p5)(SnapshotTable.overwrite(
+        Seq((3L, "x", "p")).toDF("id", "a", "b"), p5,
+        repartitionBy = Some(Seq("b"))))
+      intercept[java.util.ConcurrentModificationException] {
+        SnapshotTable.append(Seq((4L, "z", "r")).toDF("id", "a", "b"), p5)
+      }
+      assert(SnapshotTable.versions(spark, p5) === Seq(0, 1))
+      assert(SnapshotTable.partitioning(spark, p5) === Seq("b"))
+      assert(SnapshotTable.read(spark, p5).select("id").as[Long]
+        .collect().toSeq === Seq(3L))
     } finally spark.conf.unset("spark.graft.logStore.class")
   }
 
@@ -4599,6 +4615,49 @@ class SnapshotTableSpec extends SparkSpec {
       assert(SnapshotTable.read(spark, p).as[Long].collect().toSet ===
         (0L until 5L).toSet ++ Set(101L, 102L, 103L), name)
     }
+  }
+
+  test("every verb reads its table version once: one manifest read, " +
+      "plus the commit's bounded instant read and its log listing") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingFs].getName)
+    conf.set("fs.countfs.impl.disable.cache", "true")
+    val path = "countfs://" + freshPath("readcount")
+    SnapshotTable.create((0L until 20L).map(i => (i, i * 10))
+      .toDF("id", "v"), path)
+    val commits: Seq[(String, () => Any)] = Seq(
+      "append" -> (() => SnapshotTable.append(
+        Seq((20L, 200L)).toDF("id", "v"), path)),
+      "appendStreamBatch" -> (() => SnapshotTable.appendStreamBatch(
+        Seq((21L, 210L)).toDF("id", "v"), path, batchId = 0L)),
+      "merge" -> (() => SnapshotTable.merge(
+        Seq((1L, -10L)).toDF("id", "v"), path, Seq("id"))),
+      "delete" -> (() => SnapshotTable.delete(spark, path, col("id") === 2L)),
+      "deleteMoR" -> (() =>
+        SnapshotTable.deleteMoR(spark, path, col("id") === 3L)),
+      "updateMoR" -> (() => SnapshotTable.updateMoR(spark, path,
+        col("id") === 4L, Map("v" -> lit(-40L)))))
+    commits.foreach { case (name, verb) =>
+      val before = SnapshotTable.versions(spark, path).max
+      val (opens, listings) = CountingFs.count(verb())
+      assert(SnapshotTable.versions(spark, path).max === before + 1, name)
+      assert(opens <= 2 && listings <= 2,
+        s"$name: $opens manifest opens, $listings log listings")
+    }
+    val reads: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => SnapshotTable.read(spark, path)),
+      "readWhere" -> (() =>
+        SnapshotTable.readWhere(spark, path, col("id") === 7L)))
+    reads.foreach { case (name, verb) =>
+      val (opens, listings) = CountingFs.count(verb())
+      assert(opens === 1 && listings === 1,
+        s"$name: $opens manifest opens, $listings log listings")
+    }
+    val (opens, listings) =
+      CountingFs.count(SnapshotTable.detail(spark, path))
+    assert(opens <= 2 && listings === 1,
+      s"detail: $opens manifest opens, $listings log listings")
+    assert(SnapshotTable.read(spark, path).count() === 20)
   }
 
   test("every row-level verb rebases over a disjoint racing append and " +

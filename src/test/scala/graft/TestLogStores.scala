@@ -68,3 +68,35 @@ class LosingLogStore extends graft.sources.GraftLogStore {
 object LosingLogStore {
   val calls = new java.util.concurrent.atomic.AtomicInteger
 }
+
+/** Local filesystem on scheme `countfs` that counts how often the
+  * table layer opens a version manifest and lists the log directory —
+  * the I/O a verb's log reads cost on an object store, where each is a
+  * round trip. Register with `fs.countfs.impl` and cache disabled. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+
+  override def open(f: Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".manifest")) CountingFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == "_graft_log") CountingFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object CountingFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger
+  val listings = new java.util.concurrent.atomic.AtomicInteger
+
+  /** (manifest opens, log listings) made while `body` runs. */
+  def count(body: => Any): (Int, Int) = {
+    opens.set(0)
+    listings.set(0)
+    body
+    (opens.get, listings.get)
+  }
+}

@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
-# Prints the five size counts a simplicity change reports before and
+# Prints the six size counts a simplicity change reports before and
 # after: src/main Scala lines, the lines of SnapshotTable.scala (the
-# largest module, tracked on its own), distinct spark.graft.* options,
+# largest module, tracked on its own), the call sites of its manifest
+# reader manifestLines (one, the Snapshot constructor, while every
+# verb reads each table version once), distinct spark.graft.* options,
 # distinct SPARK_GRAFT_* env names, and SparkSession.builder() calls
 # (comment lines excluded). Also counts the rows of README.md's
 # "Options" table and exits non-zero with a MISMATCH line when that
@@ -13,6 +15,9 @@ cd "${1:-$(dirname "$0")/..}"
 
 lines=$(find src/main -name '*.scala' | xargs cat | wc -l)
 snapshot=$(wc -l < src/main/scala/graft/sources/SnapshotTable.scala)
+manifest_reads=$(grep -n 'manifestLines(' \
+  src/main/scala/graft/sources/SnapshotTable.scala |
+  grep -cvE '^[0-9]+:[[:space:]]*(\*|//)|def manifestLines\(' || true)
 options=$(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/main | sort -u | wc -l)
 envs=$(grep -rhoE 'SPARK_GRAFT_[A-Z0-9_]+' src/main | sort -u | wc -l)
 builders=$(grep -rn 'SparkSession.builder()' src/main |
@@ -23,6 +28,7 @@ readme_rows=$(awk '/^## /{in_opts = ($0 == "## Options"); next}
 
 echo "src/main Scala lines:        $lines"
 echo "SnapshotTable.scala lines:   $snapshot"
+echo "manifestLines( call sites:   $manifest_reads"
 echo "spark.graft.* options:       $options"
 echo "SPARK_GRAFT_* names:         $envs"
 echo "SparkSession.builder() calls: $builders"
