@@ -21,15 +21,34 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one exchange on `by`, one sort on (`on`, tag) per partition —
   * no join explosion, skew-bounded by the entity key like every other
-  * panel operator. CAVEAT (measured, ScaleProbe r5): the FORWARD
-  * direction carries values through an UnboundedFollowing frame, which
-  * Spark's WindowExec recomputes per row by scanning to the partition
-  * end — O(n²) in a hot group (175 s for ONE 100k-row entity, empirical
-  * exponent 1.99, vs 0.2 s for [[mergeAsOfNative]]). Backward streams
-  * (running frame, linear). Prefer the native operator for forward
-  * joins whenever a group can be large.
+  * panel operator. Both directions carry values through a running
+  * frame, linear per group: forward is the backward search in the
+  * reversed order (see [[carrier]]), because Spark's WindowExec
+  * recomputes an UnboundedFollowing frame per row — O(n²) in a hot
+  * group (175 s for ONE 100k-row entity, empirical exponent 1.99,
+  * ScaleProbe r5). [[mergeAsOfNative]] instead plans one
+  * co-partitioning exchange per side and no union or whole-table window.
   */
 object AsOfJoin {
+
+  /** The nearest non-null value of a column at or before (backward) or
+    * at or after (forward) each row of a union tagged by `tag` (1 =
+    * right), within each `by` group, in `on` order. At equal `on` a
+    * right row is visible to a left row. Forward computes the
+    * reference's first(ignoreNulls) over (currentRow, unboundedFollowing)
+    * in (on asc, tag asc) as last(ignoreNulls) over a running frame in
+    * the exact reverse order (on desc, tag desc), so both directions are
+    * linear per group. Identical results whenever (on, tag) orders each
+    * group's rows totally; under ties both forms pick an arbitrary tied
+    * row. */
+  private def carrier(by: Seq[String], on: String, tag: String,
+      direction: String): Column => Column = {
+    val onOrder = if (direction == "backward") col(on).asc else col(on).desc
+    val frame = Window.partitionBy(by.map(col): _*)
+      .orderBy(onOrder, col(tag).desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    c => last(c, ignoreNulls = true).over(frame)
+  }
 
   def mergeAsOf(
       left: DataFrame,
@@ -64,21 +83,7 @@ object AsOfJoin {
       d.withColumn(c, lit(null).cast(left.schema(c).dataType)))
     val unioned = taggedLeft.unionByName(taggedRightFull)
 
-    // Order so that, at equal `on`, the right row is visible to the left
-    // row: backward ⇒ right first (tag desc), forward ⇒ right last (tag asc).
-    val ord: Seq[Column] =
-      if (direction == "backward") Seq(col(on).asc, col(tag).desc)
-      else Seq(col(on).asc, col(tag).asc)
-    val w = Window.partitionBy(by.map(col): _*).orderBy(ord: _*)
-    val frame =
-      if (direction == "backward")
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      else w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    def carried(c: Column): Column =
-      if (direction == "backward") last(c, ignoreNulls = true).over(frame)
-      else first(c, ignoreNulls = true).over(frame)
-
+    val carried = carrier(by, on, tag, direction)
     val rightOn = when(col(tag) === 1, col(on))
     var out = unioned
       .withColumn(matchedOn, carried(rightOn))
@@ -109,11 +114,12 @@ object AsOfJoin {
     * and a per-partition merge scan with O(1) state, instead of union +
     * whole-table window. Measured at 10M rows (ScaleProbe r5, values
     * consumed): 3.0 s vs the window's 5.2 s naive; 0.6 s vs 1.1 s on
-    * bucketed+sorted tables (zero exchanges, zero sorts); 0.2 s vs
-    * 175 s on a single hot entity in the forward direction (the
-    * window's UnboundedFollowing frame is quadratic per group; this
-    * scan is linear with O(1) state in both directions). Prefer it
-    * whenever the right side is keyed uniquely per (by, on). */
+    * bucketed+sorted tables (zero exchanges, zero sorts). Both forms
+    * are linear per group in both directions: this scan keeps O(1)
+    * state, and the window form runs forward as a reversed running
+    * frame. What this operator adds is the co-partitioned, union-free
+    * plan. Prefer it whenever the right side is keyed uniquely per
+    * (by, on). */
   def mergeAsOfNative(
       left: DataFrame,
       right: DataFrame,
@@ -203,18 +209,8 @@ object AsOfJoin {
         .foldLeft(rightKeys)((d, c) =>
           d.withColumn(c, lit(null).cast(left.schema(c).dataType))))
 
-    val ord: Seq[Column] =
-      if (direction == "backward") Seq(col(on).asc, col(tag).desc)
-      else Seq(col(on).asc, col(tag).asc)
-    val w = Window.partitionBy(by.map(col): _*).orderBy(ord: _*)
-    val frame =
-      if (direction == "backward")
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      else w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val carried =
-      if (direction == "backward")
-        last(when(col(tag) === 1, col(on)), ignoreNulls = true).over(frame)
-      else first(when(col(tag) === 1, col(on)), ignoreNulls = true).over(frame)
+      carrier(by, on, tag, direction)(when(col(tag) === 1, col(on)))
 
     val matched = unioned.withColumn("__matched_on", carried)
       .filter(col(tag) === 0)

@@ -15,10 +15,20 @@ import graft.functions.ColumnOps
   * scale past the reference's schema.
   *
   * Scale notes: all windows here partition by the entity key, so Spark
-  * plans a single hash-partitioned exchange on the entity columns which
-  * is *reused* by consecutive window operators over the same key
-  * (Catalyst collapses adjacent Window nodes sharing a partitioning).
-  * Chaining lag + diff + movingAvg over the same entity costs ONE shuffle.
+  * plans one exchange on the entity columns which is *reused* by
+  * consecutive window operators over the same key (Catalyst collapses
+  * adjacent Window nodes sharing a partitioning). Chaining lag + diff +
+  * movingAvg over the same entity costs ONE shuffle. A caller that
+  * range-partitions its input on the entity key (`repartitionByRange`)
+  * gets that partitioning reused too, and a final ORDER BY led by the
+  * entity key then needs no exchange of its own.
+  *
+  * Every frame is linear per entity: a "next known value" is computed
+  * as `last(ignoreNulls)` over a running frame in the reversed order,
+  * never as `first(ignoreNulls)` over `(CURRENT ROW, UNBOUNDED
+  * FOLLOWING)`, which Spark's WindowExec recomputes for every row
+  * (O(n²) in an entity's row count). See Leis et al., "Efficient
+  * Processing of Window Functions in Analytical SQL Queries" (VLDB 2015).
   */
 object TimeOps {
 
@@ -71,21 +81,29 @@ object TimeOps {
       d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
   }
 
-  /** Backward-fill nulls (first(ignorenulls) over
-    * (currentRow, unboundedFollowing)) — reference transform.py:251-269. */
+  /** Backward-fill nulls — the reference's first(ignorenulls) over
+    * (currentRow, unboundedFollowing) (transform.py:251-269), computed as
+    * last(ignorenulls) over a running frame ordered by `timeCol` desc:
+    * desc (nulls last) is the exact reverse of asc (nulls first), so the
+    * rows from the current one onward are the same set, and the frame is
+    * linear per entity instead of recomputed per row. Identical results
+    * whenever `timeCol` orders each entity totally; under ties both forms
+    * pick an arbitrary tied row. */
   def bfill(df: DataFrame, entityCols: Seq[String], timeCol: String,
       cols: Seq[String]): DataFrame = {
-    val w = entityWindow(entityCols, col(timeCol))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val w = entityWindow(entityCols, col(timeCol).desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cols.foldLeft(df)((d, c) =>
-      d.withColumn(c, first(col(c), ignoreNulls = true).over(w)))
+      d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
   }
 
   /** Linear interpolation of interior null gaps per entity — the
     * gaps-and-islands algorithm of the reference's
     * LinearInterpolationOperator (transform.py:939-1054):
     * row_number → previous/next known value + row position via
-    * last/first(ignorenulls) over directional unbounded frames →
+    * last(ignorenulls) over running frames, ascending for the previous
+    * and descending for the next (the [[bfill]] reversal: linear per
+    * entity, identical whenever `timeCol` orders each entity totally) →
     * fill = prev + (next - prev) * (pos - prevPos) / (nextPos - prevPos),
     * only where the value is null. Leading/trailing nulls stay null.
     */
@@ -93,15 +111,16 @@ object TimeOps {
       cols: Seq[String]): DataFrame = {
     val wOrd = entityWindow(entityCols, col(timeCol))
     val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val wNext = entityWindow(entityCols, col(timeCol).desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val rnCol = "__rn_interp"
     val base = df.withColumn(rnCol, row_number().over(wOrd))
     val out = cols.foldLeft(base) { (d, c) =>
       val known = when(col(c).isNotNull, col(rnCol))
       val prevVal = last(col(c), ignoreNulls = true).over(wPrev)
       val prevRn = last(known, ignoreNulls = true).over(wPrev)
-      val nextVal = first(col(c), ignoreNulls = true).over(wNext)
-      val nextRn = first(known, ignoreNulls = true).over(wNext)
+      val nextVal = last(col(c), ignoreNulls = true).over(wNext)
+      val nextRn = last(known, ignoreNulls = true).over(wNext)
       val filled = prevVal +
         (nextVal - prevVal) * (col(rnCol) - prevRn) / (nextRn - prevRn)
       d.withColumn(c, when(col(c).isNull, filled).otherwise(col(c)))

@@ -13,8 +13,12 @@ import graft.operators.{AsOfJoin, TimeOps}
   * (SURVEY.md §2.5 W1-W9) — the entity–time panel operators, mapped onto
   * a (custkey, month) panel built from `orders`.
   *
-  * Scale note: every query here shuffles exactly once, on the entity key;
-  * consecutive windows over the same partitioning reuse the exchange.
+  * Scale note: each entity-keyed panel query (w1-w9, w13) plans one
+  * shuffle: a range exchange on the entity key at its input. Range
+  * partitioning on the key satisfies both the windows' clustering and a
+  * final ORDER BY led by that key, so consecutive windows and the sort
+  * reuse the one exchange, and the range bounds are sampled from the
+  * input scan instead of from a finished window stage.
   */
 object WindowQueries {
 
@@ -42,30 +46,41 @@ object WindowQueries {
     * amount (A1 aggregation — the base of the reference's join_datasets
     * panel).
     *
-    * The fact table is repartitioned on the ENTITY KEY alone before the
-    * aggregation: hash(custkey) satisfies the (custkey, mois) clustered
-    * distribution, so the groupBy runs without its own exchange AND
-    * every downstream Window.partitionBy(custkey) reuses the same
-    * partitioning — the whole panel pipeline (agg + lag + diff + mean +
-    * fill + as-of) shuffles the data exactly once. */
+    * The fact table is range-partitioned on the ENTITY KEY alone before
+    * the aggregation: range(custkey) satisfies the (custkey, mois)
+    * clustered distribution, so the groupBy runs without its own
+    * exchange, every downstream Window.partitionBy(custkey) reuses the
+    * same partitioning, and so does a final ORDER BY custkey, mois — the
+    * panel queries w1-w5 plan exactly one exchange. (The flagship's
+    * as-of union and joins add their own.) */
   private def monthlyPanel(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "orders")
-      .repartition(col("o_custkey"))
+      .repartitionByRange(col("o_custkey"))
       .groupBy(col("o_custkey").as("custkey"),
         date_trunc("month", col("o_orderdate")).cast(DateType).as("mois"))
       .agg(ColumnOps.exactSum2(col("o_totalprice")).as("amt"),
         count(lit(1)).as("n_orders"))
 
   /** Dense panel: per-customer monthly spine between first and last
-    * active month, left-joined with the sparse panel — missing months
-    * carry nulls (the input to fill/interpolation operators). */
+    * active month with the sparse panel's values — missing months carry
+    * nulls (the input to fill/interpolation operators). Built in one
+    * pass over the range-clustered sparse panel: each active month
+    * explodes into itself plus the empty months up to the entity's next
+    * active month, and only the first of them keeps the values. A spine
+    * left-joined with the panel would re-shuffle both sides (Spark never
+    * treats two range partitionings as co-partitioned). */
   private def densePanel(s: SparkSession, dir: String): DataFrame = {
-    val panel = monthlyPanel(s, dir)
-    val spans = panel.groupBy(col("custkey"))
-      .agg(min(col("mois")).as("d0"), max(col("mois")).as("d1"))
-    val spine = TimeOps.explodeInterval(spans, "d0", "d1", "mois")
-      .select(col("custkey"), col("mois"))
-    spine.join(panel, Seq("custkey", "mois"), "left")
+    val next = lead(col("mois"), 1)
+      .over(Window.partitionBy(col("custkey")).orderBy(col("mois")))
+    val gap = sequence(col("mois"),
+      coalesce(add_months(col("__next"), -1), col("mois")),
+      expr("interval 1 month"))
+    monthlyPanel(s, dir).withColumn("__next", next)
+      .select(col("custkey"), posexplode(gap).as(Seq("__pos", "__mois")),
+        col("amt"), col("n_orders"))
+      .select(col("custkey"), col("__mois").as("mois"),
+        when(col("__pos") === 0, col("amt")).as("amt"),
+        when(col("__pos") === 0, col("n_orders")).as("n_orders"))
   }
 
   /** DuckDB CTE prefix matching monthlyPanel/densePanel. */
@@ -147,6 +162,7 @@ object WindowQueries {
     // (reference extract_financial_DGFiP.py:213-222)
     "w6_leastnull_dedup" -> ((s, dir) => {
       val li = Tables(s, dir, "lineitem")
+        .repartitionByRange(col("l_orderkey"))
         .withColumn("v1", when(col("l_discount") > 0.05, col("l_discount")))
         .withColumn("v2", when(col("l_tax") > 0.04, col("l_tax")))
       TimeOps.leastNullDedup(li, Seq("l_orderkey"), Seq("v1", "v2"),
@@ -157,7 +173,8 @@ object WindowQueries {
 
     // W7: latest-revision dedup (reference extract_debit_urssaf.py:107-135)
     "w7_latest_revision" -> ((s, dir) => {
-      TimeOps.latestRevision(Tables(s, dir, "lineitem"),
+      TimeOps.latestRevision(
+          Tables(s, dir, "lineitem").repartitionByRange(col("l_orderkey")),
           Seq("l_orderkey"), "l_linenumber")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy(col("l_orderkey"))
@@ -166,6 +183,7 @@ object WindowQueries {
     // W8: gaps-and-islands interval merge (reference extract_ap_data.py:159-180)
     "w8_interval_merge" -> ((s, dir) => {
       val iv = Tables(s, dir, "orders")
+        .repartitionByRange(col("o_custkey"))
         .select(col("o_custkey").as("custkey"),
           date_trunc("month", col("o_orderdate")).cast(DateType).as("date_debut"),
           add_months(date_trunc("month", col("o_orderdate")).cast(DateType), 2)
@@ -181,6 +199,7 @@ object WindowQueries {
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables(s, dir, "orders")
+        .repartitionByRange(col("o_custkey"))
         .withColumn("cum_amount",
           sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
             .cast(DoubleType))
@@ -192,11 +211,12 @@ object WindowQueries {
 
     // W13: type-2 slowly-changing dimension build — consecutive
     // same-priority orders collapse, each surviving change gets its
-    // [valid_from, valid_to) interval + is_current flag. One shuffle on
-    // the key; the lead pass reuses it over the (smaller) change rows
+    // [valid_from, valid_to) interval + is_current flag. One range
+    // shuffle on the key; the lead pass and the ORDER BY reuse it
     "w13_scd2" -> ((s, dir) => {
       graft.operators.TimeOps.scd2(
           Tables(s, dir, "orders")
+            .repartitionByRange(col("o_custkey"))
             .select(col("o_custkey"), col("o_orderpriority"),
               col("o_orderdate").cast(DateType).as("odate"),
               col("o_orderkey")),

@@ -191,7 +191,7 @@ private[graft] class GraftStreamSource(
     * backfilling a 10M-file initial version would otherwise hold
     * multiple GB of strings in this LRU. Full entry lines are
     * re-materialized per batch for just the slice being shipped
-    * ([[SnapshotTable.entriesForPaths]]); manifests are immutable so
+    * ([[SnapshotTable.readSliceAt]]); manifests are immutable so
     * recomputation is always safe. */
   private final case class UnitInfo(split: Boolean, cnt: Long,
       paths: Array[String], sizes: Array[Long])
@@ -493,7 +493,7 @@ private[graft] class GraftStreamSource(
 
   /** The (start, end] batch under sub-version offsets: per version,
     * the covered slice of a pure-append version's sorted add list
-    * reads directly ([[SnapshotTable.readEntriesAt]] — masks applied,
+    * reads directly ([[SnapshotTable.readSliceAt]] — masks applied,
     * that version's stored schema), an atomic version contributes its
     * whole row-level diff. Replay determinism: slices are positions
     * into a path-sorted list computed from immutable manifests, so a
@@ -527,8 +527,7 @@ private[graft] class GraftStreamSource(
         // manifest supplies the rest per batch
         val slicePaths =
           info.paths.slice(from.toInt, until.toInt).toSet
-        Some(align(SnapshotTable.readEntriesAt(spark, path, v,
-          SnapshotTable.entriesForPaths(spark, path, v, slicePaths))))
+        Some(align(SnapshotTable.readSliceAt(spark, path, v, slicePaths)))
       }
     }
     GraftSqlAccess.streamingDf(spark,

@@ -1432,17 +1432,6 @@ object SnapshotTable {
       v: Int): Seq[String] =
     new Snapshot(fsOf(spark, logDir(path)), path, v).entries
 
-  /** A version's manifest entry LINES restricted to `wanted` data-file
-    * rel paths — the stream source's slice re-materializer: its offset
-    * walker caches only paths (a 10M-add backfill version held as
-    * whole entry lines is gigabytes of driver strings), and re-reads
-    * the immutable manifest for just the entries a micro-batch slice
-    * actually needs. Full lines exist only transiently inside this
-    * call; what's RETAINED is slice-sized. */
-  private[graft] def entriesForPaths(spark: SparkSession, path: String,
-      v: Int, wanted: Set[String]): Seq[String] =
-    manifestEntries(spark, path, v).filter(e => wanted(entryPath(e)))
-
   /** Number of manifest entries still referencing a deletion vector
     * at `version` (latest by default). 0 = every merge-on-read mask
     * has been materialized (no per-read anti-join tax); the operative
@@ -1458,14 +1447,21 @@ object SnapshotTable {
   private[graft] def entryKey(line: String): String =
     entryPath(line) + "|" + entryDv(line).getOrElse("")
 
-  /** The visible rows of `entries` under version `v`'s stored schema —
-    * the stream source's sub-version SLICE reader (a micro-batch of a
-    * split large commit reads only its own slice of the added
-    * entries, masks included). */
-  private[graft] def readEntriesAt(spark: SparkSession, path: String,
-      v: Int, entries: Seq[String]): DataFrame =
-    readEntriesDv(spark, path, v,
-      new Snapshot(fsOf(spark, logDir(path)), path, v).schema, entries)
+  /** The visible rows of version `v`'s entries whose data-file rel path
+    * is in `wanted`, under v's stored schema — the stream source's
+    * sub-version SLICE reader (a micro-batch of a split large commit
+    * reads only its own slice of the added entries, masks included).
+    * Its offset walker caches only paths (a 10M-add backfill version
+    * held as whole entry lines is gigabytes of driver strings), so the
+    * immutable manifest is read once here, for both the schema and the
+    * slice's entries; full lines exist only transiently inside this
+    * call. */
+  private[graft] def readSliceAt(spark: SparkSession, path: String,
+      v: Int, wanted: Set[String]): DataFrame = {
+    val snap = new Snapshot(fsOf(spark, logDir(path)), path, v)
+    readEntriesDv(spark, path, v, snap.schema,
+      snap.entries.filter(e => wanted(entryPath(e))))
+  }
 
   /** Central DV-applied reader: read `entries` (full manifest lines)
     * and mask every row whose (file, pos) appears in a referenced

@@ -4660,6 +4660,28 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, path).count() === 20)
   }
 
+  test("a sliced stream micro-batch reads each version manifest once") {
+    import graft.sources.{GraftSourceOffset, GraftStreamSource}
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingFs].getName)
+    conf.set("fs.countfs.impl.disable.cache", "true")
+    val path = "countfs://" + freshPath("slicecount")
+    SnapshotTable.create((0L until 80L).toDF("id").repartition(8), path)
+    SnapshotTable.append((80L until 120L).toDF("id").repartition(4), path)
+    val src = new GraftStreamSource(spark.sqlContext, path,
+      Map("maxFilesPerTrigger" -> "3"))
+    val offsets = Iterator.continually(src.getOffset)
+      .takeWhile(_.nonEmpty).flatten.toSeq
+    assert(offsets === Seq(GraftSourceOffset(0L, 3L),
+      GraftSourceOffset(0L, 6L), GraftSourceOffset(1L, 1L),
+      GraftSourceOffset(1L, 4L)))
+    // (0,6] to (1,1]: the last 2 files of v0 and the first of v1
+    val (opens, _) = CountingFs.count(
+      src.getBatch(Some(offsets(1)), offsets(2)))
+    assert(opens === 2, s"$opens manifest opens for 2 sliced versions")
+    assert(SnapshotTable.read(spark, path).count() === 120)
+  }
+
   test("every row-level verb rebases over a disjoint racing append and " +
       "matches the serial append-then-verb") {
     spark.conf.set("spark.graft.manifest.segmentEntries", "2")
