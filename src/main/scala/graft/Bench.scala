@@ -253,7 +253,7 @@ object Bench {
     val baseJson = baselines.map(b => "\"" + esc(b._1) + "\"")
       .mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"mins":$mins,"errors":$errs,"runs":$runs,"sf":"$sfDir","codeCacheMB":$ccs,"codeCacheMaxMB":$codeCacheMaxMB,"outliers_vs_committed":$outliersJson,"outlier_baselines":$baseJson,"control":"$control","controlSec":$curControl}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"mins":$mins,"errors":$errs,"runs":$runs,"sf":"$sfDir","codeCacheMB":$ccs,"codeCacheMaxMB":$codeCacheMaxMB,"outliers_vs_committed":$outliersJson,"outlier_baselines":$baseJson,"control":"$control","controlSec":$curControl,"cpus":${cpus.toInt},"defaultParallelism":${spark.sparkContext.defaultParallelism}}"""
     println(line)
     // the harness archives only a bounded stdout tail, which cuts the
     // full per-query map off the record once the surface outgrows it

@@ -107,10 +107,9 @@ object Aggregates {
       .agg(sum(valueCol).cast(LongType).as("__tot"))
       .collect()
       .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .toMap
-    val offsets = totals.keys.toSeq.sorted.map { p =>
-      p -> totals.keys.filter(_ < p).map(totals).sum
-    }
+      .sortBy(_._1)
+    // a partition's offset: the sum of every earlier partition's total
+    val offsets = totals.map(_._1).zip(totals.map(_._2).scanLeft(0L)(_ + _))
     val offCol = offsets.foldLeft(lit(0L)) { case (acc, (p, off)) =>
       when(col("__part") === p, off).otherwise(acc)
     }

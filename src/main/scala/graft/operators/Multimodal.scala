@@ -395,16 +395,6 @@ object Multimodal {
       }
     }.toDF()
   }
-
-
-  /** Metadata-only "resize" plumbing: records target dimensions in the
-    * meta struct (the real pixel work belongs in the codec step). */
-  def withTargetSize(media: DataFrame, width: Int, height: Int): DataFrame =
-    media.withColumn("meta", struct(
-      col("meta.mime").as("mime"),
-      lit(width).as("width"),
-      lit(height).as("height"),
-      col("meta.duration_ms").as("duration_ms")))
 }
 
 /** Row shape of [[Multimodal.decodeBatch]]. */

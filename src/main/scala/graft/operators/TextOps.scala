@@ -128,14 +128,6 @@ object TextOps {
   /** Exact document fingerprint: md5 of the normalized text. */
   def fingerprint(c: Column): Column = md5(normalize(c))
 
-  /** Rolling polynomial hash over token k-grams, winnowing-style: the
-    * minimum k-gram hash is a locality-robust document fingerprint
-    * (same idea as MOSS winnowing, one window). */
-  def minKgramHash(c: Column, k: Int = 3): Column = {
-    val sh = Dedup.shingles(c, k)
-    when(size(sh) > 0, array_min(transform(sh, s => xxhash64(s))))
-  }
-
   /** Per-language marker-word profiles for the n-gram/stopword
     * language-id heuristic. Order matters: ties resolve to the first
     * language in this list (deterministic). */
@@ -157,18 +149,6 @@ object TextOps {
       when(sc === maxScore, lit(lang)).otherwise(els)
     }
     when(maxScore === 0, lit("unknown")).otherwise(chain)
-  }
-
-  /** Composite quality score in [0,1]: rewards moderate length,
-    * punctuation presence, and a sane stopword share. Deterministic
-    * column math — thresholds are heuristic. */
-  def qualityScore(c: Column, stopwords: Seq[String]): Column = {
-    val lenScore = least(length(c).cast(DoubleType) / 500.0, lit(1.0))
-    val punct = punctRatio(c)
-    val punctScore = when(punct > 0.2, 0.0).otherwise(lit(1.0) - punct / 0.2)
-    val sw = stopwordRatio(c, stopwords)
-    val swScore = lit(1.0) - abs(sw - 0.4) / 0.6
-    (lenScore + punctScore + greatest(swScore, lit(0.0))) / 3.0
   }
 
   // -------- Gopher-style repetition / quality-filter metrics --------

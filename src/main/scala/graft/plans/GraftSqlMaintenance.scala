@@ -294,8 +294,9 @@ case class GraftOptimizeCommand(target: GraftSqlMaintenance.Target,
 /** `VACUUM tbl [RETAIN n VERSIONS] [DRY RUN]` — drop all but the
   * newest n (default 2) versions and reclaim unreferenced files.
   * DRY RUN returns the versions a real vacuum would drop right now,
-  * deleting nothing — the scheduler pre-flight. The fleet-wide
-  * `spark.graft.vacuum.minVersionsToRetain` floor applies to both. */
+  * deleting nothing — the scheduler pre-flight. Unreferenced files
+  * younger than [[SnapshotTable.vacuum]]'s default 10-minute grace
+  * window survive (they may belong to an in-flight writer). */
 case class GraftVacuumCommand(target: GraftSqlMaintenance.Target,
     retain: Option[Int], dryRun: Boolean) extends LeafRunnableCommand {
   import GraftSqlMaintenance._
@@ -308,12 +309,7 @@ case class GraftVacuumCommand(target: GraftSqlMaintenance.Target,
     if (dryRun)
       SnapshotTable.vacuumPlan(spark, path, keep).map(v => Row(v))
     else {
-      // in-flight-writer grace window (see SnapshotTable.vacuum's
-      // scaladoc); conf-overridable for maintenance windows where no
-      // writer can be in flight
-      val grace = spark.conf.getOption("spark.graft.vacuum.graceMs")
-        .map(_.toLong).getOrElse(10L * 60 * 1000)
-      val n = SnapshotTable.vacuum(spark, path, keep, grace)
+      val n = SnapshotTable.vacuum(spark, path, keep)
       GraftSqlMaintenance.refresh(spark, path, table)
       Seq(Row(path, n))
     }

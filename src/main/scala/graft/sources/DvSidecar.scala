@@ -216,8 +216,4 @@ private[graft] object DvSidecar {
 
   /** Test/observability hook: cached decoded bytes right now. */
   private[graft] def cachedBytes: Long = cacheBytes.get
-
-  /** Test hook: number of resident blob entries. */
-  private[graft] def cachedEntries: Int =
-    cache.synchronized(cache.size())
 }

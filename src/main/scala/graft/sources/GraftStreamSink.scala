@@ -115,14 +115,16 @@ private[graft] object GraftStreamSink {
     * table through the exactly-once append (honoring `partitionBy`).
     * Shared by the registered Update-mode sink and
     * `graft.streaming.Streaming.applyChangeFeed` — one body, one
-    * contract. */
+    * contract. One read of the log head serves the marker check, the
+    * create-or-merge choice and the merge itself, so a keyed batch
+    * costs the log reads of one plain merge. */
   def applyKeyedBatch(batch: DataFrame, tablePath: String,
       keyCols: Seq[String], batchId: Long,
       partitionBy: Seq[String] = Seq.empty,
       cdcOverride: Option[Boolean] = None): Unit = {
-    val spark = batch.sparkSession
-    if (SnapshotTable.committedStreamBatch(spark, tablePath)
-        .exists(_ >= batchId)) return
+    val head = SnapshotTable.headSnapshot(batch.sparkSession, tablePath)
+    if (head.flatMap(SnapshotTable.streamBatchOf).exists(_ >= batchId))
+      return
     // `cdc` option pins the interpretation; without it the shape is
     // sniffed from the column names (and the CDC path then VALIDATES
     // the change_type values loudly — see applyChangeBatch)
@@ -131,7 +133,8 @@ private[graft] object GraftStreamSink {
         "columns change_type and _commit_version in the stream, got " +
         s"[${batch.columns.mkString(",")}]"))
     if (cdcOverride.getOrElse(isCdcShaped(batch)))
-      applyChangeBatch(batch, tablePath, keyCols, batchId, partitionBy)
+      applyChangeBatch(batch, tablePath, keyCols, batchId, partitionBy,
+        head)
     else {
       import org.apache.spark.sql.functions.col
       require(keyCols.forall(batch.columns.contains),
@@ -154,13 +157,24 @@ private[graft] object GraftStreamSink {
             "batch has no ordering to pick the newest image; emit the " +
             "CDC shape (change_type/_commit_version) or reduce the " +
             "stream to one image per key per trigger")
-      if (SnapshotTable.versions(spark, tablePath).isEmpty)
-        SnapshotTable.appendStreamBatch(batch, tablePath, batchId,
-          partitionBy)
-      else
-        SnapshotTable.merge(batch, tablePath, keyCols,
-          meta = Map("streamBatch" -> batchId.toString))
+      commitBatch(batch, tablePath, keyCols, batchId, partitionBy, head,
+        removeKeys = None)
     }
+  }
+
+  /** The batch's one commit: the first batch creates the table through
+    * the exactly-once append, a later one merges on the `head` it was
+    * checked against, recording its batch marker. */
+  private def commitBatch(ups: DataFrame, tablePath: String,
+      keyCols: Seq[String], batchId: Long, partitionBy: Seq[String],
+      head: Option[SnapshotTable.Snapshot],
+      removeKeys: Option[DataFrame]): Unit = head match {
+    case None =>
+      SnapshotTable.appendStreamBatch(ups, tablePath, batchId, partitionBy)
+    case Some(read) =>
+      SnapshotTable.mergeOn(ups, tablePath, keyCols, read,
+        Map("streamBatch" -> batchId.toString), removeKeys,
+        evolveSchema = false)
   }
 
   /** A CDC micro-batch (rows tagged `change_type` with
@@ -172,8 +186,8 @@ private[graft] object GraftStreamSink {
     *     same version — post IS the new state; a preimage without its
     *     postimage in the batch decides nothing);
     *  2. final insert/postimage rows upsert, final delete keys remove
-    *     — one [[SnapshotTable.merge]], exactly-once via the batch
-    *     marker.
+    *     — one keyed merge on `head`, whose batch marker
+    *     [[applyKeyedBatch]] has already checked.
     * Determinism (ADVICE r15): two rows of one key with EQUAL version
     * and precedence — a key-duplicated source append, or a v0
     * snapshot carrying duplicate keys — would rank nondeterministically
@@ -181,14 +195,11 @@ private[graft] object GraftStreamSink {
     * across replays. A stable hash over every batch column (sorted by
     * name) is the final orderBy key: the chosen row is a pure function
     * of the batch CONTENTS, identical on every replay/restart. */
-  def applyChangeBatch(batch: DataFrame, tablePath: String,
-      keyCols: Seq[String], batchId: Long,
-      partitionBy: Seq[String] = Seq.empty): Unit = {
+  private def applyChangeBatch(batch: DataFrame, tablePath: String,
+      keyCols: Seq[String], batchId: Long, partitionBy: Seq[String],
+      head: Option[SnapshotTable.Snapshot]): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number, when, xxhash64}
-    val spark = batch.sparkSession
-    if (SnapshotTable.committedStreamBatch(spark, tablePath)
-        .exists(_ >= batchId)) return
     require(keyCols.forall(batch.columns.contains),
       s"graft CDC apply: key columns [${keyCols.mkString(",")}] must " +
         s"all be batch columns [${batch.columns.mkString(",")}]")
@@ -220,13 +231,7 @@ private[graft] object GraftStreamSink {
       .drop("change_type", "_commit_version", "__p", "__rn")
     val rems = fin.filter(col("__p") === 1)
       .select(keyCols.map(col): _*)
-    if (SnapshotTable.versions(spark, tablePath).isEmpty)
-      SnapshotTable.appendStreamBatch(ups, tablePath, batchId,
-        partitionBy)
-    else
-      SnapshotTable.merge(ups, tablePath, keyCols,
-        meta = Map("streamBatch" -> batchId.toString),
-        removeKeys = Some(rems))
-    ()
+    commitBatch(ups, tablePath, keyCols, batchId, partitionBy, head,
+      removeKeys = Some(rems))
   }
 }

@@ -447,9 +447,8 @@ private[graft] class GraftStreamSource(
       s"graft stream at $path: replay needs version(s) " +
         s"${missing.mkString(",")} but their manifests are gone — " +
         "vacuum retention must outlive streaming checkpoint lag " +
-        "(raise vacuum keep / spark.graft.vacuum.minVersionsToRetain, " +
-        "check lag first with vacuumPlan); this stream cannot resume " +
-        "without a fresh checkpoint"))
+        "(raise vacuum's keep; check lag first with vacuumPlan); " +
+        "this stream cannot resume without a fresh checkpoint"))
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {

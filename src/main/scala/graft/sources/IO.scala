@@ -59,10 +59,6 @@ object IO {
   def writeParquetSingle(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Parquet sink at natural parallelism (the scale path). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Hive-style partitioned parquet sink — the bulk layout at scale:
     * filters on `partitionCols` become directory pruning (zero I/O for
     * excluded partitions) instead of full scans. `sortCols` optionally

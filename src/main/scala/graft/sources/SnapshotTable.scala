@@ -382,19 +382,13 @@ object SnapshotTable {
   private val WvLine = "#wv=2"
 
   /** How long a reader waits for a marker-less manifest's bytes to
-    * settle before declaring it torn. Session-overridable so specs
-    * can shorten the refusal arms (no 3 s burn) and LENGTHEN the
-    * in-flight-writer arm (a loaded rig must not starve a 500 ms
-    * filler thread into a spurious torn error — the r13 flake-watch
-    * hypothesis). */
-  private def tornAwaitMs: Long =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.manifest.tornAwaitMs"))
-      .map(_.toLong).getOrElse(3000L)
+    * settle before declaring it torn: an in-flight winner's write
+    * lands well inside it, a torn manifest fails after it. */
+  private val TornAwaitMs = 3000L
 
   /** The manifest body without its end marker. A manifest whose last
     * line is not [[EotLine]] is either a winner's create-exclusive
-    * write still in flight (spin up to [[tornAwaitMs]] for it) or torn
+    * write still in flight (spin up to [[TornAwaitMs]] for it) or torn
     * by a failed writer; a witness-less, marker-less manifest from a
     * pre-marker writer is refused the same way. */
   private def manifestLines(fs: FileSystem, path: String, v: Int): Seq[String] = {
@@ -410,8 +404,7 @@ object SnapshotTable {
           .map(_.trim).filter(_.nonEmpty)
       } finally in.close()
     }
-    val budget = tornAwaitMs
-    val deadline = System.currentTimeMillis + budget
+    val deadline = System.currentTimeMillis + TornAwaitMs
     var tries = 0
     while (tries == 0 || System.currentTimeMillis < deadline) {
       val lines = readOnce()
@@ -420,7 +413,7 @@ object SnapshotTable {
       Thread.sleep(20)
     }
     sys.error(s"manifest v$v at $path has no end-of-transaction " +
-      s"marker after $budget ms — torn by a failed writer, or written " +
+      s"marker after $TornAwaitMs ms — torn by a failed writer, or written " +
       "in the retired marker-less legacy format; manual cleanup required")
   }
 
@@ -632,7 +625,7 @@ object SnapshotTable {
 
   /** The newest version, or None when `path` holds no table yet (the
     * verbs that may create one: overwrite, the first stream batch). */
-  private def headSnapshot(spark: SparkSession,
+  private[sources] def headSnapshot(spark: SparkSession,
       path: String): Option[Snapshot] =
     versions(spark, path).lastOption
       .map(new Snapshot(fsOf(spark, logDir(path)), path, _))
@@ -2457,7 +2450,7 @@ object SnapshotTable {
   def committedStreamBatch(spark: SparkSession, path: String): Option[Long] =
     headSnapshot(spark, path).flatMap(streamBatchOf)
 
-  private def streamBatchOf(s: Snapshot): Option[Long] =
+  private[sources] def streamBatchOf(s: Snapshot): Option[Long] =
     s.meta.get("streamBatch").filter(_.nonEmpty).map(_.toLong)
 
   /** Row-level MERGE (upsert) as a copy-on-write commit: rows of
@@ -2529,7 +2522,7 @@ object SnapshotTable {
       snapshot(updates.sparkSession, path, Some(readV)), meta, removeKeys,
       evolveSchema)
 
-  private def mergeOn(updates: DataFrame, path: String,
+  private[sources] def mergeOn(updates: DataFrame, path: String,
       keyCols: Seq[String], read: Snapshot, meta: Map[String, String],
       removeKeys: Option[DataFrame], evolveSchema: Boolean): Int = {
     val spark = updates.sparkSession
@@ -3203,8 +3196,8 @@ object SnapshotTable {
     * read a single time and serves as both its version's TO side and
     * the next version's FROM side, with segment-level pre-cancellation
     * ([[diffEntrySides]]) keeping each driver compare churn-sized.
-    * Ranges longer than `spark.graft.changeFeed.maxPlanVersions`
-    * (default 64) are planned in CHUNKS: each chunk's union subtree is
+    * Ranges longer than [[CdfPlanVersions]] (64) versions are
+    * planned in CHUNKS: each chunk's union subtree is
     * pinned to its computed rows via an EAGER [[graft.Barrier]], so the
     * driver's live plan is O(chunk) whatever the range — a year of
     * 10-minute commits (~50k versions) would otherwise analyze a
@@ -3223,7 +3216,15 @@ object SnapshotTable {
     * materializes. */
   def changeFeed(spark: SparkSession, path: String, fromVersion: Int,
       toVersion: Option[Int] = None,
-      updateImages: Boolean = false): DataFrame = {
+      updateImages: Boolean = false): DataFrame =
+    changeFeed(spark, path, fromVersion, toVersion, updateImages,
+      CdfPlanVersions)
+
+  /** [[changeFeed]] planned in chunks of `chunkSize` versions (specs
+    * drive the chunked path with short ranges through it). */
+  private[graft] def changeFeed(spark: SparkSession, path: String,
+      fromVersion: Int, toVersion: Option[Int], updateImages: Boolean,
+      chunkSize: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val vs = tableVersions(spark, path)
     val toV = toVersion.getOrElse(vs.max)
@@ -3264,11 +3265,6 @@ object SnapshotTable {
       base.select((target.fieldNames.toSeq :+ "change_type" :+
         "_commit_version").map(col): _*)
     }
-    val chunkSize = spark.conf
-      .getOption("spark.graft.changeFeed.maxPlanVersions")
-      .map(_.toInt).getOrElse(DefaultCdfPlanVersions)
-    require(chunkSize >= 1,
-      "spark.graft.changeFeed.maxPlanVersions must be >= 1")
     val lazyWhole = (toV - fromVersion + 1) <= chunkSize
     // the walk: each manifest read once; version v's ref list (tiny —
     // segment refs + loose lines, never flattened entries) becomes
@@ -3307,12 +3303,12 @@ object SnapshotTable {
     unionTree(done.toSeq)
   }
 
-  /** Default version-chunk size for [[changeFeed]]'s driver plan (the
-    * live plan holds at most this many diff subtrees; longer ranges
-    * pin completed chunks to their rows). 64 diff subtrees ≈ the
-    * analysis weight of a medium multi-join query — well inside
-    * Catalyst's comfort zone while keeping chunk jobs coarse. */
-  private val DefaultCdfPlanVersions = 64
+  /** Version-chunk size for [[changeFeed]]'s driver plan (the live
+    * plan holds at most this many diff subtrees; longer ranges pin
+    * completed chunks to their rows). 64 diff subtrees ≈ the analysis
+    * weight of a medium multi-join query — well inside Catalyst's
+    * comfort zone while keeping chunk jobs coarse. */
+  private val CdfPlanVersions = 64
 
   /** Union as a balanced binary tree: plan depth O(log n), the shape
     * both the CDC stream source and the batch change feed need for
@@ -3608,9 +3604,12 @@ object SnapshotTable {
     readWherePruned(spark, path, predicate, version)._1
 
   /** [[readWhere]] plus pruning evidence: (result, files kept, files
-    * total) — the counters specs and probes assert on. */
+    * total) — the counters specs and probes assert on. Manifests of at
+    * least `distributedMinFiles` files plan distributed (specs pass 1
+    * to drive that path on small tables). */
   private[graft] def readWherePruned(spark: SparkSession, path: String,
-      predicate: Column, version: Option[Int] = None)
+      predicate: Column, version: Option[Int] = None,
+      distributedMinFiles: Long = DistributedPlanningMinFiles)
       : (DataFrame, Int, Int) = {
     val snap = snapshot(spark, path, version)
     val v = snap.version
@@ -3645,12 +3644,10 @@ object SnapshotTable {
     // SIDECARS in the same job (keyed by file name), so huge-table
     // point lookups get distributed parsing and bloom pruning
     // together.
-    val distMin = spark.conf.getOption(
-      "spark.graft.manifest.distributedPlanning.minFiles")
-      .map(_.toLong).getOrElse(4000000L)
     val quickCount = refs.iterator.map(l =>
       if (l.startsWith(SegPrefix)) math.max(refCount(l), 1) else 1).sum
-    if (quickCount >= distMin && refs.exists(_.startsWith(SegPrefix))) {
+    if (quickCount >= distributedMinFiles &&
+        refs.exists(_.startsWith(SegPrefix))) {
       val (kept, total) =
         distributedPrunedEntries(spark, path, refs, pred, schema)
       val df =
@@ -3717,6 +3714,10 @@ object SnapshotTable {
         .filter(predicate)
     (df, kept.size, total)
   }
+
+  /** File count from which [[readWherePruned]] parses the surviving
+    * segments in a Spark job; smaller manifests parse on the driver. */
+  private val DistributedPlanningMinFiles = 4000000L
 
   /** The distributed half of [[readWherePruned]]: driver-side
     * segment-level refutation from list aggregates, then one Spark
@@ -5045,26 +5046,16 @@ object SnapshotTable {
     }
   }
 
-  /** The retention actually applied by [[vacuum]]: the caller's
-    * `keep` floored by `spark.graft.vacuum.minVersionsToRetain` — an
-    * operational conf set once per deployment so a too-aggressive
-    * ad-hoc vacuum cannot drop versions the fleet's streaming
-    * checkpoints are known to lag behind. */
-  private def effectiveKeep(spark: SparkSession, keep: Int): Int =
-    math.max(keep, spark.conf
-      .getOption("spark.graft.vacuum.minVersionsToRetain")
-      .map(_.toInt).getOrElse(1))
-
   /** DRY RUN of [[vacuum]]: the versions a `vacuum(keep)` would drop
-    * right now (respecting `minVersionsToRetain`), deleting nothing.
-    * The scheduler's pre-flight: compare against the lowest version
-    * any streaming checkpoint still needs (its next offset) and skip
-    * or re-retain BEFORE data becomes unreachable — after the fact, a
-    * lagging stream's restart can only fail loudly. */
+    * right now, deleting nothing. The scheduler's pre-flight: compare
+    * against the lowest version any streaming checkpoint still needs
+    * (its next offset) and skip or re-retain BEFORE data becomes
+    * unreachable — after the fact, a lagging stream's restart can
+    * only fail loudly. */
   def vacuumPlan(spark: SparkSession, path: String,
       keep: Int = 2): Seq[Int] = {
     require(keep >= 1, "vacuum must keep at least the latest version")
-    versions(spark, path).dropRight(effectiveKeep(spark, keep))
+    versions(spark, path).dropRight(keep)
   }
 
   /** Drop all but the newest `keep` versions and delete every data
@@ -5092,23 +5083,29 @@ object SnapshotTable {
     * range a LAGGING checkpoint still needs makes its next restart
     * fail loudly (the manifests are gone; data is never silently
     * skipped — Delta documents the same retention-vs-lag contract).
-    * Operational guards: `spark.graft.vacuum.minVersionsToRetain`
-    * floors the effective `keep` fleet-wide (an ops-set conf a
-    * too-aggressive caller cannot undercut), and [[vacuumPlan]] is
-    * the dry run — it returns exactly the versions a vacuum would
-    * drop, so a scheduler can check them against its consumers' lag
-    * BEFORE deleting anything. */
+    * Operational guard: [[vacuumPlan]] is the dry run — it returns
+    * exactly the versions a vacuum would drop, so a scheduler can
+    * check them against its consumers' lag BEFORE deleting anything. */
   def vacuum(spark: SparkSession, path: String, keep: Int = 2,
-      graceMs: Long = 10 * 60 * 1000L): Int = {
+      graceMs: Long = 10 * 60 * 1000L): Int =
+    vacuum(spark, path, keep, graceMs, ParallelDeleteMinFiles)
+
+  /** Reclaims of at least this many data files delete in executor
+    * tasks; smaller ones delete from the driver. */
+  private val ParallelDeleteMinFiles = 512
+
+  /** [[vacuum]] with the distributed-delete threshold given (specs
+    * pass a small one to drive that path on small tables). */
+  private[graft] def vacuum(spark: SparkSession, path: String, keep: Int,
+      graceMs: Long, parallelDeleteMinFiles: Int): Int = {
     require(keep >= 1, "vacuum must keep at least the latest version")
     val fs = fsOf(spark, new Path(path))
     val vs = versions(spark, path)
-    val keepN = effectiveKeep(spark, keep)
     // data files referenced by KEPT versions survive, and so do the
     // segment files their manifest lists reference; the rest (orphans
     // of lost commit races, segments of dropped versions) reclaim
     // under the grace window
-    val (keptFiles, keptSegs) = vs.takeRight(keepN).map { v =>
+    val (keptFiles, keptSegs) = vs.takeRight(keep).map { v =>
       val s = new Snapshot(fs, path, v)
       (s.entries.flatMap(e =>
           entryPath(e) +: entryDvs(e).map(DvSidecar.relOf)),
@@ -5124,7 +5121,7 @@ object SnapshotTable {
     // retry-idempotent end to end.
     def deleteOrGone(p: Path): Boolean =
       fs.delete(p, false) || !fs.exists(p)
-    vs.dropRight(keepN).foreach { v =>
+    vs.dropRight(keep).foreach { v =>
       val m = new Path(logDir(path), manifestName(v))
       if (!deleteOrGone(m)) sys.error(s"vacuum: could not delete $m")
     }
@@ -5155,10 +5152,7 @@ object SnapshotTable {
     // executors instead of a driver-serial RPC loop; small reclaims
     // skip the job overhead. Every failure still fails the vacuum —
     // a lingering file is an error, not a shrug.
-    val minParallel = spark.conf
-      .getOption("spark.graft.vacuum.parallelDeleteMinFiles")
-      .map(_.toInt).getOrElse(512)
-    if (dropped.size < minParallel)
+    if (dropped.size < parallelDeleteMinFiles)
       dropped.foreach { f =>
         if (!deleteOrGone(f.getPath))
           sys.error(s"vacuum: could not delete ${f.getPath}")

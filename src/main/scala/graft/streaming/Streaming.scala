@@ -389,7 +389,8 @@ object Streaming {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        GraftStreamSink.applyChangeBatch(batch, tablePath, keyCols, id)
+        GraftStreamSink.applyKeyedBatch(batch, tablePath, keyCols, id,
+          cdcOverride = Some(true))
       }
       .start()
     q.processAllAvailable()

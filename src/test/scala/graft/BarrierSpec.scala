@@ -90,15 +90,15 @@ class BarrierSpec extends SparkSpec {
           r.getInt(3))).toSet
     val expected = (0 to 13).map(i =>
       (i.toLong, i.toLong, "insert", i)).toSet
-    try {
-      spark.conf.set("spark.graft.changeFeed.maxPlanVersions", "4")
-      assert(rows(SnapshotTable.changeFeed(spark, path, 0)) === expected)
-      withCheckpointDir { dir =>
-        assert(rows(SnapshotTable.changeFeed(spark, path, 0)) === expected)
-        assert(rddDirs(dir).nonEmpty,
-          "durable chunks must land as checkpoint files under the dir")
-      }
-    } finally spark.conf.unset("spark.graft.changeFeed.maxPlanVersions")
+    // 14 versions in chunks of 4
+    def feed() = SnapshotTable.changeFeed(spark, path, 0, None,
+      updateImages = false, chunkSize = 4)
+    assert(rows(feed()) === expected)
+    withCheckpointDir { dir =>
+      assert(rows(feed()) === expected)
+      assert(rddDirs(dir).nonEmpty,
+        "durable chunks must land as checkpoint files under the dir")
+    }
   }
 
   test("the checkpoint dir decides: a localCheckpoint leaf and no " +

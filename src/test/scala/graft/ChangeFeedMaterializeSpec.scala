@@ -14,7 +14,10 @@ import graft.sources.SnapshotTable
 class ChangeFeedMaterializeSpec extends SparkSpec {
   import spark.implicits._
 
-  private val ChunkKey = "spark.graft.changeFeed.maxPlanVersions"
+  /** The whole feed, planned in chunks of 6 versions. */
+  private def chunkedFeed(path: String): DataFrame =
+    SnapshotTable.changeFeed(spark, path, 0, None, updateImages = false,
+      chunkSize = 6)
 
   private def rows(df: DataFrame): Set[(Long, Long, String, Int)] =
     df.select(col("id"), col("v"), col("change_type"),
@@ -42,35 +45,32 @@ class ChangeFeedMaterializeSpec extends SparkSpec {
         path))
     val expected = (0 to n).map(i =>
       (i.toLong, i.toLong, "insert", i)).toSet
+    // arm 1: localCheckpoint chunks — correct while blocks live,
+    // but DEAD after the blocks vanish (the simulated executor loss)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val local = chunkedFeed(path)
+    assert(rows(local) === expected)
+    assert(dropCachedSince(before) > 0,
+      "chunked CDF must have pinned chunks to cached RDDs")
+    intercept[Exception] { rows(local) }
+    // arm 2: under a checkpoint dir — identical rows, chunks as
+    // reliable checkpoint files, and the same block-loss storm is a
+    // non-event
+    val ckpt = s"$base/ckpt"
+    spark.sparkContext.setCheckpointDir(ckpt)
     try {
-      spark.conf.set(ChunkKey, "6")
-      // arm 1: localCheckpoint chunks — correct while blocks live,
-      // but DEAD after the blocks vanish (the simulated executor loss)
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val local = SnapshotTable.changeFeed(spark, path, 0)
-      assert(rows(local) === expected)
-      assert(dropCachedSince(before) > 0,
-        "chunked CDF must have pinned chunks to cached RDDs")
-      intercept[Exception] { rows(local) }
-      // arm 2: under a checkpoint dir — identical rows, chunks as
-      // reliable checkpoint files, and the same block-loss storm is a
-      // non-event
-      val ckpt = s"$base/ckpt"
-      spark.sparkContext.setCheckpointDir(ckpt)
-      try {
-        val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val durable = SnapshotTable.changeFeed(spark, path, 0)
-        assert(rows(durable) === expected)
-        val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        try assert(files.anyMatch(p =>
-            p.getFileName.toString.startsWith("rdd-")),
-          "chunks must land as checkpoint files under the dir")
-        finally files.close()
-        dropCachedSince(before2)
-        assert(rows(durable) === expected,
-          "the checkpointed frame must re-read after losing cached blocks")
-      } finally org.apache.spark.GraftTestCoreAccess
-        .clearCheckpointDir(spark.sparkContext)
-    } finally spark.conf.unset(ChunkKey)
+      val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val durable = chunkedFeed(path)
+      assert(rows(durable) === expected)
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try assert(files.anyMatch(p =>
+          p.getFileName.toString.startsWith("rdd-")),
+        "chunks must land as checkpoint files under the dir")
+      finally files.close()
+      dropCachedSince(before2)
+      assert(rows(durable) === expected,
+        "the checkpointed frame must re-read after losing cached blocks")
+    } finally org.apache.spark.GraftTestCoreAccess
+      .clearCheckpointDir(spark.sparkContext)
   }
 }

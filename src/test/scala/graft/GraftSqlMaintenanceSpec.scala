@@ -12,7 +12,7 @@ import graft.sources.SnapshotTable
   *  - plain OPTIMIZE is the incremental bin-pack (no-op on a
   *    compacted table — null version, NOTHING committed);
   *  - VACUUM DRY RUN deletes nothing; real VACUUM honors the
-  *    RETAIN n VERSIONS count and the graceMs conf;
+  *    RETAIN n VERSIONS count and vacuum's 10-minute grace window;
   *  - RESTORE refreshes the catalog cache so the next SELECT sees
   *    the restored head;
   *  - non-graft targets refuse loudly naming the provider; malformed
@@ -76,15 +76,18 @@ class GraftSqlMaintenanceSpec extends SparkSpec {
       assert(dry === Seq(0, 1, 2))
       assert(SnapshotTable.versions(spark, path) === Seq(0, 1, 2, 3, 4))
 
-      // real VACUUM under a zero grace window (no writer in flight
-      // here) reclaims the pre-compaction files
-      spark.conf.set("spark.graft.vacuum.graceMs", "0")
-      try {
-        val vac = spark.sql(s"VACUUM $tbl RETAIN 2 VERSIONS").collect()
-        assert(SnapshotTable.versions(spark, path) === Seq(3, 4))
-        assert(vac.head.getInt(1) >= 3,
-          "the three small pre-OPTIMIZE files must reclaim")
-      } finally spark.conf.unset("spark.graft.vacuum.graceMs")
+      // real VACUUM keeps unreferenced files younger than its
+      // 10-minute grace window: age every data file past it, and the
+      // pre-compaction files reclaim
+      val files = new org.apache.hadoop.fs.Path(path, "files")
+      val fs = files.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val aged = System.currentTimeMillis - 11L * 60 * 1000
+      val it = fs.listFiles(files, true)
+      while (it.hasNext) fs.setTimes(it.next().getPath, aged, -1)
+      val vac = spark.sql(s"VACUUM $tbl RETAIN 2 VERSIONS").collect()
+      assert(SnapshotTable.versions(spark, path) === Seq(3, 4))
+      assert(vac.head.getInt(1) >= 3,
+        "the three small pre-OPTIMIZE files must reclaim")
       assert(spark.table(tbl).agg(sum(col("v"))).head.getDouble(0)
         === 60.0)
 

@@ -231,6 +231,13 @@ class SketchesSpec extends SparkSpec {
     assert(bad.isEmpty,
       s"${bad.size} mismatched ids; first 10: " + bad.take(10).map(id =>
         s"id=$id got=${got(id)} want=${want(id)}").mkString(", "))
+    // unit weights over evenly split ranges: the partition totals are
+    // equal, and each still counts once in the later offsets
+    val even = Aggregates.globalCumSum((1L to 400L).map(i => (i, 1L))
+        .toDF("id", "v"), Seq(col("id").asc), col("v"), "cum",
+        numPartitions = Some(8))
+      .select("id", "cum").collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(even.toMap === (1L to 400L).map(i => i -> i).toMap)
   }
 
   test("funnel: ordered N-step stages, out-of-order events excluded") {

@@ -190,15 +190,11 @@ class SnapshotTableSpec extends SparkSpec {
       spark.range(400).toDF("id").repartition(8), path)
     SnapshotTable.overwrite(spark.range(10).toDF("id"), path)
     // force the distributed path on this small reclaim
-    spark.conf.set("spark.graft.vacuum.parallelDeleteMinFiles", "2")
-    try {
-      assert(SnapshotTable.vacuum(spark, path, keep = 1,
-        graceMs = 0L) === 8)
-      assert(SnapshotTable.read(spark, path)
-        .as[Long].collect().sorted === (0L until 10L).toArray)
-      assert(SnapshotTable.versions(spark, path) === Seq(1))
-    } finally
-      spark.conf.unset("spark.graft.vacuum.parallelDeleteMinFiles")
+    assert(SnapshotTable.vacuum(spark, path, keep = 1, graceMs = 0L,
+      parallelDeleteMinFiles = 2) === 8)
+    assert(SnapshotTable.read(spark, path)
+      .as[Long].collect().sorted === (0L until 10L).toArray)
+    assert(SnapshotTable.versions(spark, path) === Seq(1))
   }
 
   test("concurrent appends on a SEGMENTED table: loser retries, segments stay sound") {
@@ -1926,11 +1922,8 @@ class SnapshotTableSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(path2, "files"))
       .filterNot(f => kept2.contains(f.getPath.getName))
     fs.delete(doomed2.head.getPath, false)
-    spark.conf.set("spark.graft.vacuum.parallelDeleteMinFiles", "1")
-    try
-      assert(SnapshotTable.vacuum(spark, path2, keep = 1, graceMs = 0) >= 3)
-    finally
-      spark.conf.unset("spark.graft.vacuum.parallelDeleteMinFiles")
+    assert(SnapshotTable.vacuum(spark, path2, keep = 1, graceMs = 0,
+      parallelDeleteMinFiles = 1) >= 3)
     assert(SnapshotTable.read(spark, path2).count() === 10)
   }
 
@@ -2304,19 +2297,15 @@ class SnapshotTableSpec extends SparkSpec {
     // Nothing is deleted by the plan itself.
     assert(SnapshotTable.vacuumPlan(spark, src, keep = 1) === Seq(0, 1, 2))
     assert(SnapshotTable.versions(spark, src) === Seq(0, 1, 2, 3))
-    // the retention floor: ops pin minVersionsToRetain=3, so the same
-    // aggressive vacuum keeps v1..v3 and the stream resumes exactly
-    spark.conf.set("spark.graft.vacuum.minVersionsToRetain", "3")
-    try {
-      assert(SnapshotTable.vacuumPlan(spark, src, keep = 1) === Seq(0))
-      SnapshotTable.vacuum(spark, src, keep = 1, graceMs = 0)
-      assert(SnapshotTable.versions(spark, src) === Seq(1, 2, 3))
-      run()
-      assert(SnapshotTable.read(spark, out).as[Long].collect().sorted
-        === (0L until 40L).toArray,
-        "the floored vacuum must leave the lagging stream's range")
-    } finally
-      spark.conf.unset("spark.graft.vacuum.minVersionsToRetain")
+    // a vacuum that retains the lagging range (keep = 3: v1..v3)
+    // drops only v0, and the stream resumes exactly
+    assert(SnapshotTable.vacuumPlan(spark, src, keep = 3) === Seq(0))
+    SnapshotTable.vacuum(spark, src, keep = 3, graceMs = 0)
+    assert(SnapshotTable.versions(spark, src) === Seq(1, 2, 3))
+    run()
+    assert(SnapshotTable.read(spark, out).as[Long].collect().sorted
+      === (0L until 40L).toArray,
+      "the retaining vacuum must leave the lagging stream's range")
     // regress the lag and force the unsafe vacuum: the restart must
     // fail LOUDLY, never silently skip the vacuumed range
     SnapshotTable.append((40L until 50L).toDF("id"), src)
@@ -2906,26 +2895,23 @@ class SnapshotTableSpec extends SparkSpec {
     def causes(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
     var written: Seq[String] = Nil
-    // short refusal budget: each marker-less arm spins it out once
-    spark.conf.set("spark.graft.manifest.tornAwaitMs", "400")
-    try {
-      // 1. the pre-marker legacy shape — no witness, no end marker —
-      // refused however long it has been at rest
-      rewriteManifest(path, 1) { ls => written = ls; ls.filterNot(markers) }
-      fs.setTimes(m1, System.currentTimeMillis - 600000L, -1)
-      val legacy = intercept[RuntimeException] {
-        SnapshotTable.read(spark, path).count()
-      }
-      assert(legacy.getMessage.contains("no end-of-transaction marker") &&
-        legacy.getMessage.contains("marker-less legacy format"),
-        legacy.getMessage)
-      // 2. a torn current manifest: witness present, end marker missing
-      rewriteManifest(path, 1)(ls => "#wv=2" +: ls.filterNot(markers))
-      val torn = intercept[RuntimeException] {
-        SnapshotTable.read(spark, path).count()
-      }
-      assert(torn.getMessage.contains("torn"), torn.getMessage)
-    } finally spark.conf.unset("spark.graft.manifest.tornAwaitMs")
+    // each marker-less arm spins out the full torn budget once
+    // 1. the pre-marker legacy shape — no witness, no end marker —
+    // refused however long it has been at rest
+    rewriteManifest(path, 1) { ls => written = ls; ls.filterNot(markers) }
+    fs.setTimes(m1, System.currentTimeMillis - 600000L, -1)
+    val legacy = intercept[RuntimeException] {
+      SnapshotTable.read(spark, path).count()
+    }
+    assert(legacy.getMessage.contains("no end-of-transaction marker") &&
+      legacy.getMessage.contains("marker-less legacy format"),
+      legacy.getMessage)
+    // 2. a torn current manifest: witness present, end marker missing
+    rewriteManifest(path, 1)(ls => "#wv=2" +: ls.filterNot(markers))
+    val torn = intercept[RuntimeException] {
+      SnapshotTable.read(spark, path).count()
+    }
+    assert(torn.getMessage.contains("torn"), torn.getMessage)
     // 3. a v1 whole-parquet deletion vector in an otherwise complete
     // manifest: every reader refuses it, naming the ref and version
     val v1Ref = "files/x.parquet"
@@ -3000,39 +2986,39 @@ class SnapshotTableSpec extends SparkSpec {
   test("a just-created, still-empty manifest is awaited, not " +
       "accepted as a truncated legacy read") {
     import spark.implicits._
-    val path = freshPath("inflight")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingFs].getName)
+    conf.set("fs.countfs.impl.disable.cache", "true")
+    val path = "countfs://" + freshPath("inflight")
     SnapshotTable.create((0L until 10L).toDF("id"), path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val logDir = new org.apache.hadoop.fs.Path(path, "_graft_log")
+    val fs = logDir.getFileSystem(conf)
     val v0 = new org.apache.hadoop.fs.Path(logDir, "v00000000.manifest")
     val in = fs.open(v0)
     val content = try scala.io.Source.fromInputStream(in, "UTF-8")
       .mkString finally in.close()
     // simulate an in-flight winner: v1's NAME exists (create-exclusive
-    // won) but its bytes land 500 ms later — a reader arriving in the
-    // window must WAIT for the content, not accept the empty file as
-    // a pre-witness legacy manifest (the r12 era-gate briefly did,
-    // handing concurrent committers a truncated file list)
+    // won) but its bytes land only once the reader has opened it twice
+    // — it read the empty file and is spinning. The reader must WAIT
+    // for the content, not accept the empty file as a pre-witness
+    // legacy manifest (the r12 era-gate briefly did, handing
+    // concurrent committers a truncated file list)
     val v1 = new org.apache.hadoop.fs.Path(logDir, "v00000001.manifest")
     val out = fs.create(v1, false)
+    @volatile var readerSpun = false
+    CountingFs.opens.set(0)
     val filler = new Thread(() => {
-      Thread.sleep(500)
-      out.write(content.getBytes("UTF-8"))
-      out.close()
+      val deadline = System.currentTimeMillis + 60000L
+      while (CountingFs.opens.get < 2 &&
+          System.currentTimeMillis < deadline) Thread.sleep(5)
+      readerSpun = CountingFs.opens.get >= 2
+      try if (readerSpun) out.write(content.getBytes("UTF-8"))
+      finally out.close()
     })
-    // a GENEROUS injected wait budget: under full-suite 32-thread
-    // load the filler thread's 500 ms sleep can fire late, and the
-    // default 3 s torn budget racing it is exactly the flake shape
-    // the r13 notes flagged — the reader must out-wait scheduler
-    // noise, not race it
-    spark.conf.set("spark.graft.manifest.tornAwaitMs", "30000")
     filler.start()
     try assert(SnapshotTable.read(spark, path).count() === 10)
-    finally {
-      filler.join()
-      spark.conf.unset("spark.graft.manifest.tornAwaitMs")
-    }
+    finally filler.join()
+    assert(readerSpun, "the reader never re-opened the empty manifest")
   }
 
   test("versionAsOf and history use in-manifest commit timestamps, " +
@@ -3252,12 +3238,8 @@ class SnapshotTableSpec extends SparkSpec {
       def parity(p: String, pr: org.apache.spark.sql.Column): (Int, Int) = {
         val (d1, k1, t1) = SnapshotTable.readWherePruned(spark, p, pr)
         val r1 = d1.collect().map(_.toString).sorted.toSeq
-        spark.conf.set(
-          "spark.graft.manifest.distributedPlanning.minFiles", "1")
-        val (d2, k2, t2) =
-          try SnapshotTable.readWherePruned(spark, p, pr)
-          finally spark.conf.unset(
-            "spark.graft.manifest.distributedPlanning.minFiles")
+        val (d2, k2, t2) = SnapshotTable.readWherePruned(spark, p, pr,
+          distributedMinFiles = 1)
         assert((k2, t2) === ((k1, t1)),
           s"distributed planning diverged on $pr at $p: " +
             s"kept $k2/$t2 vs $k1/$t1")
@@ -3348,12 +3330,8 @@ class SnapshotTableSpec extends SparkSpec {
     val driver = intercept[Exception](SnapshotTable.read(spark, path).count())
     assert(refusal(driver).exists(_.getMessage.contains(pqName)),
       s"driver planning did not refuse $pqName: $driver")
-    spark.conf.set("spark.graft.manifest.distributedPlanning.minFiles", "1")
-    val tasks =
-      try intercept[Exception](SnapshotTable.readWherePruned(spark, path,
-        col("id") >= 0L)._1.count())
-      finally spark.conf.unset(
-        "spark.graft.manifest.distributedPlanning.minFiles")
+    val tasks = intercept[Exception](SnapshotTable.readWherePruned(spark,
+      path, col("id") >= 0L, distributedMinFiles = 1)._1.count())
     assert(tasks.getMessage.contains(pqName) &&
       tasks.getMessage.contains("no longer readable"),
       s"distributed planning did not refuse $pqName: $tasks")
@@ -4680,6 +4658,36 @@ class SnapshotTableSpec extends SparkSpec {
       src.getBatch(Some(offsets(1)), offsets(2)))
     assert(opens === 2, s"$opens manifest opens for 2 sliced versions")
     assert(SnapshotTable.read(spark, path).count() === 120)
+  }
+
+  test("a keyed stream micro-batch costs the log reads of one plain " +
+      "merge, in both the upsert and the CDC arm") {
+    import graft.sources.GraftStreamSink
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingFs].getName)
+    conf.set("fs.countfs.impl.disable.cache", "true")
+    val path = "countfs://" + freshPath("keyedcount")
+    SnapshotTable.create((0L until 20L).map(i => (i, i * 10))
+      .toDF("id", "v"), path)
+    val merge = CountingFs.count(SnapshotTable.merge(
+      Seq((1L, -10L)).toDF("id", "v"), path, Seq("id")))
+    val upsert = CountingFs.count(GraftStreamSink.applyKeyedBatch(
+      Seq((2L, -20L)).toDF("id", "v"), path, Seq("id"), batchId = 0L))
+    val cdc = Seq((3L, -30L, "insert", 7), (4L, 40L, "delete", 7))
+      .toDF("id", "v", "change_type", "_commit_version")
+    val change = CountingFs.count(GraftStreamSink.applyKeyedBatch(
+      cdc, path, Seq("id"), batchId = 1L))
+    assert(upsert === merge,
+      s"upsert batch (opens, listings) $upsert vs plain merge $merge")
+    assert(change === merge,
+      s"CDC batch (opens, listings) $change vs plain merge $merge")
+    // the shared head read still guards exactly-once: a replay of
+    // batch 1 commits nothing
+    GraftStreamSink.applyKeyedBatch(cdc, path, Seq("id"), batchId = 1L)
+    assert(SnapshotTable.versions(spark, path).max === 3)
+    assert(SnapshotTable.read(spark, path).as[(Long, Long)].collect()
+      .toMap === (0L until 20L).map(i => i -> i * 10).toMap - 4L ++
+        Map(1L -> -10L, 2L -> -20L, 3L -> -30L))
   }
 
   test("every row-level verb rebases over a disjoint racing append and " +

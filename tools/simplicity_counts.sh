@@ -8,6 +8,10 @@
 # (comment lines excluded). Also counts the rows of README.md's
 # "Options" table and exits non-zero with a MISMATCH line when that
 # differs from the option count, so the table cannot drift from the code.
+# Also counts the stale spark.graft.* keys — those src/test or
+# perfbench/src name but src/main never reads — and exits non-zero with
+# a STALE line naming each: a spec that still sets a retired key would
+# silently test the default.
 #
 # Usage: tools/simplicity_counts.sh [repo-dir]   (default: this repo)
 set -euo pipefail
@@ -18,7 +22,13 @@ snapshot=$(wc -l < src/main/scala/graft/sources/SnapshotTable.scala)
 manifest_reads=$(grep -n 'manifestLines(' \
   src/main/scala/graft/sources/SnapshotTable.scala |
   grep -cvE '^[0-9]+:[[:space:]]*(\*|//)|def manifestLines\(' || true)
-options=$(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/main | sort -u | wc -l)
+option_keys=$(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/main | sort -u)
+options=$(printf '%s' "$option_keys" | grep -c . || true)
+stale_keys=$(comm -23 \
+  <(grep -rhoE '"spark\.graft\.[a-zA-Z0-9_.]+' src/test perfbench/src |
+    sort -u || true) \
+  <(printf '%s\n' "$option_keys"))
+stale=$(printf '%s' "$stale_keys" | grep -c . || true)
 envs=$(grep -rhoE 'SPARK_GRAFT_[A-Z0-9_]+' src/main | sort -u | wc -l)
 builders=$(grep -rn 'SparkSession.builder()' src/main |
   grep -cvE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)' || true)
@@ -33,7 +43,14 @@ echo "spark.graft.* options:       $options"
 echo "SPARK_GRAFT_* names:         $envs"
 echo "SparkSession.builder() calls: $builders"
 echo "README Options table rows:   $readme_rows"
+echo "stale spark.graft.* keys:    $stale"
+status=0
 if [ "$readme_rows" -ne "$options" ]; then
   echo "MISMATCH: README Options lists $readme_rows options, src/main reads $options"
-  exit 1
+  status=1
 fi
+for key in $stale_keys; do
+  echo "STALE: ${key#\"} is set outside src/main, which never reads it"
+  status=1
+done
+exit $status
